@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   *
@@ -14,17 +16,65 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Fact-sized tables whose per-row compute deserves full parallelism.
-    * Everything else (including customer/orders, which mostly play the
-    * broadcast-dim role here) stays un-spread — repartitioning a table
-    * that is about to be broadcast just inserts a wasted shuffle.
+  /** Fact-sized tables whose per-row compute deserves full parallelism
+    * ([[spread]]). Everything else (including customer/orders, which
+    * mostly play the broadcast-dim role here) stays un-spread —
+    * repartitioning a table that is about to be broadcast just inserts
+    * a wasted shuffle.
+    *
+    * `events` does not spread either. The spread's own map stage is a
+    * single task (the one-file table cannot be split), so spreading
+    * only parallelises the work between the scan and the next
+    * exchange. For events that work is light (LogView's column
+    * derivations, pond's filter, partial aggregates), and every log
+    * verb exchanges right away, so the extra round-robin stage cost
+    * more than it bought: dropping it took pond's verbs over 20k
+    * events from 5.0 to 2.9 jobs, 2.4 to 1.3 exchanges and a median
+    * 752 to 622 ms per query at 4 cores (perfbench `log_query`,
+    * BASELINE.md). The trade turns with rows per split: at sf0.1
+    * (100k rows) aggregating verbs still gain, but verbs that run
+    * heavy per-row work or a filter in front of a global sort lose
+    * (filter_*, geoip6; BASELINE.md). The corpus tables' tokenising
+    * and hashing is heavy enough to keep the spread.
     */
   private val factTables: Set[String] =
-    Set("events", "lineitem", "documents", "embeddings")
+    Set("lineitem", "documents", "embeddings")
+
+  /** What a table's files say that every reference would otherwise
+    * re-derive: the inferred schema (`spark.read.parquet` runs a
+    * footer-reading job for it) and the [[spread]] decision (a full
+    * physical-planning pass, `df.rdd`). Both only change when the
+    * files or the core count do.
+    */
+  private final case class Layout(schema: StructType, spread: Boolean)
+
+  /** One memo per (session, table path, modification time of the
+    * path): a table rewritten in place — Spark's overwrite replaces
+    * the directory — gets a fresh layout instead of a stale schema.
+    */
+  private val layouts =
+    scala.collection.concurrent.TrieMap.empty[(String, String, Long), Layout]
+
+  private def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
+
+  private def status(spark: SparkSession, p: String): FileStatus = {
+    val hp = new Path(p)
+    hp.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(hp)
+  }
+
+  private def layout(spark: SparkSession, p: String, st: FileStatus,
+                     name: String): Layout =
+    Memo.once(layouts,
+      (spark.sparkContext.applicationId, p, st.getModificationTime), {
+        val df = spark.read.parquet(p)
+        Layout(df.schema, factTables(name) && underSplit(spark, df))
+      })
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = normalize(spark.read.parquet(s"$sfDir/$name.parquet"))
-    if (factTables(name)) spread(spark, df, Some(s"$sfDir/$name")) else df
+    val p = path(sfDir, name)
+    val l = layout(spark, p, status(spark, p), name)
+    val df = normalize(spark.read.schema(l.schema).parquet(p))
+    if (l.spread) df.repartition(spark.sparkContext.defaultParallelism) else df
   }
 
   /** Engine-internal column contract for `events.ts`: BIGINT
@@ -58,13 +108,12 @@ object Tables {
     // schema must be the RAW file schema (the ts shim is a projection,
     // not a storage layout) — normalize() is applied to the stream
     // DataFrame afterwards, same as the batch path.
-    val schema = spark.read.parquet(s"$sfDir/$name.parquet").schema
-    val path = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val reader = spark.readStream.schema(schema)
+    val p = path(sfDir, name)
+    val st = status(spark, p)
+    val reader = spark.readStream.schema(layout(spark, p, st, name).schema)
     normalize(
-      if (fs.getFileStatus(path).isDirectory)
-        reader.parquet(path.toString)
+      if (st.isDirectory)
+        reader.parquet(p)
       else
         reader.option("pathGlobFilter", s"$name.parquet").parquet(sfDir))
   }
@@ -76,32 +125,14 @@ object Tables {
     * table is thousands of files, the guard is false, and this is a
     * no-op — no extra shuffle at scale. (`repartition(n)` with an
     * explicit count is exempt from AQE coalescing, so the parallelism
-    * actually sticks.)
+    * actually sticks.) [[load]] applies it to [[factTables]] only.
     */
   def spread(spark: SparkSession, df: DataFrame): DataFrame =
-    spread(spark, df, cacheKey = None)
+    if (underSplit(spark, df)) df.repartition(spark.sparkContext.defaultParallelism)
+    else df
 
-  /** The under-parallel check costs a full physical-planning pass
-    * (`df.rdd`), and [[load]] runs it on EVERY fact-table reference of
-    * every query invocation — pure repeated driver work for an answer
-    * that only changes when the table or core count does. Memoized
-    * per (session, table path).
-    */
-  private val spreadNeeded =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Boolean]
-
-  private def spread(spark: SparkSession, df: DataFrame,
-                     cacheKey: Option[String]): DataFrame = {
-    val target = spark.sparkContext.defaultParallelism
-    def check = df.rdd.getNumPartitions < target
-    val need = cacheKey match {
-      case Some(k) =>
-        Memo.once(spreadNeeded,
-          (spark.sparkContext.applicationId, k), check)
-      case None => check
-    }
-    if (need) df.repartition(target) else df
-  }
+  private def underSplit(spark: SparkSession, df: DataFrame): Boolean =
+    df.rdd.getNumPartitions < spark.sparkContext.defaultParallelism
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

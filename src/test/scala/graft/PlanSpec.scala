@@ -155,6 +155,21 @@ class PlanSpec extends SparkSpec {
     assert(!spreadPlan.contains("Repartition"), spreadPlan)
   }
 
+  test("log verbs over single-file events plan no round-robin spread " +
+       "below their own exchange") {
+    // the measured decision (Tables.factTables): events feeds light
+    // per-row work into an immediate exchange, so a spread stage only
+    // adds a job
+    val p = plan(Shaping.accumulateTop(LogView(spark, sf), "remote_host", 10))
+    assert(p.contains("Exchange hashpartitioning"), p)
+    assert(!p.contains("RoundRobinPartitioning"), p)
+  }
+
+  test("corpus tables over single-file testdata still plan the spread") {
+    val p = plan(Tables.documents(spark, sf))
+    assert(p.contains("RoundRobinPartitioning"), p)
+  }
+
   test("no registered query ever plans a CartesianProduct") {
     // sweeping guard: a cartesian in any operator is a 100 TB
     // catastrophe; broadcast nested loops are allowed only where
