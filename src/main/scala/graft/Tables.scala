@@ -26,27 +26,25 @@ object Tables {
     * single task (the one-file table cannot be split), so spreading
     * only parallelises the work between the scan and the next
     * exchange. For events that work is light (LogView's column
-    * derivations, pond's filter, partial aggregates), and every log
-    * verb exchanges right away, so the extra round-robin stage cost
-    * more than it bought: dropping it took pond's verbs over 20k
-    * events from 5.0 to 2.9 jobs, 2.4 to 1.3 exchanges and a median
-    * 752 to 622 ms per query at 4 cores (perfbench `log_query`,
-    * BASELINE.md). The trade turns with rows per split: at sf0.1
-    * (100k rows) aggregating verbs still gain, but verbs that run
-    * heavy per-row work or a filter in front of a global sort lose
-    * (filter_*, geoip6; BASELINE.md). The corpus tables' tokenising
-    * and hashing is heavy enough to keep the spread.
+    * derivations, pond's filter, partial aggregates), so the extra
+    * round-robin stage cost more than it bought: dropping it took
+    * pond's verbs over 20k events from 5.0 to 2.9 jobs and 2.4 to 1.3
+    * exchanges per query at 4 cores (perfbench `log_query`,
+    * BASELINE.md). [[load]]'s single-partition rule then removes the
+    * exchanges that were left. The corpus tables' tokenising and
+    * hashing is heavy enough to keep the spread.
     */
   private val factTables: Set[String] =
     Set("lineitem", "documents", "embeddings")
 
   /** What a table's files say that every reference would otherwise
     * re-derive: the inferred schema (`spark.read.parquet` runs a
-    * footer-reading job for it) and the [[spread]] decision (a full
-    * physical-planning pass, `df.rdd`). Both only change when the
-    * files or the core count do.
+    * footer-reading job for it) and the number of input splits the
+    * scan yields (a full physical-planning pass, `df.rdd`), from which
+    * [[load]] derives its plan. Both only change when the files or
+    * the core count do.
     */
-  private final case class Layout(schema: StructType, spread: Boolean)
+  private final case class Layout(schema: StructType, splits: Int)
 
   /** One memo per (session, table path, modification time of the
     * path): a table rewritten in place — Spark's overwrite replaces
@@ -62,19 +60,33 @@ object Tables {
     hp.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(hp)
   }
 
-  private def layout(spark: SparkSession, p: String, st: FileStatus,
-                     name: String): Layout =
+  private def layout(spark: SparkSession, p: String, st: FileStatus): Layout =
     Memo.once(layouts,
       (spark.sparkContext.applicationId, p, st.getModificationTime), {
         val df = spark.read.parquet(p)
-        Layout(df.schema, factTables(name) && underSplit(spark, df))
+        Layout(df.schema, df.rdd.getNumPartitions)
       })
 
+  /** A table as a DataFrame, planned for what its scan is:
+    *  - a [[factTables]] table with fewer splits than cores is
+    *    [[spread]] to the core count;
+    *  - any other table read as exactly one split is `coalesce(1)`.
+    *    Over one parent partition that moves no data, but it reports
+    *    `SinglePartition`, which satisfies every distribution an
+    *    aggregate, window, sort or top-k asks for. Those then plan
+    *    with no exchange, no range-sampling job and no second scan
+    *    (BASELINE.md, "Single-partition scans").
+    *
+    * A multi-file table has more than one split and keeps its plan.
+    */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val p = path(sfDir, name)
-    val l = layout(spark, p, status(spark, p), name)
+    val l = layout(spark, p, status(spark, p))
     val df = normalize(spark.read.schema(l.schema).parquet(p))
-    if (l.spread) df.repartition(spark.sparkContext.defaultParallelism) else df
+    val cores = spark.sparkContext.defaultParallelism
+    if (factTables(name) && l.splits < cores) df.repartition(cores)
+    else if (l.splits == 1) df.coalesce(1)
+    else df
   }
 
   /** Engine-internal column contract for `events.ts`: BIGINT
@@ -110,7 +122,7 @@ object Tables {
     // DataFrame afterwards, same as the batch path.
     val p = path(sfDir, name)
     val st = status(spark, p)
-    val reader = spark.readStream.schema(layout(spark, p, st, name).schema)
+    val reader = spark.readStream.schema(layout(spark, p, st).schema)
     normalize(
       if (st.isDirectory)
         reader.parquet(p)
@@ -127,12 +139,10 @@ object Tables {
     * explicit count is exempt from AQE coalescing, so the parallelism
     * actually sticks.) [[load]] applies it to [[factTables]] only.
     */
-  def spread(spark: SparkSession, df: DataFrame): DataFrame =
-    if (underSplit(spark, df)) df.repartition(spark.sparkContext.defaultParallelism)
-    else df
-
-  private def underSplit(spark: SparkSession, df: DataFrame): Boolean =
-    df.rdd.getNumPartitions < spark.sparkContext.defaultParallelism
+  def spread(spark: SparkSession, df: DataFrame): DataFrame = {
+    val cores = spark.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions < cores) df.repartition(cores) else df
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -146,23 +146,29 @@ class PlanSpec extends SparkSpec {
   test("spread is a no-op once the table has enough input splits") {
     // the production claim: multi-file tables already parallelise, so
     // no repartition shuffle is inserted
-    val dir = java.nio.file.Files.createTempDirectory("evmulti").toString
-    Tables.events(spark, sf).repartition(8).write.mode("overwrite").parquet(dir)
-    val df = spark.read.parquet(dir)
+    val df = spark.read.parquet(s"$sfMultiFile/events.parquet")
     val n = df.rdd.getNumPartitions
     assert(n >= spark.sparkContext.defaultParallelism) // 8 files ≥ 4 cores
     val spreadPlan = Tables.spread(spark, df).queryExecution.optimizedPlan.toString
     assert(!spreadPlan.contains("Repartition"), spreadPlan)
   }
 
-  test("log verbs over single-file events plan no round-robin spread " +
-       "below their own exchange") {
-    // the measured decision (Tables.factTables): events feeds light
-    // per-row work into an immediate exchange, so a spread stage only
-    // adds a job
+  test("log verbs over single-file events plan no exchange") {
+    // Tables.load coalesces a one-split table to one partition, whose
+    // SinglePartition satisfies the aggregate's and the sort's
+    // distribution: no hash or range exchange, no sampling job
     val p = plan(Shaping.accumulateTop(LogView(spark, sf), "remote_host", 10))
+    assert(!p.contains("Exchange"), p)
+    val sorted = plan(Shaping.jsonl(LogView(spark, sf)).orderBy("event_id"))
+    assert(!sorted.contains("Exchange"), sorted)
+  }
+
+  test("log verbs over multi-file events keep their exchanges") {
+    val p = plan(Shaping.accumulateTop(LogView(spark, sfMultiFile), "remote_host", 10))
     assert(p.contains("Exchange hashpartitioning"), p)
     assert(!p.contains("RoundRobinPartitioning"), p)
+    val sorted = plan(Shaping.jsonl(LogView(spark, sfMultiFile)).orderBy("event_id"))
+    assert(sorted.contains("Exchange rangepartitioning"), sorted)
   }
 
   test("corpus tables over single-file testdata still plan the spread") {

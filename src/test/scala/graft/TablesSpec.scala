@@ -4,6 +4,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 
 /** The per-session table layout memo behind [[Tables.load]]. */
 class TablesSpec extends SparkSpec {
@@ -40,23 +41,31 @@ class TablesSpec extends SparkSpec {
   private def noop(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  private def partitioning(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.executedPlan.outputPartitioning
+
   test("a warm load infers nothing, and a rewritten path is re-inferred") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_tables").toString
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/t.parquet")
-    assert(Tables.load(spark, dir, "t").columns.toSeq == Seq("id", "v"))
+    val loaded = Tables.load(spark, dir, "t")
+    assert(loaded.columns.toSeq == Seq("id", "v"))
+    // one file, one split: planned as the single partition it is
+    assert(partitioning(loaded) == SinglePartition)
 
     // warm: the schema comes from the memo, so the scan is the only job
     val jobs = jobsOf(noop(Tables.load(spark, dir, "t")))
     assert(jobs == 1, s"warm load + noop write ran $jobs jobs")
 
-    // the same path rewritten in this session, with one more column:
-    // the memo key carries the path's modification time
-    Seq((1L, "a", 3.0)).toDF("id", "v", "w")
+    // the same path rewritten in this session as 8 files, with one
+    // more column: the memo key carries the path's modification time
+    spark.range(0, 8, 1, numPartitions = 8)
+      .selectExpr("id", "concat('v', id) AS v", "CAST(id AS DOUBLE) AS w")
       .write.mode("overwrite").parquet(s"$dir/t.parquet")
     val reloaded = Tables.load(spark, dir, "t")
     assert(reloaded.columns.toSeq == Seq("id", "v", "w"))
-    assert(reloaded.collect().toSeq.map(_.getDouble(2)) == Seq(3.0))
+    assert(partitioning(reloaded) != SinglePartition)
+    assert(reloaded.collect().toSeq.map(_.getDouble(2)).sorted == (0 until 8).map(_.toDouble))
   }
 }
