@@ -49,7 +49,7 @@ object GraftSession {
       // (parallel, executor-side) instead of one serial driver-side
       // rename pass at job commit — the standard setting for rename-
       // atomic filesystems; the engine's own staging protocols
-      // (PartitionSwap _SUCCESS markers, snapshot staged dirs) never
+      // (the IVF rebuild's _SUCCESS swap, snapshot staged dirs) never
       // rely on job-commit atomicity. Cuts the many-small-file commit
       // tail of every fixture/mutation write.
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")

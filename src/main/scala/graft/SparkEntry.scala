@@ -294,13 +294,14 @@ object SparkEntry {
         graft.sources.OrcSource.roundTrip(s, d),
       Some(LogView.oracle(
         s"SELECT $logCols FROM log ORDER BY event_id"))),
-    // schema-evolution read: two writer generations under one root
-    // (v2 adds n_tokens), merged-schema read with NULL-filled
-    // absences IN the output — the oracle rebuilds the merge from
-    // the raw table via the same deterministic generation split
+    // schema-evolution read: two writer generations in one snapshot
+    // table (n_tokens declared by a metadata-only evolve between
+    // them), merged read with NULL-filled absences IN the output —
+    // the oracle rebuilds the merge from the raw table via the same
+    // deterministic generation split
     ("schema_evolution",
       (s: SparkSession, d: String) =>
-        graft.sources.SchemaEvolution.evolutionReport(s, d),
+        graft.sources.SnapshotSchema.evolutionReport(s, d),
       Some("SELECT doc_id, lang, " +
         "CAST(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END AS BIGINT) AS has_tokens, " +
         "CAST(CASE WHEN doc_id % 2 = 1 THEN " +
@@ -316,39 +317,38 @@ object SparkEntry {
           "CAST(count(*) AS BIGINT) AS n, " +
           "CAST(sum(traffic_sent) AS BIGINT) AS bytes_sent " +
           "FROM log GROUP BY 1 ORDER BY 1"))),
-    // small-file compaction over the date layout (OPTIMIZE): fragment
-    // deliberately, compact via the staged dir-rename swap protocol,
-    // and prove row preservation against the clean source; the
-    // file-count contraction is CompactionSpec's assertion
+    // small-file compaction (OPTIMIZE): three appends fragment every
+    // day of a fresh snapshot table, one compact commit folds each day
+    // to one file, and the rollup proves row preservation against the
+    // clean source
     ("compact_partition",
       (s: SparkSession, d: String) =>
-        graft.sources.Compaction.compactRollup(s, d),
+        graft.sources.SnapshotOps.compactPartitionRollup(s, d),
       Some(LogView.oracle(
         "SELECT CAST(CAST(make_timestamp(timestamp) AS DATE) AS VARCHAR) AS date, " +
           "CAST(count(*) AS BIGINT) AS n, " +
           "CAST(sum(event_id) AS BIGINT) AS sum_id " +
           "FROM log GROUP BY 1 ORDER BY 1"))),
-    // right-to-be-forgotten erasure: copy-on-write rewrite of ONLY
-    // the partitions holding the subject's rows (PartitionSwap
-    // commit; untouched days byte-identical — ComplianceDeleteSpec);
-    // the oracle is the anti-join over the same deterministic
-    // subject set
+    // right-to-be-forgotten erasure: one snapshot delete commit
+    // rewrites ONLY the files holding the subjects' rows, on a freshly
+    // converted date layout with per-file user_id blooms; the oracle
+    // is the anti-join over the same deterministic subject set
     ("compliance_delete",
       (s: SparkSession, d: String) =>
-        graft.sources.ComplianceDelete.deleteRollup(s, d),
+        graft.sources.SnapshotOps.complianceDeleteRollup(s, d),
       Some("SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS date, " +
         "CAST(count(*) AS BIGINT) AS n, " +
         "CAST(count(DISTINCT user_id) AS BIGINT) AS n_users, " +
         "CAST(sum(event_id) AS BIGINT) AS sum_id " +
         "FROM events WHERE NOT (user_id % 97 = 3) " +
         "GROUP BY 1 ORDER BY 1")),
-    // MERGE-INTO upsert over the partitioned layout: matched keys
-    // replaced, unmatched inserted, copy-on-write of ONLY affected
-    // partitions via the shared PartitionSwap protocol; the oracle
-    // rebuilds the same final state relationally
+    // MERGE-INTO upsert on a table built from scratch every call
+    // (date layout → convert → upsert commit): matched keys replaced,
+    // unmatched inserted; the oracle rebuilds the same final state
+    // relationally
     ("corpus_upsert",
       (s: SparkSession, d: String) =>
-        graft.sources.CorpusUpsert.upsertRollup(s, d),
+        graft.sources.SnapshotOps.corpusUpsertRollup(s, d),
       Some("WITH e AS (SELECT event_id, CAST(ts AS DATE) AS date, " +
         "user_id, event_type FROM events), " +
         "upd AS (SELECT event_id, date, user_id, 'corrected' AS event_type " +
@@ -628,21 +628,22 @@ object SparkEntry {
         "CAST(count(*) AS BIGINT) AS n_rows, " +
         "CAST(sum(event_id) AS BIGINT) AS sum_id " +
         "FROM events GROUP BY 1 ORDER BY 1")),
-    // file-level min/max pruning (pond's per-file time index): the
-    // pruned read must return exactly the full-scan window filter —
-    // completeness through the gate, files-never-opened in
-    // StatsPruningSpec
+    // file-level min/max pruning (pond's per-file time index) on
+    // snapshot zone maps: the skipping read must return exactly the
+    // full-scan window filter — completeness through the gate,
+    // files-never-opened in SnapshotSpec
     ("stats_prune",
       (s: SparkSession, d: String) =>
-        graft.sources.StatsPruning.timeWindow(s, d, SinceUs, UntilUs),
+        graft.sources.SnapshotStats.timeWindow(s, d, SinceUs, UntilUs),
       Some(logSql(s"timestamp >= $SinceUs AND timestamp <= $UntilUs"))),
     // Z-order (Morton) layout: pond's per-site AND per-day file
-    // locality re-established on parquet — file-level pruning on BOTH
-    // the site and time predicates; completeness through the gate,
-    // fewer-files-than-time-only in ZOrderSpec
+    // locality re-established by a snapshot cluster rewrite —
+    // file-level pruning on BOTH the site and time predicates;
+    // completeness through the gate, both-dimension pruning in
+    // SnapshotSpec
     ("zorder_layout",
       (s: SparkSession, d: String) =>
-        graft.sources.ZOrder.siteWindow(s, d, "site_3", SinceUs, UntilUs),
+        graft.sources.SnapshotStats.siteWindow(s, d, "site_3", SinceUs, UntilUs),
       Some(logSql(
         s"site = 'site_3' AND timestamp >= $SinceUs AND timestamp <= $UntilUs"))),
     ("top_pages",

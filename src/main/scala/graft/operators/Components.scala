@@ -105,14 +105,11 @@ object Components {
       df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
         lit(java.math.BigDecimal.ZERO)).as("s"))
         .head().getDecimal(0)
-    val debug = sys.props.get("graft.cc.debug").contains("true") ||
-      sys.env.get("GRAFT_CC_DEBUG").contains("true")
     var prevSum = labelSum(labels)
     var round = 0
     var converged = prevSum.signum == 0 && labels.isEmpty
     while (!converged && round < maxRounds) {
       round += 1
-      val rt0 = System.nanoTime()
       // neighbour step: min over self ∪ neighbours (self-loops make
       // the own label part of the aggregation)
       val stepped = sym.join(labels, sym("b") === labels("node"))
@@ -129,9 +126,6 @@ object Components {
       prevSum = newSum
       drop(labels)
       labels = jumped
-      if (debug)
-        System.err.println(
-          f"[cc] round $round ${(System.nanoTime() - rt0) / 1e9}%.2f s converged=$converged")
     }
     drop(sym)
     // singletons (nodes never touched by an edge) label themselves

@@ -907,9 +907,9 @@ object Curation {
     * TopKPerGroup, not a sort), dedup against the ACCUMULATED corpus
     * (left-anti on the content hash — here a column-pruned scan of
     * the corpus's hash column; at 100 TB this probe is the persisted
-    * band-index / bloom-manifest discipline of
+    * band-index / per-file bloom discipline of
     * [[Dedup.incrementalDedupIndexed]] and
-    * [[graft.sources.ComplianceDelete]]), then an idempotent
+    * [[graft.sources.SnapshotStats.bloomify]]), then an idempotent
     * [[graft.sources.SnapshotOps.append]] commit. Waves RE-DELIVER
     * earlier documents (`doc_id % 5 == wave` rides along with the
     * wave's own `doc_id % 3 == wave` slice — crawls re-fetch pages),

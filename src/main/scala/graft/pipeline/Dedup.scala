@@ -330,7 +330,7 @@ object Dedup {
     * [[autoBucketCap]]): buckets whose occupancy exceeds the cap emit
     * a STAR (every member paired with the bucket's min doc_id)
     * instead of the full clique — n−1 candidates instead of n(n−1)/2.
-    * The r11 decade metrics (tools.DedupMetrics) showed candidate
+    * Per-decade candidate counts (measured r11) showed candidate
     * volume growing 22× for 10× data once duplicate clusters densify
     * (a cluster of n near-identical docs is n²/2 pairs by
     * definition); the cap bounds LISTING cost per hot bucket while
@@ -645,15 +645,6 @@ object Dedup {
       if (maxOcc > BucketCapThreshold) Some(BucketCapThreshold) else None
     })
 
-  /** The exploded full-corpus band keys — instrumentation surface for
-    * [[graft.tools.DedupMetrics]] (candidate-volume accounting per
-    * scale decade).
-    */
-  private[graft] def bandKeysOf(spark: SparkSession, dir: String,
-                                numPerm: Int = 64,
-                                bands: Int = 32): DataFrame =
-    bandKeyed(signedDocs(normed(spark, dir), numPerm), numPerm, bands)
-
   /** Persist the corpus side of [[incrementalDedup]] as a reusable
     * MinHash band index: `index/` = the exploded (doc_id, band-bucket
     * hash) keys, `slim/` = the (doc_id, lang, source, shingles, size)
@@ -661,9 +652,9 @@ object Dedup {
     * 100 TB: corpus text is shingled and signed ONCE at layout time,
     * and every daily batch probes the persisted index without
     * touching corpus text again — the same
-    * persist-at-write-time discipline as `StatsPruning`/`ZOrder`
-    * manifests (recompute is exactly the cost the artifact exists to
-    * avoid).
+    * persist-at-write-time discipline as the snapshot manifests' zone
+    * maps and blooms ([[graft.sources.SnapshotStats]]; recompute is
+    * exactly the cost the artifact exists to avoid).
     */
   def bandIndexWriteOf(corpusDocs: DataFrame, outDir: String,
                        numPerm: Int = 64, bands: Int = 32): Unit = {

@@ -1,14 +1,13 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.DataFrame
 
-/** The shared partition rewrite-and-swap commit protocol, used by
-  * [[Compaction]] (rewrite for file-count health) and
-  * [[ComplianceDelete]] (rewrite to drop rows). The swap per
-  * partition is: (1) stage the rewritten files (job commit ends with
-  * `_SUCCESS`), (2) rename the live partition dir into the trash,
-  * (3) rename the staged dir into place, (4) drop the trash.
+/** A directory rewrite-and-swap commit, used by
+  * [[graft.pipeline.Ann.ivfIndexRebuild]] to replace an index's
+  * relations. Table mutations commit through [[Snapshot]] manifests
+  * instead. The swap per directory is: (1) stage the rewritten files
+  * (job commit ends with `_SUCCESS`), (2) rename the live dir into the
+  * trash, (3) rename the staged dir into place, (4) drop the trash.
   *
   * Directory RENAME is the commit primitive (atomic on HDFS and
   * posix filesystems), never file-by-file moves into a live dir — a
@@ -25,8 +24,8 @@ private[graft] object PartitionSwap {
     *  - stage without `_SUCCESS`: staging died — live dir untouched,
     *    drop the stage;
     *  - stage with `_SUCCESS` and the live dir present: died between
-    *    (1) and (2) — drop the stage, a re-plan re-stages (both
-    *    callers' rewrites are idempotent);
+    *    (1) and (2) — drop the stage, a re-plan re-stages (the
+    *    rewrite is idempotent);
     *  - stage with `_SUCCESS` and the live dir missing: died between
     *    (2) and (3) — complete the swap (the staged copy is whole);
     *  - trash leftovers: died at (4) — drop them.
@@ -62,57 +61,5 @@ private[graft] object PartitionSwap {
       throw new java.io.IOException(s"partition swap failed for $live")
     fs.delete(trash, true)
     fs.delete(new Path(live, "_SUCCESS"), false)
-  }
-
-  /** Destination-tag column for [[stageAllAndSwap]]'s bulk write. */
-  private[sources] val BulkTag = "__swap_part"
-
-  /** Stage EVERY affected partition in ONE distributed
-    * `partitionBy(BulkTag)` write under the stage root, then run the
-    * per-partition swap protocol over the staged dirs. Replaces the
-    * one-Spark-job-per-partition rewrite pools: a mutation touching a
-    * thousand partitions is one cluster job plus a thousand metadata
-    * renames, instead of a thousand serially-submitted driver jobs
-    * (guide §2.6 — the pool was a workaround for exactly this).
-    *
-    * `staged` carries `BulkTag` = the destination partition dir name
-    * (e.g. `date=2024-01-01`). Every entry of `parts` commits: a part
-    * with no staged output commits as an EMPTY partition (all rows
-    * removed); a part whose live dir does not exist is promoted
-    * directly (insert-only partition — same crash window as the
-    * (2)→(3) gap, already covered by [[recover]]).
-    *
-    * Crash windows: the bulk write's tag dirs carry no per-dir
-    * `_SUCCESS`, so [[recover]] drops them; once a dir is renamed to
-    * its partition name and marked, the existing windows apply
-    * unchanged.
-    */
-  def stageAllAndSwap(fs: FileSystem, root: Path, parts: Seq[String],
-                      staged: DataFrame, stageName: String,
-                      trashName: String): Unit = {
-    val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val stageRoot = new Path(root, stageName)
-    staged.write.mode("overwrite").partitionBy(BulkTag)
-      .parquet(stageRoot.toString)
-    fs.mkdirs(new Path(root, trashName))
-    parts.foreach { part =>
-      val tagDir = new Path(stageRoot,
-        s"$BulkTag=${esc.escapePathName(part)}")
-      val partStage = new Path(stageRoot, part)
-      if (fs.exists(tagDir)) {
-        if (!fs.rename(tagDir, partStage))
-          throw new java.io.IOException(s"stage rename failed for $part")
-      } else fs.mkdirs(partStage)
-      fs.create(new Path(partStage, "_SUCCESS"), true).close()
-      val live = new Path(root, part)
-      if (fs.exists(live)) commit(fs, root, part, stageName, trashName)
-      else {
-        if (!fs.rename(partStage, live))
-          throw new java.io.IOException(s"promote failed for $live")
-        fs.delete(new Path(live, "_SUCCESS"), false)
-      }
-    }
-    fs.delete(stageRoot, true)
-    fs.delete(new Path(root, trashName), true)
   }
 }

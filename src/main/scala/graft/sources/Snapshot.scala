@@ -5,11 +5,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Versioned snapshot commits over a partitioned parquet layout — the
-  * table-format layer that closes [[PartitionSwap]]'s documented
-  * reader-visible gap (PartitionSwap.scala: a reader overlapping a
-  * multi-partition mutation can see partition A new and partition B
-  * old). The standard remedy, reduced to its core (the same design
-  * center as Iceberg/Delta):
+  * table-format layer behind every graft table mutation. It closes the
+  * reader-visible gap of per-directory rename swaps (a reader
+  * overlapping a multi-partition mutation could see partition A new
+  * and partition B old). The standard remedy, reduced to its core (the
+  * same design center as Iceberg/Delta):
   *
   *  - **Data files are immutable.** A mutation never renames or
   *    rewrites a live file; it writes NEW files (under per-version

@@ -1,14 +1,14 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 
-/** The three table-mutation operators re-expressed over
-  * [[Snapshot]]'s versioned-manifest commits — upsert, erasure and
-  * compaction with FILE-granular copy-on-write:
+/** graft's table mutations over [[Snapshot]]'s versioned-manifest
+  * commits — upsert, erasure, compaction, clustering and append, with
+  * FILE-granular copy-on-write:
   *
   *  - plan against the pinned manifest (never a directory listing):
   *    the files actually holding affected keys come from one
@@ -25,9 +25,9 @@ import graft.Tables
   *  - commit the complete next file set as ONE manifest rename: a
   *    reader that pinned before the commit keeps its intact old
   *    version, a reader pinning after sees the complete new one —
-  *    the all-old-or-all-new guarantee PartitionSwap's per-partition
-  *    dir renames could not give across partitions (SnapshotSpec
-  *    proves both sides, plus the crash windows).
+  *    the all-old-or-all-new guarantee per-partition directory
+  *    renames cannot give across partitions (SnapshotSpec proves both
+  *    sides, plus the crash windows).
   *
   * Crash windows stay closed with the staged write: a death mid-stage
   * leaves `.snap_stage_v*` orphans no manifest references (reaped by
@@ -48,21 +48,6 @@ object SnapshotOps {
 
   case class MutationStats(version: Long, partitions: Seq[String],
                            retiredFiles: Long, newFiles: Long)
-
-  /** Optimization-round observability (GRAFT_SNAP_DEBUG=true): phase
-    * wall timings of the mutation core to stderr, so bench seconds
-    * attribute to plan-scan vs staged-write vs stats vs commit.
-    */
-  private val snapDebug = sys.env.get("GRAFT_SNAP_DEBUG").contains("true")
-  @inline private def phase[T](name: String)(f: => T): T =
-    if (!snapDebug) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[snap] $name%-28s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
 
   /** Test seam: invoked immediately before each commit attempt.
     * SnapshotSpec injects a conflicting winner here to force the
@@ -143,17 +128,14 @@ object SnapshotOps {
       // one aggregate answers both the batch size and the duplicate
       // guard — the two separate count jobs this replaces were each a
       // full pass over the (cached) batch
-      val nBatch = phase("upsert:batch-prep") {
-        // NULL-inclusive distinct (count_distinct ignores the null
-        // group — a single-NULL-key batch must not misreport as
-        // "duplicates"); same semantics as keys.distinct().count()
-        val r = b.agg(count(lit(1)), count_distinct(col(keyCol)) +
-          max(when(col(keyCol).isNull, 1L).otherwise(0L))).head()
-        val n = r.getLong(0)
-        require(n == 0 || r.getLong(1) == n,
-          s"upsert batch carries duplicate $keyCol values")
-        n
-      }
+      // NULL-inclusive distinct (count_distinct ignores the null
+      // group — a single-NULL-key batch must not misreport as
+      // "duplicates"); same semantics as keys.distinct().count()
+      val r = b.agg(count(lit(1)), count_distinct(col(keyCol)) +
+        max(when(col(keyCol).isNull, 1L).otherwise(0L))).head()
+      val nBatch = r.getLong(0)
+      require(nBatch == 0 || r.getLong(1) == nBatch,
+        s"upsert batch carries duplicate $keyCol values")
       if (nBatch == 0) {
         val root = new Path(dir)
         val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
@@ -230,11 +212,11 @@ object SnapshotOps {
     val rootUri = fs.makeQualified(root).toUri.getPath
     def relOf(f: String): String = new Path(f).toUri.getPath
       .stripPrefix(rootUri).stripPrefix("/")
-    val hitRels = phase("mutate:plan-scan")(Snapshot.readPin(spark, dir, p)
+    val hitRels = Snapshot.readPin(spark, dir, p)
       .withColumn("f", input_file_name())
       .join(bkeys, Seq(keyCol), "left_semi")
       .select("f").distinct()
-      .collect().map(r => relOf(r.getString(0))).toSet)
+      .collect().map(r => relOf(r.getString(0))).toSet
     def partOf(rel: String): String = rel.substring(0, rel.indexOf('/'))
     val affected = (hitRels.map(partOf) ++
       incomingParts.map(v => partDirOf(p, v))).toSeq.distinct.sorted
@@ -287,19 +269,18 @@ object SnapshotOps {
     // destinations writes k files — the cached batch alone staged
     // O(tasks × partitions) small files per commit, and every later
     // plan scan and rollup read paid the file-count tax.
-    val newFiles = phase("mutate:stage+place")(stageAndPlace(spark, fs, root, dir,
-      affected, out, newVersion,
-      layout = df => df.hint("rebalance", StageTag)))
+    val newFiles = stageAndPlace(spark, fs, root, dir, affected, out,
+      newVersion, layout = df => df.hint("rebalance", StageTag))
     val manifest = p.files.filterNot(hitRels) ++ newFiles
     val baseTags = Snapshot.tagsOf(fs, root, p.version)
-    val newStats = phase("mutate:collectStats")(SnapshotStats.collectStats(spark, dir, newFiles,
+    val newStats = SnapshotStats.collectStats(spark, dir, newFiles,
       SnapshotStats.statsColsOf(baseTags),
-      SnapshotStats.bloomColsOf(baseTags)))
+      SnapshotStats.bloomColsOf(baseTags))
     beforeCommit()
-    val v = phase("mutate:commit+vacuum"){ val c = Snapshot.commit(fs, root, manifest, p.version,
+    val v = Snapshot.commit(fs, root, manifest, p.version,
       expireTags(baseTags, newVersion),
       baseFiles = Some(p.files), stats = newStats)
-    Snapshot.vacuum(fs, root); c }
+    Snapshot.vacuum(fs, root)
     MutationStats(v, affected, hitRels.size.toLong, newFiles.size.toLong)
   }
 
@@ -370,8 +351,7 @@ object SnapshotOps {
     * all partitions in one clustered staged write (`repartition` on
     * the stage tag puts each partition's rows in one task, so each
     * staged dir holds exactly one file) — and commit is one manifest
-    * rename (the multi-partition atomicity the dir-swap compactor
-    * lacks).
+    * rename (multi-partition atomicity a per-directory swap lacks).
     */
   def compact(spark: SparkSession, dir: String,
               maxFiles: Int = 4): MutationStats =
@@ -411,6 +391,29 @@ object SnapshotOps {
     MutationStats(v, affected, retired.size.toLong, newFiles.size.toLong)
   }
 
+  /** Bit-interleave two non-negative bucket columns into the Morton
+    * code: bit i of `a` lands at 2i, bit i of `b` at 2i+1. One
+    * `aggregate` over the bit positions — stays in whole-stage
+    * codegen, no UDF.
+    */
+  def interleave(a: Column, b: Column, bits: Int = 21): Column = {
+    require(bits >= 1 && bits <= 31, "bits must fit both lanes in int64")
+    val cap = (1L << bits) - 1
+    val az = least(a.cast("long"), lit(cap))
+    val bz = least(b.cast("long"), lit(cap))
+    // the shift amount is a lambda variable, so the shifts go through
+    // call_function (the Scala shiftleft/shiftrightunsigned helpers
+    // only accept literal amounts)
+    def bit(v: Column, i: Column): Column =
+      call_function("shiftrightunsigned", v, i).bitwiseAND(lit(1L))
+    aggregate(
+      sequence(lit(0), lit(bits - 1)),
+      lit(0L),
+      (acc, i) => acc
+        + call_function("shiftleft", bit(az, i), lit(2) * i)
+        + call_function("shiftleft", bit(bz, i), lit(2) * i + lit(1)))
+  }
+
   /** Clustering rewrite (OPTIMIZE ZORDER reduced to its core): lay
     * the whole table out along the Morton interleave of two columns —
     * every partition staged in ONE `repartitionByRange` write job over
@@ -428,7 +431,7 @@ object SnapshotOps {
     * `filesPerPartition` sizes the z-granularity (range partitions =
     * partitions × filesPerPartition); production sizes it so files
     * land near the target file size. `bits` bounds the per-column
-    * Morton resolution ([[ZOrder.interleave]] clamps larger values —
+    * Morton resolution ([[interleave]] clamps larger values —
     * clustering degrades gracefully above 2^bits, correctness never
     * depends on it).
     */
@@ -456,7 +459,7 @@ object SnapshotOps {
         .parquet(byPart(part).map(f => s"$dir/$f"): _*)
         .withColumn(StageTag, lit(part))
     }
-    val z = ZOrder.interleave(col(zCols._1), col(zCols._2), bits)
+    val z = interleave(col(zCols._1), col(zCols._2), bits)
     val nRanges = math.max(1, affected.size * filesPerPartition)
     val newFiles = stageAndPlace(spark, fs, root, dir, affected,
       Some(tagged.reduce(_ unionByName _)), newVersion,
@@ -537,13 +540,8 @@ object SnapshotOps {
   private def restoreFixture(spark: SparkSession, dir: String): String =
     graft.Memo.once(restoreCache,
       (spark.sparkContext.applicationId, dir), {
-        val tmp = TmpDir.scoped("snaprestore",
-          spark.sparkContext.applicationId, dir)
-        val root = new Path(tmp)
-        root.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(root, true)
-        val events = Tables.events(spark, dir)
-          .withColumn("date", expr("date(timestamp_micros(ts div 1000))"))
+        val tmp = freshTable(spark, "snaprestore", dir)
+        val events = datedEvents(spark, dir)
           .withColumn("ym", date_format(col("date"), "yyyy-MM"))
         val v1 = append(spark, tmp, events, "ym", Some("restore-base"))
           .version
@@ -633,14 +631,109 @@ object SnapshotOps {
     MutationStats(v, destParts, 0L, newFiles.size.toLong)
   }
 
-  /** The gate query: the SAME correction feed as `corpus_upsert`
-    * (updates for `user_id % 89 = 5`, offset-id inserts for
-    * `% 89 = 7`, first week of each month) applied through snapshot
-    * commits — upsert against the session's converted base table,
-    * roll up the final state from a snapshot-isolated read. The
-    * oracle rebuilds the final state relationally (identical to
-    * corpus_upsert's); the isolation/crash properties are
-    * SnapshotSpec's.
+  /** A scratch table dir for `purpose`, emptied: the gates that rebuild
+    * their table on every call start here, so a repeat call never
+    * appends onto the previous call's table.
+    */
+  private[sources] def freshTable(spark: SparkSession, purpose: String,
+                                  dir: String): String = {
+    val tmp = TmpDir.scoped(purpose, spark.sparkContext.applicationId, dir)
+    val root = new Path(tmp)
+    root.getFileSystem(spark.sessionState.newHadoopConf()).delete(root, true)
+    tmp
+  }
+
+  /** `events` with its `date` (the partition column of the date
+    * layout every upsert/delete gate starts from).
+    */
+  private def datedEvents(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir)
+      .withColumn("date", expr("date(timestamp_micros(ts div 1000))"))
+
+  /** Write `events` as a date-partitioned layout under `tmp` and
+    * convert it to snapshot management (v1).
+    */
+  private def convertDateLayout(spark: SparkSession, events: DataFrame,
+                                tmp: String): Unit = {
+    events.repartition(col("date"))
+      .write.mode("overwrite").partitionBy("date").parquet(tmp)
+    Snapshot.convert(spark, tmp, "date")
+  }
+
+  private def upsertRollup(table: DataFrame): DataFrame =
+    table.groupBy(col("date"))
+      .agg(count(lit(1)).as("n"),
+        sum(when(col("event_type") === "corrected", 1L).otherwise(0L)).as("n_corrected"),
+        sum(when(col("event_type") === "inserted", 1L).otherwise(0L)).as("n_inserted"),
+        sum("event_id").as("sum_id"))
+      .orderBy("date")
+
+  /** The `corpus_upsert` gate: the correction feed (updates for
+    * `user_id % 89 = 5`, offset-id inserts for `% 89 = 7`, first week
+    * of each month) applied to a table built from scratch on every
+    * call — date layout, convert, upsert, snapshot read. It gates the
+    * convert-then-mutate lifecycle on a fresh table, which
+    * `snapshot_upsert`'s memoized base skips after its first call;
+    * the two share the relational oracle.
+    */
+  def corpusUpsertRollup(spark: SparkSession, dir: String): DataFrame = {
+    val tmp = freshTable(spark, "upsert", dir)
+    val events = datedEvents(spark, dir)
+    convertDateLayout(spark, events, tmp)
+    upsert(spark, tmp, correctionFeed(events), "event_id", "date")
+    upsertRollup(Snapshot.read(spark, tmp))
+  }
+
+  /** The `compliance_delete` gate: erase a subject set
+    * (`user_id % 97 = 3`, the stand-in for a delete-request batch)
+    * from a freshly converted date layout whose files carry per-file
+    * `user_id` blooms, then roll up what remains. The key is not
+    * unique, so each subject's rows leave many files in one commit,
+    * and the rewritten files get fresh blooms through the
+    * `#bloomcols` maintenance path. The oracle is the anti-join over
+    * the same subject set.
+    */
+  def complianceDeleteRollup(spark: SparkSession, dir: String): DataFrame = {
+    val tmp = freshTable(spark, "compliance", dir)
+    val events = datedEvents(spark, dir)
+    convertDateLayout(spark, events, tmp)
+    SnapshotStats.bloomify(spark, tmp,
+      Seq(SnapshotStats.BloomSpec("user_id", 1024, 2)))
+    delete(spark, tmp,
+      events.select("user_id").filter(pmod(col("user_id"), lit(97)) === 3),
+      "user_id")
+    Snapshot.read(spark, tmp)
+      .groupBy(col("date"))
+      .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("n_users"),
+        sum("event_id").as("sum_id"))
+      .orderBy("date")
+  }
+
+  /** The `compact_partition` gate: three interleaved appends fragment
+    * EVERY day of a fresh table, [[compact]] folds each day to one
+    * file in one commit, and the rollup of the compacted read proves
+    * no row was lost or duplicated. `snapshot_compact` runs the same
+    * verb over the first week only, re-fragmenting one day per warm
+    * call.
+    */
+  def compactPartitionRollup(spark: SparkSession, dir: String): DataFrame = {
+    val tmp = freshTable(spark, "compact", dir)
+    val events = datedEvents(spark, dir)
+    (0 until 3).foreach { i =>
+      append(spark, tmp, events.filter(pmod(col("event_id"), lit(3)) === i),
+        "date")
+    }
+    compact(spark, tmp, maxFiles = 1)
+    Snapshot.read(spark, tmp)
+      .groupBy(col("date"))
+      .agg(count(lit(1)).as("n"), sum("event_id").as("sum_id"))
+      .orderBy("date")
+  }
+
+  /** The `snapshot_upsert` gate: the `corpus_upsert` correction feed
+    * applied through snapshot commits against the session's converted
+    * base table, rolled up from a snapshot-isolated read. The
+    * isolation/crash properties are SnapshotSpec's.
     *
     * The one-time date-layout conversion is memoized per (session,
     * input dir); EVERY invocation runs the upsert itself (a real
@@ -653,16 +746,9 @@ object SnapshotOps {
     */
   def snapshotUpsertRollup(spark: SparkSession, dir: String): DataFrame = {
     val tmp = upsertBaseFixture(spark, dir)
-    val events = Tables.events(spark, dir)
-      .withColumn("date", expr("date(timestamp_micros(ts div 1000))"))
-    upsert(spark, tmp, correctionFeed(events), "event_id", "date")
-    Snapshot.read(spark, tmp)
-      .groupBy(col("date"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("event_type") === "corrected", 1L).otherwise(0L)).as("n_corrected"),
-        sum(when(col("event_type") === "inserted", 1L).otherwise(0L)).as("n_inserted"),
-        sum("event_id").as("sum_id"))
-      .orderBy("date")
+    upsert(spark, tmp, correctionFeed(datedEvents(spark, dir)),
+      "event_id", "date")
+    upsertRollup(Snapshot.read(spark, tmp))
   }
 
   /** The deterministic correction feed shared by the upsert fixtures:
@@ -693,32 +779,21 @@ object SnapshotOps {
   private def upsertBaseFixture(spark: SparkSession, dir: String): String =
     graft.Memo.once(upsertBaseCache,
       (spark.sparkContext.applicationId, dir), {
-        val tmp = TmpDir.scoped("snapupsert",
-          spark.sparkContext.applicationId, dir)
-        val root = new Path(tmp)
-        root.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(root, true)
-        val events = Tables.events(spark, dir)
-          .withColumn("date", expr("date(timestamp_micros(ts div 1000))"))
-        events.repartition(col("date"))
-          .write.mode("overwrite").partitionBy("date").parquet(tmp)
-        Snapshot.convert(spark, tmp, "date")
+        val tmp = freshTable(spark, "snapupsert", dir)
+        convertDateLayout(spark, datedEvents(spark, dir), tmp)
         tmp
       })
 
   /** The shared fixture construction: events date layout → convert
-    * (v1) → the corpus_upsert correction feed landed as ONE snapshot
-    * commit (v2). Both versions stay live under the default
+    * (v1) → the correction feed landed as ONE snapshot commit (v2).
+    * Both versions stay live under the default
     * [[Snapshot.KeepVersions]] retention — exactly the straggler
     * window the vacuum policy promises.
     */
   private def buildAndUpsert(spark: SparkSession, dir: String,
                              tmp: String): Unit = {
-    val events = Tables.events(spark, dir)
-      .withColumn("date", expr("date(timestamp_micros(ts div 1000))"))
-    events.repartition(col("date"))
-      .write.mode("overwrite").partitionBy("date").parquet(tmp)
-    Snapshot.convert(spark, tmp, "date")
+    val events = datedEvents(spark, dir)
+    convertDateLayout(spark, events, tmp)
     upsert(spark, tmp, correctionFeed(events), "event_id", "date")
   }
 
@@ -844,8 +919,7 @@ object SnapshotOps {
     // first-week partitions only: the lifecycle (fragment → compact →
     // invariant) is identical on any partition subset, and a gate
     // should not cost five full-table materializations
-    val events = Tables.events(spark, dir)
-      .withColumn("date", expr("date(timestamp_micros(ts div 1000))"))
+    val events = datedEvents(spark, dir)
       .filter(dayofmonth(col("date")) <= 7)
       .withColumn("date", col("date").cast("string"))
     if (compactBuilt.add((spark.sparkContext.applicationId, tmp))) {

@@ -5,15 +5,14 @@ import java.net.{URLDecoder, URLEncoder}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 import graft.Tables
 
 /** Schema evolution ON the snapshot table layer — the authoritative
   * merged schema lives in the MANIFEST ROOT (a `#schema=` tag), not in
-  * file footers, which retires [[SchemaEvolution]]'s documented 100 TB
-  * caveat: `mergeSchema` reads every footer at planning time, a
-  * catalog/manifest schema is O(1). Same design center as
+  * file footers: Spark's `mergeSchema` reads every footer at planning
+  * time, a catalog/manifest schema is O(1). Same design center as
   * Delta's metadata action / Iceberg's schema in table metadata,
   * reduced to this layer's primitives:
   *
@@ -35,10 +34,11 @@ import graft.Tables
   *    (spec-asserted — evolution must not cost pushdown).
   *
   * Reference behavior: doc/index.rst's append-only log model plus the
-  * add-column evolution every table format ships; the plain-layout
-  * twin (`schema_evolution`, SchemaEvolution.scala) pins the same
-  * NULL-fill semantics via `mergeSchema`, this operator pins them via
-  * the manifest so the contract holds without footer IO.
+  * add-column evolution every table format ships. Two gates pin the
+  * NULL-fill semantics: `schema_evolution` ([[evolutionReport]]) row
+  * by row over two `documents` writer generations, and
+  * `snapshot_schema_evolution` as a rollup over three `events`
+  * generations.
   */
 object SnapshotSchema {
 
@@ -141,18 +141,13 @@ object SnapshotSchema {
                                       dir: String): String =
     graft.Memo.once(fixtureCache,
       (spark.sparkContext.applicationId, dir), {
-        val tmp = TmpDir.scoped("snapschema",
-          spark.sparkContext.applicationId, dir)
-        val root = new Path(tmp)
-        root.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(root, true)
+        val tmp = SnapshotOps.freshTable(spark, "snapschema", dir)
         val events = Tables.events(spark, dir)
           .withColumn("date", expr("date(timestamp_micros(ts div 1000))"))
           .withColumn("ym", date_format(col("date"), "yyyy-MM"))
           .select("event_id", "user_id", "event_type", "date", "ym")
         SnapshotOps.append(spark, tmp, events, "ym", Some("schema-base"))
-        evolve(spark, tmp, Seq(StructField("quality_bp",
-          org.apache.spark.sql.types.LongType)))
+        evolve(spark, tmp, Seq(StructField("quality_bp", LongType)))
         // wave with the NEW column: shifted re-ingest slice, quality
         // derived from the shifted id (oracle-reconstructible)
         val wave = events.filter(pmod(col("user_id"), lit(13)) === 5)
@@ -181,5 +176,32 @@ object SnapshotSchema {
         sum(when(col("quality_bp").isNull, 1L).otherwise(0L)).as("n_null_q"),
         sum(coalesce(col("quality_bp"), lit(0L))).as("sum_q"))
       .orderBy("event_type", "date")
+  }
+
+  /** The `schema_evolution` gate: two writer generations of
+    * `documents` in one table rebuilt on every call — generation 1
+    * (even ids: doc_id, lang, source) appended, `n_tokens` declared by
+    * [[evolve]], generation 2 (odd ids, carrying `n_tokens`) appended —
+    * then every row of the merged read with an explicit presence flag,
+    * so the NULL fill is IN the output. The oracle rebuilds the merge
+    * from the raw table via the same generation split.
+    */
+  def evolutionReport(spark: SparkSession, dir: String): DataFrame = {
+    val tmp = SnapshotOps.freshTable(spark, "schemaevo", dir)
+    val docs = Tables.documents(spark, dir)
+    SnapshotOps.append(spark, tmp,
+      docs.filter(col("doc_id") % 2 === 0).select("doc_id", "lang", "source"),
+      "lang")
+    evolve(spark, tmp, Seq(StructField("n_tokens", LongType)))
+    SnapshotOps.append(spark, tmp,
+      docs.filter(col("doc_id") % 2 === 1).select(col("doc_id"), col("lang"),
+        col("source"),
+        size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens")),
+      "lang")
+    readMerged(spark, tmp)
+      .select(col("doc_id"), col("lang"),
+        when(col("n_tokens").isNotNull, 1L).otherwise(0L).as("has_tokens"),
+        coalesce(col("n_tokens"), lit(-1L)).as("n_tokens"))
+      .orderBy("doc_id")
   }
 }

@@ -1,11 +1,12 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.logs.LogView
 
 /** Per-file zone maps (column min/max) in the snapshot manifest, and
   * the data-skipping reads they enable — the file-level analogue of
@@ -42,7 +43,7 @@ import graft.Tables
   *
   * Zone maps only pay when files are clustered on the stat column —
   * ingest batches naturally are (time, monotone ids), and
-  * [[graft.sources.ZOrder]]-style layouts make multi-column ranges
+  * [[SnapshotOps.cluster]]'s z-order rewrite makes multi-column ranges
   * tight. The gate fixture uses range-clustered ingest batches, the
   * realistic shape.
   */
@@ -394,11 +395,7 @@ object SnapshotStats {
   private def skippingFixture(spark: SparkSession, dir: String): String =
     graft.Memo.once(skipFixtureCache,
       (spark.sparkContext.applicationId, dir), {
-        val tmp = TmpDir.scoped("snapskip",
-          spark.sparkContext.applicationId, dir)
-        val root = new Path(tmp)
-        root.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(root, true)
+        val tmp = SnapshotOps.freshTable(spark, "snapskip", dir)
         val events = Tables.events(spark, dir)
           .withColumn("date", expr("date(timestamp_micros(ts div 1000))"))
           .withColumn("wk", expr("concat(date_format(date, 'yyyy-MM'), " +
@@ -538,11 +535,7 @@ object SnapshotStats {
   private def clusteredFixture(spark: SparkSession, dir: String): String =
     graft.Memo.once(clusterFixtureCache,
       (spark.sparkContext.applicationId, dir), {
-        val tmp = TmpDir.scoped("snapcluster",
-          spark.sparkContext.applicationId, dir)
-        val root = new Path(tmp)
-        root.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(root, true)
+        val tmp = SnapshotOps.freshTable(spark, "snapcluster", dir)
         val events = Tables.events(spark, dir)
           .withColumn("date", expr("date(timestamp_micros(ts div 1000))"))
           .withColumn("ym", date_format(col("date"), "yyyy-MM"))
@@ -687,5 +680,77 @@ object SnapshotStats {
         hi.map(h => col(colName) <= lit(h).cast(dt))
     }
     if (conj.isEmpty) base else base.filter(conj.reduce(_ && _))
+  }
+
+  /** The `stats_prune` gate — pond's per-file time index on snapshot
+    * zone maps: LogView rows appended to a fresh table with their
+    * week as the partition (each file covers one week, as time-ordered
+    * arrival leaves them), zone maps on `timestamp`, then the skipping
+    * read of the closed window `[loUs, hiUs]`. Files outside the
+    * window are never opened; the hash gate proves pruning drops no
+    * qualifying row. Only LogView columns go out.
+    */
+  def timeWindow(spark: SparkSession, sfDir: String,
+                 loUs: Long, hiUs: Long): DataFrame = {
+    val tmp = SnapshotOps.freshTable(spark, "statsprune", sfDir)
+    SnapshotOps.append(spark, tmp, LogView(spark, sfDir).withColumn("wk",
+      expr("concat(date_format(timestamp_micros(timestamp), 'yyyy-MM'), " +
+        "'-w', cast((day(timestamp_micros(timestamp)) - 1) div 7 as string))")),
+      "wk")
+    statsify(spark, tmp, Seq("timestamp"))
+    readSkipping(spark, tmp, "timestamp", Some(loUs.toString),
+      Some(hiUs.toString))
+      .select(LogView.columns.map(col): _*)
+      .orderBy("timestamp", "event_id")
+  }
+
+  /** A stable site bucket (xxhash64 — any site cardinality; an
+    * equality predicate on the site prunes on its bucket).
+    */
+  private def siteBucket(site: Column): Column =
+    pmod(xxhash64(site), lit(1024L))
+
+  /** [[siteBucket]] of one site, evaluated over a one-row local
+    * relation (folded at optimization time — no job).
+    */
+  private[sources] def siteBucketOf(spark: SparkSession, site: String): Long = {
+    import spark.implicits._
+    Seq(site).toDF("site").select(siteBucket(col("site"))).head().getLong(0)
+  }
+
+  /** pond's per-site AND per-day file locality on a snapshot table:
+    * LogView rows plus their site bucket `sb` and hour bucket `hr`,
+    * clustered by [[SnapshotOps.cluster]] along z(sb, hr) into 16
+    * files, then zone maps on `sb` and `timestamp` — each file is a
+    * small rectangle in (site, time) space. Rebuilt from scratch on
+    * every call. Returns the table dir.
+    */
+  private[sources] def siteTimeTable(spark: SparkSession,
+                                     sfDir: String): String = {
+    val tmp = SnapshotOps.freshTable(spark, "zorder", sfDir)
+    SnapshotOps.append(spark, tmp, LogView(spark, sfDir)
+      .withColumn("ym", date_format(timestamp_micros(col("timestamp")), "yyyy-MM"))
+      .withColumn("sb", siteBucket(col("site")))
+      .withColumn("hr", expr("timestamp div 3600000000")), "ym")
+    SnapshotOps.cluster(spark, tmp, ("sb", "hr"), filesPerPartition = 16)
+    statsify(spark, tmp, Seq("sb", "timestamp"))
+    tmp
+  }
+
+  /** The `zorder_layout` gate: the (site, window) read over
+    * [[siteTimeTable]], pruned on BOTH the site bucket and the time
+    * zone maps, then the exact site predicate. The hash gate proves
+    * tile selection drops no qualifying row. Only LogView columns go
+    * out.
+    */
+  def siteWindow(spark: SparkSession, sfDir: String, site: String,
+                 loUs: Long, hiUs: Long): DataFrame = {
+    val tmp = siteTimeTable(spark, sfDir)
+    val sb = siteBucketOf(spark, site).toString
+    readSkippingMulti(spark, tmp, Seq(("sb", Some(sb), Some(sb)),
+      ("timestamp", Some(loUs.toString), Some(hiUs.toString))))
+      .filter(col("site") === site)
+      .select(LogView.columns.map(col): _*)
+      .orderBy("timestamp", "event_id")
   }
 }

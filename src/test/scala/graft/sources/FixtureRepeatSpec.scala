@@ -17,6 +17,12 @@ import graft.SparkSpec
   *    idempotency keys (every document is a re-crawl duplicate — the
   *    dedup pipeline runs, nothing commits).
   *
+  * The mutation gates that rebuild their table from scratch on every
+  * call (`corpus_upsert`, `compliance_delete`, `compact_partition`,
+  * `schema_evolution`, `stats_prune`, `zorder_layout`) must start from
+  * an empty scratch dir each time: an append into the previous call's
+  * table doubles its rows.
+  *
   * The protocol is only sound if every such invocation returns the
   * SAME relation — this spec pins exactly that (three invocations:
   * build, first repeat, second repeat — the repeat paths themselves
@@ -80,5 +86,37 @@ class FixtureRepeatSpec extends SparkSpec {
        "deterministic scoring)") {
     thrice("quality_classifier")(
       graft.pipeline.Curation.qualityClassifier(spark, sf))
+  }
+
+  test("corpus_upsert is invocation-stable (fresh table: convert, " +
+       "upsert, read)") {
+    thrice("corpus_upsert")(SnapshotOps.corpusUpsertRollup(spark, sf))
+  }
+
+  test("compliance_delete is invocation-stable (fresh table: convert, " +
+       "bloomify, delete)") {
+    thrice("compliance_delete")(SnapshotOps.complianceDeleteRollup(spark, sf))
+  }
+
+  test("compact_partition is invocation-stable (fresh table: three " +
+       "appends, compact)") {
+    thrice("compact_partition")(SnapshotOps.compactPartitionRollup(spark, sf))
+  }
+
+  test("schema_evolution is invocation-stable (fresh table: append, " +
+       "evolve, append)") {
+    thrice("schema_evolution")(SnapshotSchema.evolutionReport(spark, sf))
+  }
+
+  test("stats_prune is invocation-stable (fresh table: append, " +
+       "statsify, skipping read)") {
+    thrice("stats_prune")(SnapshotStats.timeWindow(spark, sf,
+      graft.SparkEntry.SinceUs, graft.SparkEntry.UntilUs))
+  }
+
+  test("zorder_layout is invocation-stable (fresh table: append, " +
+       "cluster, statsify, skipping read)") {
+    thrice("zorder_layout")(SnapshotStats.siteWindow(spark, sf, "site_3",
+      graft.SparkEntry.SinceUs, graft.SparkEntry.UntilUs))
   }
 }

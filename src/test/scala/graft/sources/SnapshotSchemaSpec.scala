@@ -6,8 +6,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField}
 
 import graft.SparkSpec
 
-/** [[SchemaEvolution]]'s assertions, re-proven on the snapshot layer
-  * where the merged schema is MANIFEST metadata instead of footer IO.
+/** Schema evolution on the snapshot layer, where the merged schema is
+  * MANIFEST metadata instead of footer IO: NULL-fill, pushdown and
+  * add-only evolution.
   */
 class SnapshotSchemaSpec extends SparkSpec {
 

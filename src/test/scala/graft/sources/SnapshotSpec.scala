@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Gates for the versioned-snapshot table layer — the properties
-  * PartitionSwap's per-partition dir renames cannot give:
+  * per-partition directory rename swaps cannot give:
   *
   *  - a reader that PINNED before a multi-partition mutation commits
   *    still reads its complete OLD version afterward (all-old);
@@ -79,6 +79,20 @@ class SnapshotSpec extends SparkSpec {
     val kept = before.files.toSet.intersect(after.files.toSet)
     assert(stats.retiredFiles == before.files.size - kept.size)
     assert(kept.nonEmpty, "every file rewritten — planning swept the table")
+    // a batch row whose partition value changed MOVES: it leaves its
+    // old partition and lands in one the table did not have yet
+    val one = events.orderBy("event_id").limit(1)
+    val key = one.head().getAs[Long]("event_id")
+    val oldDir = "date=" + one.select(col("date").cast("string")).head().getString(0)
+    val moved = SnapshotOps.upsert(spark, dir,
+      one.withColumn("event_type", lit("moved"))
+        .withColumn("date", lit("2031-01-01")), "event_id", "date")
+    assert(moved.partitions.toSet == Set(oldDir, "date=2031-01-01"),
+      moved.toString)
+    val rows = Snapshot.read(spark, dir).filter(col("event_id") === key)
+      .select(col("date"), col("event_type")).collect()
+      .map(r => (r.getString(0), r.getString(1)))
+    assert(rows.toSeq == Seq(("2031-01-01", "moved")))
   }
 
   test("delete erases keys; compact folds small files; both commit " +
@@ -1007,5 +1021,42 @@ class SnapshotSpec extends SparkSpec {
         Seq(uPred, ePred))) ==
       ids(Snapshot.read(spark, dir)
         .filter(col("user_id") <= mU / 3 && col("event_id") <= mE / 3)))
+    // LogView rows clustered on (site bucket, hour): a site predicate
+    // and a time window each prune, together they prune more than the
+    // time window alone, and the zorder_layout read is exact
+    val (lo, hi) = (graft.SparkEntry.SinceUs, graft.SparkEntry.UntilUs)
+    val st = SnapshotStats.siteTimeTable(spark, sf01)
+    val sb = SnapshotStats.siteBucketOf(spark, "site_3").toString
+    val sPred = ("sb", Some(sb), Some(sb))
+    val tPred = ("timestamp", Some(lo.toString), Some(hi.toString))
+    val (keptS, totalST) = SnapshotStats.skipPlanMulti(spark, st, Seq(sPred))
+    val (keptT, _) = SnapshotStats.skipPlanMulti(spark, st, Seq(tPred))
+    val (keptST, _) = SnapshotStats.skipPlanMulti(spark, st, Seq(sPred, tPred))
+    assert(keptS.size < totalST && keptT.size < totalST,
+      s"site kept ${keptS.size}, time kept ${keptT.size} of $totalST")
+    assert(keptST.nonEmpty && keptST.size < keptT.size &&
+      keptST.size <= keptS.size, s"both kept ${keptST.size}")
+    val window = graft.logs.LogView(spark, sf01).filter(col("site") === "site_3" &&
+      col("timestamp") >= lo && col("timestamp") <= hi)
+    val got = SnapshotStats.siteWindow(spark, sf01, "site_3", lo, hi)
+    assert(got.count() == window.count() && window.count() > 0)
+    assert(got.exceptAll(window).isEmpty && window.exceptAll(got).isEmpty)
+  }
+
+  test("morton interleave: bit i of a at 2i, bit i of b at 2i+1, clamped") {
+    import spark.implicits._
+    val in = Seq((0L, 0L), (1L, 0L), (0L, 1L), (3L, 5L),
+      (0x1fffffL, 0x1fffffL), (1L << 40, 2L)) // beyond 21 bits clamps
+    val rows = in.toDF("a", "b")
+      .select(SnapshotOps.interleave(col("a"), col("b")).as("z"))
+      .collect().map(_.getLong(0))
+    def ref(a: Long, b: Long): Long = {
+      val cap = (1L << 21) - 1
+      val (x, y) = (math.min(a, cap), math.min(b, cap))
+      (0 until 21).foldLeft(0L)((acc, i) =>
+        acc | (((x >> i) & 1L) << (2 * i)) | (((y >> i) & 1L) << (2 * i + 1)))
+    }
+    val want = in.map((ref _).tupled)
+    assert(rows.toSeq == want, s"${rows.toSeq} vs $want")
   }
 }
