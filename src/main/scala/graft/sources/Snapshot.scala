@@ -1,8 +1,11 @@
 package graft.sources
 
+import java.net.{URLDecoder, URLEncoder}
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Versioned snapshot commits over a partitioned parquet layout — the
   * table-format layer behind every graft table mutation. It closes the
@@ -16,8 +19,12 @@ import org.apache.spark.sql.functions._
   *    subdirs of the partition dirs) and leaves the old ones in
   *    place until vacuum.
   *  - **One manifest per version** (`_graft_snapshots/vNNNNNNNN
-  *    .manifest`, one relative file path per line) lists the COMPLETE
-  *    live file set of that version.
+  *    .manifest`) lists the COMPLETE live file set of that version
+  *    and declares the table's schema (a `#schema=` line). Readers
+  *    and writers scan under that schema ([[scan]]) and never infer
+  *    one from a footer: [[convert]] and a bootstrap
+  *    [[SnapshotOps.append]] record it, every later commit carries it
+  *    forward, and [[commit]] cannot write a root without one.
   *  - **Commit is one atomic rename**: the next manifest is staged as
   *    a hidden tmp file and renamed into its final name — the rename
   *    IS the commit point. Rename-without-overwrite is atomic on
@@ -59,7 +66,7 @@ import org.apache.spark.sql.functions._
   * the earlier flat manifest rewrote ~100 MB per commit. Readers
   * resolve the root once and can PRUNE shard reads to the partitions
   * a query touches (the manifest-level analogue of partition
-  * pruning); legacy flat manifests (bare file lines) stay readable.
+  * pruning).
   * Mutations stay partition-local copy-on-write; commit cost is
   * O(churn), not O(data); readers plan from the manifest without
   * listing a single directory.
@@ -91,19 +98,21 @@ object Snapshot {
   def currentVersion(fs: FileSystem, root: Path): Option[Long] =
     versions(fs, root).lastOption
 
-  private def manifestLines(fs: FileSystem, root: Path, v: Long): Seq[String] = {
-    val in = fs.open(new Path(metaPath(root), manifestName(v)))
+  private def readLines(fs: FileSystem, p: Path): Seq[String] = {
+    val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
       .map(_.trim).filter(_.nonEmpty).toList
     finally in.close()
   }
 
+  private def manifestLines(fs: FileSystem, root: Path, v: Long): Seq[String] =
+    readLines(fs, new Path(metaPath(root), manifestName(v)))
+
   private def shardsDir(root: Path) = new Path(metaPath(root), "shards")
 
-  /** Root-line format: `#…` = tag; `>\t<part>\t<shard>` = pointer to
-    * an immutable per-partition shard file under `shards/`; anything
-    * else = a direct file path (legacy flat manifest — still
-    * readable, migrated to shards by the next commit).
+  /** Root-line format: `#schema=` = the declared schema; any other
+    * `#…` = tag; `>\t<part>\t<shard>` = pointer to an immutable
+    * per-partition shard file under `shards/`.
     *
     * Shard-line format: the relative file path, optionally followed by
     * tab-separated per-column zone-map fields (`col:type:min:max`,
@@ -113,21 +122,33 @@ object Snapshot {
     */
   private def isShardRef(l: String) = l.startsWith(">")
 
+  private val SchemaTag = "#schema="
+
+  private def encodeSchema(schema: StructType): String =
+    SchemaTag + URLEncoder.encode(schema.json, "UTF-8")
+
+  private def schemaIn(lines: Seq[String], root: Path, v: Long): StructType =
+    lines.find(_.startsWith(SchemaTag)).map { l =>
+      DataType.fromJson(URLDecoder.decode(l.stripPrefix(SchemaTag), "UTF-8"))
+        .asInstanceOf[StructType]
+    }.getOrElse(throw new IllegalStateException(
+      s"v$v of $root declares no schema"))
+
+  /** The declared schema of a committed version. */
+  def schemaOf(fs: FileSystem, root: Path, v: Long): StructType =
+    schemaIn(manifestLines(fs, root, v), root, v)
+
   private[sources] def pathOfLine(l: String): String =
     l.takeWhile(_ != '\t')
 
   private def readShard(fs: FileSystem, root: Path,
-                        shard: String): Seq[String] = {
-    val in = fs.open(new Path(shardsDir(root), shard))
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .map(_.trim).filter(_.nonEmpty).toList
-    finally in.close()
-  }
+                        shard: String): Seq[String] =
+    readLines(fs, new Path(shardsDir(root), shard))
 
-  /** The (partition, shard-file) pointers of a version's root —
-    * empty for legacy flat manifests. This is the planning surface a
-    * reader prunes on: a query touching k partitions resolves the
-    * root (O(partitions)) and reads exactly k shard files.
+  /** The (partition, shard-file) pointers of a version's root. This
+    * is the planning surface a reader prunes on: a query touching k
+    * partitions resolves the root (O(partitions)) and reads exactly k
+    * shard files.
     */
   private[graft] def shardRefsOf(fs: FileSystem, root: Path,
                                  v: Long): Seq[(String, String)] =
@@ -136,10 +157,10 @@ object Snapshot {
       (parts(1), parts(2))
     }
 
-  /** The file list (relative paths) of one committed version: direct
-    * lines plus the contents of every referenced shard, in root-line
-    * order (partitions sorted at commit time, file order stable
-    * within a partition). Zone-map suffixes are stripped — use
+  /** The file list (relative paths) of one committed version: the
+    * contents of every referenced shard, in root-line order
+    * (partitions sorted at commit time, file order stable within a
+    * partition). Zone-map suffixes are stripped — use
     * [[linesOf]] for the raw stats-bearing lines.
     */
   def filesOf(fs: FileSystem, root: Path, v: Long): Seq[String] =
@@ -151,25 +172,21 @@ object Snapshot {
     * [[filesOf]].
     */
   def linesOf(fs: FileSystem, root: Path, v: Long): Seq[String] =
-    manifestLines(fs, root, v).filterNot(_.startsWith("#")).flatMap { l =>
-      if (isShardRef(l)) readShard(fs, root, l.split('\t')(2))
-      else Seq(l)
-    }
+    shardLines(fs, root, manifestLines(fs, root, v))
+
+  private def shardLines(fs: FileSystem, root: Path,
+                         rootLines: Seq[String]): Seq[String] =
+    rootLines.filter(isShardRef)
+      .flatMap(l => readShard(fs, root, l.split('\t')(2)))
 
   /** Shard-pruned file list: only partitions satisfying `keep` are
     * resolved — O(root + selected shards) manifest IO, the
     * manifest-level partition pruning a 100 TB reader plans with.
-    * Legacy direct lines are filtered by their path prefix.
     */
   def filesOfPruned(fs: FileSystem, root: Path, v: Long)
                    (keep: String => Boolean): Seq[String] =
-    manifestLines(fs, root, v).filterNot(_.startsWith("#")).flatMap { l =>
-      if (isShardRef(l)) {
-        val parts = l.split('\t')
-        if (keep(parts(1))) readShard(fs, root, parts(2)).map(pathOfLine)
-        else Seq.empty
-      } else if (keep(l.takeWhile(c => c != '/' && c != '\t')))
-        Seq(pathOfLine(l))
+    shardRefsOf(fs, root, v).flatMap { case (part, shard) =>
+      if (keep(part)) readShard(fs, root, shard).map(pathOfLine)
       else Seq.empty
     }
 
@@ -178,23 +195,42 @@ object Snapshot {
     * so a replayed micro-batch commits nothing twice). Mutations copy
     * tags forward, so the replay-protection window is exactly the
     * vacuum retention — the bound every table format's
-    * transaction-id tracking documents.
+    * transaction-id tracking documents. The schema line is not a tag
+    * ([[schemaOf]]); [[commit]] writes it from its own argument.
     */
   def tagsOf(fs: FileSystem, root: Path, v: Long): Seq[String] =
-    manifestLines(fs, root, v).filter(_.startsWith("#"))
+    manifestLines(fs, root, v)
+      .filter(l => l.startsWith("#") && !l.startsWith(SchemaTag))
 
   /** A pinned snapshot: resolved ONCE; every read against it scans
-    * exactly these files regardless of later commits.
+    * exactly these files, under this schema, regardless of later
+    * commits.
     */
-  case class Pin(version: Long, files: Seq[String])
+  case class Pin(version: Long, files: Seq[String], schema: StructType)
 
-  def pin(spark: SparkSession, dir: String): Pin = {
+  /** Version, files and schema of committed version `v`, from one
+    * read of its root.
+    */
+  private[sources] def pinOf(fs: FileSystem, root: Path, v: Long): Pin = {
+    val lines = manifestLines(fs, root, v)
+    Pin(v, shardLines(fs, root, lines).map(pathOfLine), schemaIn(lines, root, v))
+  }
+
+  /** The file system, root and current version of snapshot table
+    * `dir`; fails loudly on a directory no commit has reached.
+    */
+  private[sources] def current(spark: SparkSession,
+                               dir: String): (FileSystem, Path, Long) = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val v = currentVersion(fs, root).getOrElse(
+    (fs, root, currentVersion(fs, root).getOrElse(
       throw new IllegalStateException(
-        s"$dir is not snapshot-managed (no $MetaDir manifest); run convert"))
-    Pin(v, filesOf(fs, root, v))
+        s"$dir is not snapshot-managed (no $MetaDir manifest); run convert")))
+  }
+
+  def pin(spark: SparkSession, dir: String): Pin = {
+    val (fs, root, v) = current(spark, dir)
+    pinOf(fs, root, v)
   }
 
   /** Pin an EXPLICIT committed version — the time-travel primitive:
@@ -211,22 +247,31 @@ object Snapshot {
     require(vs.contains(version),
       s"version $version of $dir is not committed or has been vacuumed " +
         s"(live: ${vs.mkString(", ")})")
-    Pin(version, filesOf(fs, root, version))
+    pinOf(fs, root, version)
   }
 
   /** Time-travel read: the table exactly as of `version`. */
   def readAt(spark: SparkSession, dir: String, version: Long): DataFrame =
     readPin(spark, dir, pinAt(spark, dir, version))
 
-  /** Read the pinned file set. An empty table (possible after a
-    * delete) reads as an empty frame only through [[readPin]] callers
-    * that tolerate it; parquet needs ≥1 file for schema, so empty
-    * manifests are rejected where they cannot occur by construction.
+  /** The one scan of snapshot data files: `files` (relative to `dir`)
+    * under the declared `schema`. No footer is read at planning time,
+    * a file that predates a declared column yields NULL for it, and an
+    * empty file list reads as an empty frame of that schema. Every
+    * pinned read, mutation, compaction, clustering, change set, stats
+    * job and skipping read scans through here.
     */
-  def readPin(spark: SparkSession, dir: String, p: Pin): DataFrame = {
-    require(p.files.nonEmpty, s"snapshot v${p.version} of $dir is empty")
-    spark.read.parquet(p.files.map(f => s"$dir/$f"): _*)
-  }
+  def scan(spark: SparkSession, dir: String, schema: StructType,
+           files: Seq[String]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).parquet(files.map(f => s"$dir/$f"): _*)
+
+  /** Read the pinned file set under the pin's schema. An empty table
+    * (possible after a delete) reads as an empty frame.
+    */
+  def readPin(spark: SparkSession, dir: String, p: Pin): DataFrame =
+    scan(spark, dir, p.schema, p.files)
 
   /** Snapshot-isolated read: resolve the current version once, scan
     * exactly its files.
@@ -242,7 +287,8 @@ object Snapshot {
     files.groupBy(f => f.takeWhile(_ != '/')).toSeq.sortBy(_._1)
 
   /** Commit `files` (relative paths — the complete live set of the
-    * new version) as `base + 1`. Returns the committed version.
+    * new version) as `base + 1`, declaring `schema`. Returns the
+    * committed version.
     *
     * The file list is written SHARDED: one immutable shard file per
     * partition under `shards/` (writer-unique names — concurrent
@@ -267,7 +313,7 @@ object Snapshot {
     * without the mutation recomputing them for untouched files).
     */
   def commit(fs: FileSystem, root: Path, files: Seq[String],
-             base: Long, tags: Seq[String] = Nil,
+             base: Long, schema: StructType, tags: Seq[String] = Nil,
              baseFiles: Option[Seq[String]] = None,
              stats: Map[String, String] = Map.empty,
              refsFrom: Option[Long] = None): Long = {
@@ -317,7 +363,8 @@ object Snapshot {
     val tmp = new Path(meta,
       s".tmp.${manifestName(v)}.${java.util.UUID.randomUUID}")
     val out = fs.create(tmp, false)
-    try out.write(((tags ++ refLines).mkString("\n") + "\n").getBytes("UTF-8"))
+    val lines = (encodeSchema(schema) +: tags) ++ refLines
+    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
     val fin = new Path(meta, manifestName(v))
     if (!fs.rename(tmp, fin)) {
@@ -448,7 +495,10 @@ object Snapshot {
     * write job (per-dir tagged subplans unioned), then one metadata
     * RENAME per partition, NOT a sequential driver-looped write job
     * per partition dir (a 365-partition migration is one job + 365
-    * renames, not 365 jobs). Returns v1.
+    * renames, not 365 jobs). v1 declares the schema of one legacy
+    * part dir's footer plus the string partition column — the one
+    * footer read of the snapshot layer, where a foreign layout enters.
+    * Returns v1.
     */
   def convert(spark: SparkSession, dir: String, partCol: String): Long = {
     val root = new Path(dir)
@@ -456,41 +506,42 @@ object Snapshot {
     require(currentVersion(fs, root).isEmpty, s"$dir is already converted")
     val parts = fs.listStatus(root).filter(_.isDirectory)
       .map(_.getPath.getName).filter(_.contains("=")).sorted.toSeq
+    require(parts.nonEmpty, s"$dir has no partition dirs to convert")
     val files = scala.collection.mutable.ArrayBuffer.empty[String]
     val legacy = scala.collection.mutable.ArrayBuffer.empty[Path]
-    if (parts.nonEmpty) {
-      val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      // writer-unique stage + destination names, same reason as
-      // SnapshotOps.stageAndPlace: a racing convert must never rename
-      // over dirs another writer placed (the loser's commit conflicts
-      // and its uniquely-named orphans are vacuum's to reap)
-      val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val stage = s".snap_convert_stage_$token"
-      val sch = spark.read.parquet(new Path(root, parts.head).toString).schema
-      parts.map { part =>
-        val value = esc.unescapePathName(part.substring(part.indexOf('=') + 1))
-        spark.read.schema(sch).parquet(new Path(root, part).toString)
-          .withColumn(partCol, lit(value))
-          .withColumn("__snap_part", lit(part))
-      }.reduce(_ unionByName _)
-        .write.mode("overwrite").partitionBy("__snap_part")
-        .parquet(s"$dir/$stage")
-      parts.foreach { part =>
-        val src = new Path(root,
-          s"$stage/__snap_part=${esc.escapePathName(part)}")
-        if (fs.exists(src)) {
-          val sub = s"$part/u1_$token"
-          val dst = new Path(root, sub)
-          if (!fs.rename(src, dst))
-            throw new java.io.IOException(s"convert placement failed for $dst")
-          files ++= dataFilesUnder(fs, root, sub)
-        }
-        legacy ++= fs.listStatus(new Path(root, part)).filter(_.isFile)
-          .filter(_.getPath.getName.endsWith(".parquet")).map(_.getPath)
+    val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    // writer-unique stage + destination names, same reason as
+    // SnapshotOps.stageAndPlace: a racing convert must never rename
+    // over dirs another writer placed (the loser's commit conflicts
+    // and its uniquely-named orphans are vacuum's to reap)
+    val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+    val stage = s".snap_convert_stage_$token"
+    val sch = spark.read.parquet(new Path(root, parts.head).toString).schema
+    val rows = parts.map { part =>
+      val value = esc.unescapePathName(part.substring(part.indexOf('=') + 1))
+      spark.read.schema(sch).parquet(new Path(root, part).toString)
+        .withColumn(partCol, lit(value))
+        .withColumn("__snap_part", lit(part))
+    }.reduce(_ unionByName _)
+    rows.write.mode("overwrite").partitionBy("__snap_part")
+      .parquet(s"$dir/$stage")
+    parts.foreach { part =>
+      val src = new Path(root,
+        s"$stage/__snap_part=${esc.escapePathName(part)}")
+      if (fs.exists(src)) {
+        val sub = s"$part/u1_$token"
+        val dst = new Path(root, sub)
+        if (!fs.rename(src, dst))
+          throw new java.io.IOException(s"convert placement failed for $dst")
+        files ++= dataFilesUnder(fs, root, sub)
       }
-      fs.delete(new Path(root, stage), true)
+      legacy ++= fs.listStatus(new Path(root, part)).filter(_.isFile)
+        .filter(_.getPath.getName.endsWith(".parquet")).map(_.getPath)
     }
-    val v = commit(fs, root, files.toSeq, 0L)
+    fs.delete(new Path(root, stage), true)
+    // as a footer read returns it: Spark writes every field nullable
+    val v = commit(fs, root, files.toSeq, 0L,
+      rows.drop("__snap_part").schema.toNullable)
     legacy.foreach(p => fs.delete(p, false))
     v
   }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 
@@ -13,7 +14,9 @@ import graft.Tables
   *  - plan against the pinned manifest (never a directory listing):
   *    the files actually holding affected keys come from one
   *    key-pruned scan with `input_file_name()`, so an untouched file
-  *    is neither read twice nor rewritten;
+  *    is neither read twice nor rewritten. Every scan runs under the
+  *    pinned schema ([[Snapshot.scan]]), so a rewrite keeps every
+  *    declared column, evolved ones included;
   *  - rewrite only those files (plus one new file set per partition
   *    receiving inserts) in ONE staged `partitionBy` write job — the
   *    per-partition subplans (kept-rows anti-join ∪ incoming) are
@@ -81,14 +84,11 @@ object SnapshotOps {
 
   /** `#appended@VVVVVVVV=key` — the tag line format carrying the
     * version that introduced the key, so expiry needs no side state.
-    * Legacy un-versioned `#appended=key` lines are re-stamped with the
-    * current base version on first carry-forward and then age out
-    * normally.
     */
   private def mkTag(version: Long, key: String): String =
     f"#appended@$version%08d=$key"
 
-  private val TagRe = "^#appended(?:@(\\d+))?=(.*)$".r
+  private val TagRe = "^#appended@(\\d+)=(.*)$".r
 
   private[sources] def tagKeyOf(line: String): Option[String] = line match {
     case TagRe(_, k) => Some(k)
@@ -96,16 +96,13 @@ object SnapshotOps {
   }
 
   /** Drop tags introduced more than [[TagKeepVersions]] commits before
-    * `newVersion`; re-stamp legacy un-versioned tags at `newVersion-1`.
+    * `newVersion`.
     */
   private[sources] def expireTags(tags: Seq[String],
                                   newVersion: Long): Seq[String] =
-    tags.flatMap {
-      case TagRe(v, k) =>
-        val intro = Option(v).map(_.toLong).getOrElse(newVersion - 1)
-        if (intro > newVersion - TagKeepVersions) Some(mkTag(intro, k))
-        else None
-      case other => Some(other) // unknown tag kinds carried as-is
+    tags.filter {
+      case TagRe(v, _) => v.toLong > newVersion - TagKeepVersions
+      case _ => true // unknown tag kinds carried as-is
     }
 
   private def escapePart(v: String): String =
@@ -119,7 +116,9 @@ object SnapshotOps {
     * same-key rows wherever they live (old versions leave their
     * files even when the new row moved partitions); unmatched rows
     * insert into their `partCol` partition. `partCol` is compared as
-    * string (the snapshot data column).
+    * string (the snapshot data column). The batch is aligned to the
+    * table's declared schema by name: a declared column the batch
+    * lacks lands as NULL, and an undeclared one is refused.
     */
   def upsert(spark: SparkSession, dir: String, batch: DataFrame,
              keyCol: String, partCol: String): MutationStats = {
@@ -231,12 +230,10 @@ object SnapshotOps {
     // operators in a single plan, which at a thousand-partition
     // correction feed is a planning-time problem (guide §7.3) and
     // locally re-optimized/codegen'd N identical joins.
-    val sch = spark.read.parquet(s"$dir/${p.files.head}").schema
     val keepBranches = affected.flatMap { part =>
       val partHits = p.files.filter(f => f.startsWith(s"$part/") && hitRels(f))
       if (partHits.isEmpty) None
-      else Some(spark.read.schema(sch)
-        .parquet(partHits.map(f => s"$dir/$f"): _*)
+      else Some(Snapshot.scan(spark, dir, p.schema, partHits)
         .withColumn(StageTag, lit(part)))
     }
     val keep =
@@ -248,8 +245,9 @@ object SnapshotOps {
     // batch lands in (a when-chain would grow the expression tree
     // linearly). Rows with NULL/unknown part values drop, exactly as
     // the previous per-partition equality filters dropped them.
-    val incomingTagged = incoming.map { b =>
+    val incomingTagged = incoming.map { raw =>
       import spark.implicits._
+      val b = alignTo(spark, raw, p.schema)
       val dirByValue = incomingParts.filter(_ != null)
         .map(v => v -> partDirOf(p, v)).distinct
       val routes = dirByValue.toDF("__pv", StageTag)
@@ -272,16 +270,46 @@ object SnapshotOps {
     val newFiles = stageAndPlace(spark, fs, root, dir, affected, out,
       newVersion, layout = df => df.hint("rebalance", StageTag))
     val manifest = p.files.filterNot(hitRels) ++ newFiles
+    val v = commitRewrite(spark, fs, root, dir, p, manifest, newFiles)
+    MutationStats(v, affected, hitRels.size.toLong, newFiles.size.toLong)
+  }
+
+  /** `batch` with exactly the columns of `schema`, by name and in its
+    * order: a declared column the batch lacks comes back NULL, and a
+    * column the schema does not declare is refused (evolve first).
+    */
+  private def alignTo(spark: SparkSession, batch: DataFrame,
+                      schema: StructType): DataFrame = {
+    val same = spark.sessionState.conf.resolver
+    val undeclared = batch.columns.filterNot(c => schema.fieldNames.exists(same(_, c)))
+    require(undeclared.isEmpty,
+      s"batch carries undeclared columns ${undeclared.mkString(", ")}; " +
+        "declare them with SnapshotSchema.evolve first")
+    batch.select(schema.fields.toSeq.map { f =>
+      (if (batch.columns.exists(same(_, f.name))) col(f.name) else lit(null))
+        .cast(f.dataType).as(f.name)
+    }: _*)
+  }
+
+  /** The commit every rewrite shares: collect the maintained stats of
+    * the new files, commit `manifest` on top of pin `p` under its
+    * schema with the base tags carried forward, then vacuum. Returns
+    * the committed version.
+    */
+  private def commitRewrite(spark: SparkSession, fs: FileSystem, root: Path,
+                            dir: String, p: Snapshot.Pin,
+                            manifest: Seq[String],
+                            newFiles: Seq[String]): Long = {
     val baseTags = Snapshot.tagsOf(fs, root, p.version)
-    val newStats = SnapshotStats.collectStats(spark, dir, newFiles,
+    val newStats = SnapshotStats.collectStats(spark, dir, newFiles, p.schema,
       SnapshotStats.statsColsOf(baseTags),
       SnapshotStats.bloomColsOf(baseTags))
     beforeCommit()
-    val v = Snapshot.commit(fs, root, manifest, p.version,
-      expireTags(baseTags, newVersion),
+    val v = Snapshot.commit(fs, root, manifest, p.version, p.schema,
+      expireTags(baseTags, p.version + 1),
       baseFiles = Some(p.files), stats = newStats)
     Snapshot.vacuum(fs, root)
-    MutationStats(v, affected, hitRels.size.toLong, newFiles.size.toLong)
+    v
   }
 
   /** The staged-write placement shared by every mutation: union the
@@ -367,29 +395,25 @@ object SnapshotOps {
     val byPart = p.files.groupBy(f => f.substring(0, f.indexOf('/')))
     val affected = byPart.filter(_._2.size > maxFiles).keys.toSeq.sorted
     if (affected.isEmpty) return MutationStats(p.version, Nil, 0L, 0L)
-    val newVersion = p.version + 1
-    val sch = spark.read.parquet(s"$dir/${p.files.head}").schema
-    val tagged = affected.map { part =>
-      spark.read.schema(sch)
-        .parquet(byPart(part).map(f => s"$dir/$f"): _*)
-        .withColumn(StageTag, lit(part))
-    }
     val newFiles = stageAndPlace(spark, fs, root, dir, affected,
-      Some(tagged.reduce(_ unionByName _)), newVersion,
-      layout = df => df.repartition(tagged.size, col(StageTag)))
+      Some(taggedParts(spark, dir, p, byPart, affected)), p.version + 1,
+      layout = df => df.repartition(affected.size, col(StageTag)))
     val retired = affected.flatMap(byPart).toSet
-    val manifest = p.files.filterNot(retired) ++ newFiles
-    val baseTags = Snapshot.tagsOf(fs, root, p.version)
-    val newStats = SnapshotStats.collectStats(spark, dir, newFiles,
-      SnapshotStats.statsColsOf(baseTags),
-      SnapshotStats.bloomColsOf(baseTags))
-    beforeCommit()
-    val v = Snapshot.commit(fs, root, manifest, p.version,
-      expireTags(baseTags, newVersion),
-      baseFiles = Some(p.files), stats = newStats)
-    Snapshot.vacuum(fs, root)
+    val v = commitRewrite(spark, fs, root, dir, p,
+      p.files.filterNot(retired) ++ newFiles, newFiles)
     MutationStats(v, affected, retired.size.toLong, newFiles.size.toLong)
   }
+
+  /** The rows of `parts` under pin `p`'s schema, each tagged with its
+    * partition dir — the input of a whole-partition rewrite.
+    */
+  private def taggedParts(spark: SparkSession, dir: String, p: Snapshot.Pin,
+                          byPart: Map[String, Seq[String]],
+                          parts: Seq[String]): DataFrame =
+    parts.map { part =>
+      Snapshot.scan(spark, dir, p.schema, byPart(part))
+        .withColumn(StageTag, lit(part))
+    }.reduce(_ unionByName _)
 
   /** Bit-interleave two non-negative bucket columns into the Morton
     * code: bit i of `a` lands at 2i, bit i of `b` at 2i+1. One
@@ -452,30 +476,16 @@ object SnapshotOps {
     beforeStage()
     val byPart = p.files.groupBy(f => f.substring(0, f.indexOf('/')))
     val affected = byPart.keys.toSeq.sorted
-    val newVersion = p.version + 1
-    val sch = spark.read.parquet(s"$dir/${p.files.head}").schema
-    val tagged = affected.map { part =>
-      spark.read.schema(sch)
-        .parquet(byPart(part).map(f => s"$dir/$f"): _*)
-        .withColumn(StageTag, lit(part))
-    }
+    if (affected.isEmpty) return MutationStats(p.version, Nil, 0L, 0L)
     val z = interleave(col(zCols._1), col(zCols._2), bits)
     val nRanges = math.max(1, affected.size * filesPerPartition)
     val newFiles = stageAndPlace(spark, fs, root, dir, affected,
-      Some(tagged.reduce(_ unionByName _)), newVersion,
+      Some(taggedParts(spark, dir, p, byPart, affected)), p.version + 1,
       layout = df => df.withColumn("__z", z)
         .repartitionByRange(nRanges, col(StageTag), col("__z"))
         .sortWithinPartitions(col(StageTag), col("__z"))
         .drop("__z"))
-    val baseTags = Snapshot.tagsOf(fs, root, p.version)
-    val newStats = SnapshotStats.collectStats(spark, dir, newFiles,
-      SnapshotStats.statsColsOf(baseTags),
-      SnapshotStats.bloomColsOf(baseTags))
-    beforeCommit()
-    val v = Snapshot.commit(fs, root, newFiles, p.version,
-      expireTags(baseTags, newVersion),
-      baseFiles = Some(p.files), stats = newStats)
-    Snapshot.vacuum(fs, root)
+    val v = commitRewrite(spark, fs, root, dir, p, newFiles, newFiles)
     MutationStats(v, affected, p.files.size.toLong, newFiles.size.toLong)
   }
 
@@ -505,7 +515,7 @@ object SnapshotOps {
         // shard pointers carry from the TARGET version (its file
         // lists are what we re-commit — stats travel with them)
         val v = Snapshot.commit(fs, root, target.files, p.version,
-          Snapshot.tagsOf(fs, root, target.version),
+          target.schema, Snapshot.tagsOf(fs, root, target.version),
           baseFiles = Some(target.files),
           refsFrom = Some(target.version))
         Snapshot.vacuum(fs, root)
@@ -585,17 +595,16 @@ object SnapshotOps {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     Snapshot.recoverMeta(fs, root)
-    val (p, tags) = Snapshot.currentVersion(fs, root) match {
-      case Some(v) =>
-        (Snapshot.Pin(v, Snapshot.filesOf(fs, root, v)),
-          Snapshot.tagsOf(fs, root, v))
-      case None => (Snapshot.Pin(0L, Nil), Nil)
-    }
+    val b = batch.withColumn(partCol, col(partCol).cast("string"))
+    // a bootstrap declares its batch's schema as a footer read returns
+    // it: Spark writes every field nullable
+    val p = Snapshot.currentVersion(fs, root).map(Snapshot.pinOf(fs, root, _))
+      .getOrElse(Snapshot.Pin(0L, Nil, b.schema.toNullable))
+    val tags = if (p.version == 0L) Nil else Snapshot.tagsOf(fs, root, p.version)
     val liveKeys = tags.flatMap(tagKeyOf).toSet
     if (idempotencyKey.exists(liveKeys))
       return MutationStats(p.version, Nil, 0L, 0L)
     beforeStage()
-    val b = batch.withColumn(partCol, col(partCol).cast("string"))
     val parts = b.select(partCol).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
     if (parts.isEmpty) return MutationStats(p.version, Nil, 0L, 0L)
@@ -619,12 +628,12 @@ object SnapshotOps {
     val newFiles = stageAndPlace(spark, fs, root, dir, destParts,
       Some(taggedUnion), newVersion,
       layout = df => df.hint("rebalance", StageTag))
-    val newStats = SnapshotStats.collectStats(spark, dir, newFiles,
+    val newStats = SnapshotStats.collectStats(spark, dir, newFiles, p.schema,
       SnapshotStats.statsColsOf(tags),
       SnapshotStats.bloomColsOf(tags))
     beforeCommit()
     val newTag = idempotencyKey.map(k => mkTag(newVersion, k))
-    val v = Snapshot.commit(fs, root, p.files ++ newFiles, p.version,
+    val v = Snapshot.commit(fs, root, p.files ++ newFiles, p.version, p.schema,
       expireTags(tags, newVersion) ++ newTag ++ extraTags,
       baseFiles = Some(p.files), stats = newStats)
     Snapshot.vacuum(fs, root)
@@ -853,7 +862,7 @@ object SnapshotOps {
     * At 100 TB this is the downstream-consumer primitive: a nightly
     * consumer reads the delta between two builds, not the corpus.
     *
-    * Schema resolves from whichever side has files — `to` may be an
+    * Both sides scan under `to`'s declared schema — `to` may be an
     * EMPTY manifest (a compliance delete can legally erase the whole
     * table) and the change set is then all-removes, not a crash.
     */
@@ -863,19 +872,11 @@ object SnapshotOps {
     val pt = Snapshot.pinAt(spark, tableDir, to)
     val retired = pf.files.filterNot(pt.files.toSet)
     val fresh = pt.files.filterNot(pf.files.toSet)
-    val schemaFile = pt.files.headOption.orElse(pf.files.headOption)
-      .getOrElse(throw new IllegalArgumentException(
-        s"both v$from and v$to of $tableDir are empty — no change set"))
-    val sch = spark.read.parquet(s"$tableDir/$schemaFile").schema
-    def readRels(rels: Seq[String]): DataFrame =
-      if (rels.isEmpty)
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](), sch)
-      else spark.read.schema(sch)
-        .parquet(rels.map(f => s"$tableDir/$f"): _*)
-    val cols = sch.fieldNames.toSeq.map(col)
-    readRels(retired).withColumn("__w", lit(-1L))
-      .unionByName(readRels(fresh).withColumn("__w", lit(1L)))
+    val cols = pt.schema.fieldNames.toSeq.map(col)
+    Snapshot.scan(spark, tableDir, pt.schema, retired)
+      .withColumn("__w", lit(-1L))
+      .unionByName(Snapshot.scan(spark, tableDir, pt.schema, fresh)
+        .withColumn("__w", lit(1L)))
       .groupBy(cols: _*)
       .agg(sum(col("__w")).as("__net"))
       .filter(col("__net") =!= 0L)

@@ -1,37 +1,32 @@
 package graft.sources
 
-import java.net.{URLDecoder, URLEncoder}
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.Tables
 
-/** Schema evolution ON the snapshot table layer — the authoritative
-  * merged schema lives in the MANIFEST ROOT (a `#schema=` tag), not in
-  * file footers: Spark's `mergeSchema` reads every footer at planning
-  * time, a catalog/manifest schema is O(1). Same design center as
-  * Delta's metadata action / Iceberg's schema in table metadata,
-  * reduced to this layer's primitives:
+/** Schema evolution ON the snapshot table layer. Every version root
+  * declares the table's schema (see [[Snapshot]]), so evolution is a
+  * metadata change and reads never consult a footer. Same design
+  * center as Delta's metadata action / Iceberg's schema in table
+  * metadata, reduced to this layer's primitives:
   *
   *  - **Add-column = one metadata-only commit.** [[evolve]] re-commits
-  *    the CURRENT file set with the widened schema tag — every shard
+  *    the CURRENT file set with the widened schema — every shard
   *    pointer is reused (the base file set is unchanged), no data file
   *    is touched, commit IO is O(partitions). Only ADDS are accepted:
   *    renames/retypes need a rewrite and are refused loudly.
-  *  - **The tag rides the normal carry-forward.** Mutations copy
-  *    unknown `#` tags verbatim ([[SnapshotOps.expireTags]] carries
-  *    non-versioned kinds as-is), so appends/upserts/compactions after
-  *    an evolve all keep the declared schema without knowing about it.
-  *  - **Merged reads NULL-fill from the declared schema.**
-  *    [[readMerged]] passes the manifest schema to the parquet scan
-  *    (`spark.read.schema(...)`) — files that predate a column yield
-  *    NULL for it (never a positional mis-bind), files that carry it
-  *    serve it, and NO footer is read at planning time. Predicates on
-  *    common columns still push down to every file's scan
-  *    (spec-asserted — evolution must not cost pushdown).
+  *  - **Every later commit carries the schema forward.** Appends,
+  *    upserts, deletes, compactions and clusterings commit under the
+  *    schema they pinned and rewrite kept rows under it, so an evolved
+  *    column survives mutations that know nothing about it; an upsert
+  *    batch lacking the column lands it as NULL.
+  *  - **Reads NULL-fill from the declared schema.** [[Snapshot.read]]
+  *    scans under it — files that predate a column yield NULL for it
+  *    (never a positional mis-bind), files that carry it serve it, and
+  *    predicates on common columns still push down to every file's
+  *    scan (spec-asserted — evolution must not cost pushdown).
   *
   * Reference behavior: doc/index.rst's append-only log model plus the
   * add-column evolution every table format ships. Two gates pin the
@@ -42,57 +37,20 @@ import graft.Tables
   */
 object SnapshotSchema {
 
-  private val SchemaTag = "#schema="
-
-  private[sources] def encodeSchema(schema: StructType): String =
-    SchemaTag + URLEncoder.encode(schema.json, "UTF-8")
-
-  /** The declared schema of a committed version, if any. */
-  def schemaOf(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-               v: Long): Option[StructType] =
-    Snapshot.tagsOf(fs, root, v).collectFirst {
-      case t if t.startsWith(SchemaTag) =>
-        DataType.fromJson(URLDecoder.decode(t.stripPrefix(SchemaTag), "UTF-8"))
-          .asInstanceOf[StructType]
-    }
-
-  /** The table's authoritative schema: the manifest tag when declared,
-    * else derived once from one data file's footer (pre-evolution
-    * tables) — the fallback a production catalog would backfill.
-    */
-  def tableSchema(spark: SparkSession, dir: String): StructType = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val p = Snapshot.pin(spark, dir)
-    schemaOf(fs, root, p.version).getOrElse {
-      require(p.files.nonEmpty,
-        s"$dir has no declared schema and no data files to derive one from")
-      spark.read.parquet(s"$dir/${p.files.head}").schema
-    }
-  }
-
   /** Declare added columns: one METADATA-ONLY commit carrying the
-    * widened `#schema=` tag — the current file set is re-committed
-    * with every partition's shard pointer reused, so no data file is
-    * read, written or rewritten. Existing columns must keep their
-    * exact type (add-only is the one evolution that needs no rewrite);
+    * widened schema — the current file set is re-committed with every
+    * partition's shard pointer reused, so no data file is read,
+    * written or rewritten. Existing columns must keep their exact type
+    * (add-only is the one evolution that needs no rewrite);
     * re-declaring an existing column identically is a no-op add.
     * Returns the committed version.
     */
   def evolve(spark: SparkSession, dir: String,
              addCols: Seq[StructField]): Long = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     SnapshotOps.retryConflicts(3) {
-      val cur = Snapshot.currentVersion(fs, root).getOrElse(
-        throw new IllegalStateException(s"$dir is not snapshot-managed"))
-      val base = schemaOf(fs, root, cur).getOrElse {
-        val files = Snapshot.filesOf(fs, root, cur)
-        require(files.nonEmpty,
-          s"$dir has no declared schema and no data files to derive one from")
-        spark.read.parquet(s"$dir/${files.head}").schema
-      }
-      val byName = base.fields.map(f => f.name -> f).toMap
+      val (fs, root, v) = Snapshot.current(spark, dir)
+      val p = Snapshot.pinOf(fs, root, v)
+      val byName = p.schema.fields.map(f => f.name -> f).toMap
       addCols.foreach { f =>
         byName.get(f.name).foreach { existing =>
           require(existing.dataType == f.dataType,
@@ -101,27 +59,12 @@ object SnapshotSchema {
         }
       }
       val merged = StructType(
-        base.fields ++ addCols.filterNot(f => byName.contains(f.name)))
-      val files = Snapshot.filesOf(fs, root, cur)
-      val tags = Snapshot.tagsOf(fs, root, cur)
-        .filterNot(_.startsWith(SchemaTag)) :+ encodeSchema(merged)
+        p.schema.fields ++ addCols.filterNot(f => byName.contains(f.name)))
       // baseFiles = the same set → every shard pointer reuses; the
       // commit writes ONE root file
-      Snapshot.commit(fs, root, files, cur, tags,
-        baseFiles = Some(files))
+      Snapshot.commit(fs, root, p.files, p.version, merged,
+        Snapshot.tagsOf(fs, root, p.version), baseFiles = Some(p.files))
     }
-  }
-
-  /** Snapshot-isolated merged read: scan the pinned file set under
-    * the DECLARED schema — columns a file predates come back NULL, no
-    * footer is consulted at planning time, and common-column
-    * predicates push down into every file's scan.
-    */
-  def readMerged(spark: SparkSession, dir: String): DataFrame = {
-    val p = Snapshot.pin(spark, dir)
-    require(p.files.nonEmpty, s"snapshot v${p.version} of $dir is empty")
-    spark.read.schema(tableSchema(spark, dir))
-      .parquet(p.files.map(f => s"$dir/$f"): _*)
   }
 
   // ---- gate fixture + query ----
@@ -162,14 +105,14 @@ object SnapshotSchema {
         tmp
       })
 
-  /** Gate query: the merged rollup over all three generations — the
+  /** Gate query: the rollup over all three generations — the
     * NULL-fill semantics are IN the output (null counts + coalesced
     * sums per event_type/date), so the hash gate proves old files
     * NULL-fill, new files serve the column, and nothing mis-binds.
     */
   def snapshotSchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
     val tmp = evolutionFixture(spark, dir)
-    readMerged(spark, tmp)
+    Snapshot.read(spark, tmp)
       .groupBy(col("event_type"), col("date"))
       .agg(count(lit(1)).as("n"),
         sum("event_id").as("sum_id"),
@@ -182,7 +125,7 @@ object SnapshotSchema {
     * `documents` in one table rebuilt on every call — generation 1
     * (even ids: doc_id, lang, source) appended, `n_tokens` declared by
     * [[evolve]], generation 2 (odd ids, carrying `n_tokens`) appended —
-    * then every row of the merged read with an explicit presence flag,
+    * then every row of the snapshot read with an explicit presence flag,
     * so the NULL fill is IN the output. The oracle rebuilds the merge
     * from the raw table via the same generation split.
     */
@@ -198,7 +141,7 @@ object SnapshotSchema {
         col("source"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens")),
       "lang")
-    readMerged(spark, tmp)
+    Snapshot.read(spark, tmp)
       .select(col("doc_id"), col("lang"),
         when(col("n_tokens").isNotNull, 1L).otherwise(0L).as("has_tokens"),
         coalesce(col("n_tokens"), lit(-1L)).as("n_tokens"))

@@ -205,20 +205,20 @@ object SnapshotStats {
   private[sources] val RowsField = "__rows"
 
   /** Collect per-file min/max for `cols` (plus the exact row count)
-    * over `files` (relative paths) in ONE column-pruned distributed
-    * job. Returns the encoded shard-line suffix per relative path —
-    * the `stats` argument [[Snapshot.commit]] takes.
+    * over `files` (relative paths, scanned under the table's `schema`)
+    * in ONE column-pruned distributed job. Returns the encoded
+    * shard-line suffix per relative path — the `stats` argument
+    * [[Snapshot.commit]] takes.
     */
   def collectStats(spark: SparkSession, dir: String, files: Seq[String],
-                   cols: Seq[String],
+                   schema: StructType, cols: Seq[String],
                    blooms: Seq[BloomSpec] = Nil,
                    bloomInlineMax: Int = BloomInlineMaxBytes): Map[String, String] = {
     if (files.isEmpty || (cols.isEmpty && blooms.isEmpty)) return Map.empty
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val rootUri = fs.makeQualified(root).toUri.getPath
-    val sch = spark.read.parquet(s"$dir/${files.head}").schema
-    val codes = cols.map(c => c -> typeCodeOf(sch(c).dataType)).toMap
+    val codes = cols.map(c => c -> typeCodeOf(schema(c).dataType)).toMap
     // stringify bounds in-plan (dates → ISO, numerics → exact
     // literals via the same cast both engines print), so the collect
     // is rows of strings regardless of column type; blooms ride the
@@ -231,8 +231,7 @@ object SnapshotStats {
       blooms.map(b => graft.functions.bloom_agg(
         col(b.col), b.bits, b.hashes).as(s"__bl_${b.col}"))
     val scanCols = (cols ++ blooms.map(_.col)).distinct
-    val rows = spark.read.schema(sch)
-      .parquet(files.map(f => s"$dir/$f"): _*)
+    val rows = Snapshot.scan(spark, dir, schema, files)
       .select(scanCols.map(col) :+ input_file_name().as("__f"): _*)
       .groupBy("__f").agg(aggs.head, aggs.tail: _*)
       .collect()
@@ -307,14 +306,14 @@ object SnapshotStats {
     val oldTags = Snapshot.tagsOf(fs, root, p.version)
     val cols = newStatCols.getOrElse(statsColsOf(oldTags))
     val blooms = newBlooms.getOrElse(bloomColsOf(oldTags))
-    val stats = collectStats(spark, dir, p.files, cols, blooms,
+    val stats = collectStats(spark, dir, p.files, p.schema, cols, blooms,
       bloomInlineMax)
     val kept = oldTags.filterNot(t =>
       t.startsWith(StatsColsTag) || t.startsWith(BloomColsTag))
     val tags = kept ++
       (if (cols.nonEmpty) Seq(StatsColsTag + cols.mkString(",")) else Nil) ++
       (if (blooms.nonEmpty) Seq(bloomTagOf(blooms)) else Nil)
-    val v = Snapshot.commit(fs, root, p.files, p.version, tags,
+    val v = Snapshot.commit(fs, root, p.files, p.version, p.schema, tags,
       baseFiles = Some(p.files), stats = stats)
     Snapshot.vacuum(fs, root)
     v
@@ -340,10 +339,15 @@ object SnapshotStats {
   def skipPlanMulti(spark: SparkSession, dir: String,
                     preds: Seq[(String, Option[String], Option[String])])
       : (Seq[String], Int) = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val v = Snapshot.currentVersion(fs, root).getOrElse(
-      throw new IllegalStateException(s"$dir is not snapshot-managed"))
+    val (fs, root, v) = Snapshot.current(spark, dir)
+    skipPlanAt(fs, root, v, preds)
+  }
+
+  /** [[skipPlanMulti]] against committed version `v`. */
+  private def skipPlanAt(fs: org.apache.hadoop.fs.FileSystem, root: Path,
+                         v: Long,
+                         preds: Seq[(String, Option[String], Option[String])])
+      : (Seq[String], Int) = {
     val lines = Snapshot.linesOf(fs, root, v)
     def leq(t: String)(a: String, b: String): Boolean = t match {
       case "L" => a.toLong <= b.toLong
@@ -365,11 +369,6 @@ object SnapshotStats {
     (kept, lines.size)
   }
 
-  /** Data-skipping read: prune files by zone map, scan the survivors,
-    * apply the REAL predicate (pruning is planning-only, so the
-    * result is exactly the unpruned filtered read). An all-pruned
-    * plan returns an empty frame with the table schema.
-    */
   private val skipFixtureCache =
     scala.collection.concurrent.TrieMap.empty[(String, String), String]
 
@@ -454,10 +453,7 @@ object SnapshotStats {
     */
   def aggFromManifest(spark: SparkSession, dir: String,
                       cols: Seq[String]): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val v = Snapshot.currentVersion(fs, root).getOrElse(
-      throw new IllegalStateException(s"$dir is not snapshot-managed"))
+    val (fs, root, v) = Snapshot.current(spark, dir)
     val parsed = Snapshot.linesOf(fs, root, v).map(parseLine)
     parsed.foreach { case (p, st) =>
       require(st.get(RowsField).exists(_.min.isDefined),
@@ -586,10 +582,14 @@ object SnapshotStats {
     */
   def lookupPlan(spark: SparkSession, dir: String, colName: String,
                  keys: Seq[Any]): (Seq[String], Int) = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val v = Snapshot.currentVersion(fs, root).getOrElse(
-      throw new IllegalStateException(s"$dir is not snapshot-managed"))
+    val (fs, root, v) = Snapshot.current(spark, dir)
+    lookupPlanAt(fs, root, v, colName, keys)
+  }
+
+  /** [[lookupPlan]] against committed version `v`. */
+  private def lookupPlanAt(fs: org.apache.hadoop.fs.FileSystem, root: Path,
+                           v: Long, colName: String,
+                           keys: Seq[Any]): (Seq[String], Int) = {
     val spec = bloomColsOf(Snapshot.tagsOf(fs, root, v))
       .find(_.col == colName)
     val lines = Snapshot.linesOf(fs, root, v)
@@ -614,23 +614,15 @@ object SnapshotStats {
 
   /** Point-lookup read: bloom-prune files, scan survivors, apply the
     * real IN predicate (pruning is planning-only — false positives
-    * cost IO, never correctness).
+    * cost IO, never correctness). Plan and schema come from one
+    * resolved version.
     */
   def readLookup(spark: SparkSession, dir: String, colName: String,
                  keys: Seq[Any]): DataFrame = {
-    val (kept, _) = lookupPlan(spark, dir, colName, keys)
-    val p = Snapshot.pin(spark, dir)
-    // loud on a zero-file table: files.head would otherwise throw a
-    // bare NoSuchElementException from deep inside the scan setup
-    if (p.files.isEmpty) throw new IllegalStateException(
-      s"$dir has no data files at v${p.version} — cannot derive a " +
-        "lookup schema from an empty snapshot table")
-    val sch = spark.read.parquet(s"$dir/${p.files.head}").schema
-    val base =
-      if (kept.isEmpty) spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), sch)
-      else spark.read.schema(sch).parquet(kept.map(f => s"$dir/$f"): _*)
-    base.filter(col(colName).isin(keys: _*))
+    val (fs, root, v) = Snapshot.current(spark, dir)
+    val (kept, _) = lookupPlanAt(fs, root, v, colName, keys)
+    Snapshot.scan(spark, dir, Snapshot.schemaOf(fs, root, v), kept)
+      .filter(col(colName).isin(keys: _*))
   }
 
   /** Gate query: a 24-key point lookup (`event_id` stride samples)
@@ -659,21 +651,25 @@ object SnapshotStats {
       .orderBy("event_id")
   }
 
+  /** Data-skipping read: prune files by zone map, scan the survivors,
+    * apply the REAL predicate (pruning is planning-only, so the
+    * result is exactly the unpruned filtered read). An all-pruned
+    * plan returns an empty frame with the table schema.
+    */
   def readSkipping(spark: SparkSession, dir: String, colName: String,
                    lo: Option[String], hi: Option[String]): DataFrame =
     readSkippingMulti(spark, dir, Seq((colName, lo, hi)))
 
-  /** Multi-dimension data-skipping read — see [[skipPlanMulti]]. */
+  /** Multi-dimension data-skipping read — see [[skipPlanMulti]]. Plan
+    * and schema come from one resolved version.
+    */
   def readSkippingMulti(spark: SparkSession, dir: String,
                         preds: Seq[(String, Option[String], Option[String])])
       : DataFrame = {
-    val (kept, _) = skipPlanMulti(spark, dir, preds)
-    val p = Snapshot.pin(spark, dir)
-    val sch = spark.read.parquet(s"$dir/${p.files.head}").schema
-    val base =
-      if (kept.isEmpty) spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), sch)
-      else spark.read.schema(sch).parquet(kept.map(f => s"$dir/$f"): _*)
+    val (fs, root, v) = Snapshot.current(spark, dir)
+    val (kept, _) = skipPlanAt(fs, root, v, preds)
+    val sch = Snapshot.schemaOf(fs, root, v)
+    val base = Snapshot.scan(spark, dir, sch, kept)
     val conj = preds.flatMap { case (colName, lo, hi) =>
       val dt = sch(colName).dataType
       lo.map(l => col(colName) >= lit(l).cast(dt)).toSeq ++

@@ -129,7 +129,7 @@ object SnapshotWap {
       require(tags.contains(WapTag + auditId),
         s"current v$cur of $dir is not staged under audit id '$auditId' " +
           s"(found: ${wapIdOf(tags).getOrElse("none — already published?")})")
-      val (files, newTags) =
+      val (target, newTags) =
         if (keepStaged) {
           // strip ONLY the matching stage tag; any OTHER #wap= tag
           // still on the manifest means a second unaudited stage is
@@ -142,17 +142,17 @@ object SnapshotWap {
             s"cannot publish '$auditId': v$cur also carries unaudited " +
               s"stage(s) ${stacked.map(_.stripPrefix(WapTag)).mkString(", ")} " +
               "— publishing would leak their files; reject or audit them first")
-          (Snapshot.filesOf(fs, root, cur), kept)
+          (Snapshot.pinOf(fs, root, cur), kept)
         } else {
           val pub = publishedVersion(spark, dir)
           // the published tags are COPIED onto a new version — run
           // them through the same expiry every mutation applies, so
           // stale idempotency tags cannot be resurrected past their
           // retention window
-          (Snapshot.filesOf(fs, root, pub),
+          (Snapshot.pinOf(fs, root, pub),
             SnapshotOps.expireTags(Snapshot.tagsOf(fs, root, pub), cur + 1))
         }
-      Snapshot.commit(fs, root, files, cur, newTags,
+      Snapshot.commit(fs, root, target.files, cur, target.schema, newTags,
         baseFiles = Some(Snapshot.filesOf(fs, root, cur)))
     }
     Snapshot.vacuum(fs, root)

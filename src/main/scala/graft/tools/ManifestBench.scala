@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 import graft.sources.Snapshot
 
@@ -44,7 +45,9 @@ object ManifestBench {
     val files: Seq[String] = (0 until nParts).flatMap { p =>
       (0 until perPart).map(j => f"date=2026-01-${p % 28 + 1}%02d.$p/u1_boot/part-$j%05d.parquet")
     }
-    val (v1, bootSec) = timed(Snapshot.commit(fs, root, files, 0L))
+    // every root declares its table's schema: a two-column stand-in
+    val schema = new StructType().add("event_id", LongType).add("date", StringType)
+    val (v1, bootSec) = timed(Snapshot.commit(fs, root, files, 0L, schema))
     val (read1, readSec) = timed(Snapshot.filesOf(fs, root, v1))
     require(read1.size == files.size, s"read ${read1.size} of ${files.size}")
 
@@ -52,7 +55,7 @@ object ManifestBench {
     val touched = files.head.takeWhile(_ != '/')
     val files2 = files :+ s"$touched/u2_churn/part-new.parquet"
     val (v2, churnSec) = timed(
-      Snapshot.commit(fs, root, files2, v1, baseFiles = Some(files)))
+      Snapshot.commit(fs, root, files2, v1, schema, baseFiles = Some(files)))
     val reused = Snapshot.shardRefsOf(fs, root, v1).toMap
     val after = Snapshot.shardRefsOf(fs, root, v2).toMap
     val rewritten = after.count { case (p, s) => !reused.get(p).contains(s) }
@@ -83,7 +86,7 @@ object ManifestBench {
     val inlineB64 = java.util.Base64.getEncoder
       .encodeToString(new Array[Byte](8192))
     val (v3, inlineShardBytes) = {
-      val v = Snapshot.commit(fs, root, files2, v2,
+      val v = Snapshot.commit(fs, root, files2, v2, schema,
         baseFiles = Some(files2),
         stats = partFiles.map(f => f -> bloomSuffix(inlineB64)).toMap)
       val shard = Snapshot.shardRefsOf(fs, root, v).toMap.apply(touched)
@@ -92,7 +95,7 @@ object ManifestBench {
     }
     val (_, sidecarShardBytes) = {
       val ref = "@" + "ab12cd34" * 4 + ".bloom"
-      val v = Snapshot.commit(fs, root, files2, v3,
+      val v = Snapshot.commit(fs, root, files2, v3, schema,
         baseFiles = Some(files2),
         stats = partFiles.map(f =>
           f -> bloomSuffix(java.net.URLEncoder.encode(ref, "UTF-8"))).toMap)

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,6 +25,35 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     Tables.events(spark, sf).repartition(8)
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     dir
+  }
+
+  /** Jobs `body` submits. Counts only jobs in a job group of its own,
+    * then runs a sentinel job in another group: the listener bus
+    * delivers in order, so once the sentinel is seen every earlier
+    * job start has been counted.
+    */
+  protected def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${System.nanoTime()}"
+    val jobs = new AtomicInteger(0)
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-sentinel" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-sentinel", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(30, TimeUnit.SECONDS), "listener bus never drained")
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
   }
 
   override def afterAll(): Unit = {

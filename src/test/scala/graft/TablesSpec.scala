@@ -1,42 +1,9 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 
 /** The per-session table layout memo behind [[Tables.load]]. */
 class TablesSpec extends SparkSpec {
-
-  /** Jobs `body` submits. Counts only jobs in a job group of its own,
-    * then runs a sentinel job in another group: the listener bus
-    * delivers in order, so once the sentinel is seen every earlier
-    * job start has been counted.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${System.nanoTime()}"
-    val jobs = new AtomicInteger(0)
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(g) if g == s"$group-sentinel" => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-sentinel", "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(30, TimeUnit.SECONDS), "listener bus never drained")
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def noop(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()

@@ -157,7 +157,7 @@ class SnapshotSpec extends SparkSpec {
     // (c) a completed manifest rename is a commit: hand-write v+1
     // listing a strict subset (drop one file) — readers follow it
     val cur = Snapshot.pin(spark, dir)
-    val v = Snapshot.commit(fs, root, cur.files.tail, cur.version)
+    val v = Snapshot.commit(fs, root, cur.files.tail, cur.version, cur.schema)
     assert(Snapshot.currentVersion(fs, root).contains(v))
     assert(Snapshot.pin(spark, dir).files == cur.files.tail)
   }
@@ -175,7 +175,7 @@ class SnapshotSpec extends SparkSpec {
     SnapshotOps.beforeCommit = () => if (!fired) {
       fired = true
       val cur = Snapshot.pin(spark, dir)
-      Snapshot.commit(fs, root, cur.files.tail, cur.version)
+      Snapshot.commit(fs, root, cur.files.tail, cur.version, cur.schema)
     }
     try {
       // capture the to-be-dropped file's keys BEFORE mutating (the
@@ -316,9 +316,9 @@ class SnapshotSpec extends SparkSpec {
     assert(adds.filter(col("op") =!= "add").count() == 0)
     assert(adds.filter(col("n") =!= 1L).count() == 0)
     assert(adds.count() == nRows)
-    // erase every key → v3 with an EMPTY manifest; the delta must
-    // resolve its schema from the 'from' side and emit one remove per
-    // distinct row with n = 2 (both copies gone)
+    // erase every key → v3 with an EMPTY manifest; the delta scans
+    // under v3's declared schema and emits one remove per distinct
+    // row with n = 2 (both copies gone)
     SnapshotOps.delete(spark, dir, batch.select("event_id"), "event_id")
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
@@ -364,8 +364,8 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("sharded manifests: a commit rewrites shards only for changed " +
-       "partitions, readers can prune shard reads, vacuum reaps " +
-       "expired shards, and legacy flat manifests stay readable") {
+       "partitions, readers can prune shard reads, and vacuum reaps " +
+       "expired shards") {
     val (dir, events) = freshTable()
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
@@ -411,21 +411,6 @@ class SnapshotSpec extends SparkSpec {
     assert(onDisk == keptRefs,
       s"shard dir diverged: extra=${(onDisk -- keptRefs).size} " +
         s"missing=${(keptRefs -- onDisk).size}")
-    // legacy flat manifest (bare file lines) written by an old writer:
-    // still resolvable, and the NEXT commit migrates it to shards
-    val cur = Snapshot.pin(spark, dir)
-    val legacyV = cur.version + 1
-    val meta = new Path(root, Snapshot.MetaDir)
-    val out = fs.create(new Path(meta, f"v$legacyV%08d.manifest"), false)
-    out.write((cur.files.mkString("\n") + "\n").getBytes("UTF-8")); out.close()
-    assert(Snapshot.filesOf(fs, root, legacyV) == cur.files)
-    assert(state(Snapshot.readAt(spark, dir, legacyV)) ==
-      state(Snapshot.readPin(spark, dir, cur)))
-    val v4 = Snapshot.commit(fs, root, cur.files, legacyV,
-      baseFiles = Some(Snapshot.filesOf(fs, root, legacyV)))
-    assert(Snapshot.shardRefsOf(fs, root, v4).nonEmpty,
-      "commit over a legacy flat manifest did not migrate to shards")
-    assert(Snapshot.filesOf(fs, root, v4).sorted == cur.files.sorted)
   }
 
   test("time travel: an explicit old version reads its exact " +
@@ -449,6 +434,43 @@ class SnapshotSpec extends SparkSpec {
     Snapshot.vacuum(fs, root, keep = 1)
     intercept[IllegalArgumentException] {
       Snapshot.pinAt(spark, dir, v1)
+    }
+  }
+
+  test("pinned reads plan without a job, and every root declares the " +
+       "schema a footer read of its files returns") {
+    // convert: v1 declares the schema its rewritten files carry
+    val (conv, _) = freshTable()
+    val cp = Snapshot.pin(spark, conv)
+    assert(cp.schema == spark.read.parquet(s"$conv/${cp.files.head}").schema)
+    // a bootstrap append: likewise
+    val dir = java.nio.file.Files.createTempDirectory("graft_snap_plan").toString
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val events = graft.Tables.events(spark, sf)
+      .withColumn("date", expr("date(timestamp_micros(ts div 1000))"))
+      .withColumn("ym", date_format(col("date"), "yyyy-MM"))
+    SnapshotOps.append(spark, dir, events, "ym", Some("plan-0"))
+    val p1 = Snapshot.pin(spark, dir)
+    assert(p1.schema == spark.read.parquet(s"$dir/${p1.files.head}").schema)
+    SnapshotStats.statsify(spark, dir, Seq("user_id"))
+    SnapshotStats.bloomify(spark, dir,
+      Seq(SnapshotStats.BloomSpec("event_id", 65536, 3)))
+    SnapshotOps.delete(spark, dir,
+      events.filter(col("event_id") < 20).select("event_id"), "event_id")
+    val v = Snapshot.currentVersion(fs, root).get
+    val frames: Seq[(String, () => DataFrame)] = Seq(
+      "read" -> (() => Snapshot.read(spark, dir)),
+      "readAt" -> (() => Snapshot.readAt(spark, dir, v - 1)),
+      "readSkipping" -> (() => SnapshotStats.readSkipping(spark, dir,
+        "user_id", Some("0"), Some("100"))),
+      "readLookup" -> (() => SnapshotStats.readLookup(spark, dir,
+        "event_id", Seq(25L, 30L))),
+      "changesBetween" -> (() => SnapshotOps.changesBetween(spark, dir,
+        v - 1, v)))
+    frames.foreach { case (name, build) =>
+      val jobs = jobsOf { build(); () }
+      assert(jobs == 0, s"building $name submitted $jobs jobs")
     }
   }
 
@@ -924,6 +946,7 @@ class SnapshotSpec extends SparkSpec {
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val cur = Snapshot.currentVersion(fs, root).get
     Snapshot.commit(fs, root, Snapshot.filesOf(fs, root, cur), cur,
+      Snapshot.schemaOf(fs, root, cur),
       Snapshot.tagsOf(fs, root, cur) ++ Seq("#wap=sA", "#wap=sB"),
       baseFiles = Some(Snapshot.filesOf(fs, root, cur)))
     intercept[IllegalArgumentException] {
