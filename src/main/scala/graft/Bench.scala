@@ -175,8 +175,10 @@ object Bench {
       * wall ~4× without touching the TIMED passes, which stay
       * strictly serial with the same min-of-passes methodology.
       * Cross-query fixture sharing is safe under concurrency via
-      * graft.Memo.once (block-until-built memoization) and
-      * GraftSession.confMutex (serialized session-conf windows).
+      * graft.Memo (block-until-built memoization), and no query
+      * mutates the session's conf (streaming drains size their state
+      * in a child session, the backfill sets its overwrite mode per
+      * write).
       * Per-query warmup timings are still recorded — they order the
       * timed passes and remain the honest (cold-labeled) fallback for
       * budget-aborted queries; pool contention can inflate them, but

@@ -20,17 +20,6 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Global mutex for code that MUTATES session-wide SQL conf around
-    * a job (streaming drains sizing `spark.sql.shuffle.partitions`,
-    * the backfill's dynamic partition-overwrite window). Queries are
-    * independent and may be warmed concurrently (Bench's warmup
-    * pool); two concurrent set/restore windows would otherwise race
-    * the restore and leave the session misconfigured for everything
-    * after. Mutators hold this for their whole window, so they
-    * serialize among themselves; non-mutating queries never block.
-    */
-  val confMutex = new Object
-
   def builder(master: String, cpus: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)

@@ -46,13 +46,6 @@ object Tables {
     */
   private final case class Layout(schema: StructType, splits: Int)
 
-  /** One memo per (session, table path, modification time of the
-    * path): a table rewritten in place — Spark's overwrite replaces
-    * the directory — gets a fresh layout instead of a stale schema.
-    */
-  private val layouts =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Long), Layout]
-
   private def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
   private def status(spark: SparkSession, p: String): FileStatus = {
@@ -60,12 +53,15 @@ object Tables {
     hp.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(hp)
   }
 
+  /** Memoized per (session, table path, modification time of the
+    * path): a table rewritten in place — Spark's overwrite replaces
+    * the directory — gets a fresh layout instead of a stale schema.
+    */
   private def layout(spark: SparkSession, p: String, st: FileStatus): Layout =
-    Memo.once(layouts,
-      (spark.sparkContext.applicationId, p, st.getModificationTime), {
-        val df = spark.read.parquet(p)
-        Layout(df.schema, df.rdd.getNumPartitions)
-      })
+    Memo(spark, "layout", (p, st.getModificationTime)) {
+      val df = spark.read.parquet(p)
+      Layout(df.schema, df.rdd.getNumPartitions)
+    }
 
   /** A table as a DataFrame, planned for what its scan is:
     *  - a [[factTables]] table with fewer splits than cores is

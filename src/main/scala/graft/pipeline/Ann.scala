@@ -116,28 +116,6 @@ object Ann {
     * still *rows-only* (cluster boundaries are engine-specific), with
     * recall vs [[bruteTopK]] gated in AnnSpec.
     */
-  // keyed by applicationId: unique per SparkContext, so a stopped
-  // context's cached plans can never be served to a new session (an
-  // identity-hash key could collide after GC); two sessions sharing
-  // one context may safely share the entry. Concurrent first calls
-  // may train twice — idempotent, last write wins.
-  private val quantisers =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int), (DataFrame, DataFrame)]
-
-  // PQ codebooks are plain doubles (no session resources) — keyed by
-  // applicationId for the same never-reused-id reason; stale entries
-  // are bytes, not cached blocks, so no eviction hook is needed
-  private val pqCodebooks =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int, Int, Int), Array[Array[Array[Double]]]]
-
-  // Entries for stopped contexts are unreachable (applicationId is
-  // never reused) and their cached blocks died with the executor —
-  // drop them so a long-lived multi-session JVM can't grow unboundedly.
-  private def evictStopped(): Unit =
-    quantisers.filterInPlace { case (_, (assigned, _)) =>
-      !assigned.sparkSession.sparkContext.isStopped
-    }
-
   /** The shared IVF coarse quantiser: KMeans over the embedding
     * corpus, returning (per-vector cell assignment, cell-center dim).
     * Used by both [[ivfTopK]] and
@@ -158,12 +136,10 @@ object Ann {
   val MaxTrainVectors = 100000L
 
   def ivfAssign(spark: SparkSession, dir: String,
-                cells: Int = 16): (DataFrame, DataFrame) = {
-    evictStopped()
-    graft.Memo.once(quantisers,
-      (spark.sparkContext.applicationId, dir, cells),
-      trainAssignOf(vectors(spark, dir), cells))
-  }
+                cells: Int = 16): (DataFrame, DataFrame) =
+    graft.Memo(spark, "ivf-quantiser", (dir, cells)) {
+      trainAssignOf(vectors(spark, dir), cells)
+    }
 
   /** Cell count at or below which the coarse quantiser trains and
     * assigns FLAT (one MLlib fit; assignment ranks every cell per
@@ -697,8 +673,7 @@ object Ann {
     val dim = 64
     require(dim % m == 0, "m must divide the embedding dimension")
     val sub = dim / m
-    graft.Memo.once(pqCodebooks,
-      (spark.sparkContext.applicationId, dir, cells, m, ksub), {
+    graft.Memo(spark, "pq-codebooks", (dir, cells, m, ksub)) {
         val normed = normalized(ivfAssign(spark, dir, cells)._1)
         val n = normed.count()
         val train0 =
@@ -736,7 +711,7 @@ object Ann {
           finally pool.shutdown()
         train.unpersist()
         books
-      })
+      }
   }
 
   /** Encode: codes[s] = argmin_c ||vn_sub - centroid||² as a pure
@@ -1219,12 +1194,6 @@ object Ann {
     */
   val IndexNprobe = 2
 
-  // blocking memo (Memo.once): index-family queries share these
-  // artifacts and may warm concurrently — a check-then-act flag would
-  // let the second caller read a half-written index
-  private val builtIvfIndexes =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
   /** [[ivfTopK]] against the PERSISTED index (built once per session;
     * the production artifact is written once at corpus layout).
     * Identical output to the in-memory form — same centers, same
@@ -1239,14 +1208,13 @@ object Ann {
       spark.read.parquet(s"$idx/centers"), nQueries, k, nprobe)
   }
 
+  // index-family queries share the persisted indexes below and may
+  // warm concurrently: each is a blocking Memo.dir build
   private[graft] def ivfIndexFor(spark: SparkSession, dir: String,
-                                 cells: Int): String = {
-    val idx = graft.sources.TmpDir.scoped("ivfindex",
-      spark.sparkContext.applicationId, s"$dir:$cells")
-    graft.Memo.once(builtIvfIndexes, idx,
-      ivfIndexWrite(spark, dir, idx, cells))
-    idx
-  }
+                                 cells: Int): String =
+    graft.Memo.dir(spark, "ivfindex", s"$dir:$cells") { idx =>
+      ivfIndexWrite(spark, dir, idx, cells)
+    }
 
   /** Nightly IVF index maintenance: append a vector batch to the
     * persisted index WITHOUT retraining and WITHOUT touching any
@@ -1274,12 +1242,6 @@ object Ann {
       .write.mode("append").partitionBy("cell")
       .parquet(s"$idx/probed")
   }
-
-  // blocking memo (Memo.once): index-family queries share these
-  // artifacts and may warm concurrently — a check-then-act flag would
-  // let the second caller read a half-written index
-  private val builtAppendIndexes =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   /** The append gate's fixture + search: clone the corpus index (a
     * production append mutates in place; the clone keeps the memoized
@@ -1321,16 +1283,13 @@ object Ann {
   private[graft] def appendedIndexFor(spark: SparkSession, dir: String,
                                       cells: Int): String = {
     val src = ivfIndexFor(spark, dir, cells)
-    val idx = graft.sources.TmpDir.scoped("ivfappend",
-      spark.sparkContext.applicationId, s"$dir:$cells")
-    graft.Memo.once(builtAppendIndexes, idx, {
+    graft.Memo.dir(spark, "ivfappend", s"$dir:$cells") { idx =>
       cloneIndex(spark, src, idx)
       val batch = spark.read.parquet(s"$src/assigned")
         .filter(pmod(col("vec_id"), lit(11)) === 0)
         .select((col("vec_id") + lit(1000000L)).as("vec_id"), col("v"))
       ivfIndexAppend(spark, idx, batch)
-    })
-    idx
+    }
   }
 
   /** Copy an index's three relations (fixture plumbing: production
@@ -1400,12 +1359,6 @@ object Ann {
     assigned.unpersist()
   }
 
-  // blocking memo (Memo.once): index-family queries share these
-  // artifacts and may warm concurrently — a check-then-act flag would
-  // let the second caller read a half-written index
-  private val builtRebuiltIndexes =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
   /** The rebuild gate's lifecycle fixture + search: clone the
     * APPENDED index (build → append — the drifted state every nightly
     * ingest accumulates), rebuild it in place, and search the result.
@@ -1440,13 +1393,10 @@ object Ann {
   private[graft] def rebuiltIndexFor(spark: SparkSession, dir: String,
                                      cells: Int): String = {
     val src = appendedIndexFor(spark, dir, cells)
-    val idx = graft.sources.TmpDir.scoped("ivfrebuild",
-      spark.sparkContext.applicationId, s"$dir:$cells")
-    graft.Memo.once(builtRebuiltIndexes, idx, {
+    graft.Memo.dir(spark, "ivfrebuild", s"$dir:$cells") { idx =>
       cloneIndex(spark, src, idx)
       ivfIndexRebuild(spark, idx, cells)
-    })
-    idx
+    }
   }
 
   /** Persist the full IVF-PQ index — the artifact a 100 TB vector
@@ -1477,12 +1427,6 @@ object Ann {
     centersDf.write.mode("overwrite").parquet(s"$outDir/centers")
   }
 
-  // blocking memo (Memo.once): index-family queries share these
-  // artifacts and may warm concurrently — a check-then-act flag would
-  // let the second caller read a half-written index
-  private val builtPqIndexes =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
   /** [[ivfPqTopK]] against the PERSISTED index (built once per
     * session; the production artifact is written once at corpus
     * layout): codebooks rehydrate from parquet into the same plan
@@ -1510,11 +1454,8 @@ object Ann {
   }
 
   private[graft] def ivfPqIndexFor(spark: SparkSession, dir: String,
-                                   cells: Int, m: Int, ksub: Int): String = {
-    val idx = graft.sources.TmpDir.scoped("ivfpqindex",
-      spark.sparkContext.applicationId, s"$dir:$cells:$m:$ksub")
-    graft.Memo.once(builtPqIndexes, idx,
-      ivfPqIndexWrite(spark, dir, idx, cells, m, ksub))
-    idx
-  }
+                                   cells: Int, m: Int, ksub: Int): String =
+    graft.Memo.dir(spark, "ivfpqindex", s"$dir:$cells:$m:$ksub") { idx =>
+      ivfPqIndexWrite(spark, dir, idx, cells, m, ksub)
+    }
 }

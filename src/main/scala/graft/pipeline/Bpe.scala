@@ -208,36 +208,29 @@ object Bpe {
       sys.props.getOrElse("user.name", "anon").replaceAll("[^A-Za-z0-9_.-]", "_")
   ).getPath
 
-  @volatile private var cached: Option[(String, Model)] = None
-
-  /** The corpus-trained model for `dir`: train once per (process,
-    * dir) — the dictionary reduction is the only cluster job; the
-    * merge loop runs on the collected, capped dictionary — then
-    * persist rules + vocab to [[StorePath]] for the oracle and any
-    * later process. Deterministic end-to-end (ordered dictionary,
-    * deterministic tie-breaks), so re-runs converge on identical
-    * artifacts.
+  /** The corpus-trained model for `dir`: train once per (application,
+    * dir) through [[graft.Memo]] — the dictionary reduction is the
+    * only cluster job; the merge loop runs on the collected, capped
+    * dictionary — then persist rules + vocab to [[StorePath]] for the
+    * oracle and any later process. Deterministic end-to-end (ordered
+    * dictionary, deterministic tie-breaks), so re-runs converge on
+    * identical artifacts. [[StorePath]] is one location per user, so a
+    * process trains one corpus.
     */
-  def model(spark: SparkSession, dir: String): Model = synchronized {
-    cached match {
-      case Some((d, m)) if d == dir => m
-      case _ =>
-        val dict = dictOf(spark, dir, TrainMaxWords)
-        val m = {
-          val rules = learn(dict, MergeBudget)
-          Model(rules, vocabOf(rules))
-        }
-        import spark.implicits._
-        m.rules.zipWithIndex
-          .map { case ((l, r), i) => ((i + 1).toLong, l, r, l + r) }
-          .toDF("rank", "l", "r", "merged")
-          .coalesce(1).write.mode("overwrite").parquet(s"$StorePath/rules")
-        m.vocab.toDF("piece", "vid")
-          .coalesce(1).write.mode("overwrite").parquet(s"$StorePath/vocab")
-        cached = Some((dir, m))
-        m
+  def model(spark: SparkSession, dir: String): Model =
+    graft.Memo(spark, "bpe-model", dir) {
+      val dict = dictOf(spark, dir, TrainMaxWords)
+      val rules = learn(dict, MergeBudget)
+      val m = Model(rules, vocabOf(rules))
+      import spark.implicits._
+      m.rules.zipWithIndex
+        .map { case ((l, r), i) => ((i + 1).toLong, l, r, l + r) }
+        .toDF("rank", "l", "r", "merged")
+        .coalesce(1).write.mode("overwrite").parquet(s"$StorePath/rules")
+      m.vocab.toDF("piece", "vid")
+        .coalesce(1).write.mode("overwrite").parquet(s"$StorePath/vocab")
+      m
     }
-  }
 
   /** The capped word-frequency dictionary of the corpus (the
     * distributed half of training): explode to words, one vocab-sized

@@ -768,25 +768,24 @@ object Curation {
     // the gate, not a dead code path. Warm invocations price SCORING
     // — the pure-map pass a new ingest batch pays — never
     // teacher + L-BFGS.
-    val model = graft.Memo.once(classifierCache,
-      (spark.sparkContext.applicationId, dir), {
-        import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
-        val path = graft.sources.TmpDir.scoped("qclsmodel",
-          spark.sparkContext.applicationId, dir)
-        // pin the train split to a FIXED deterministic partition
-        // layout before fit: L-BFGS's per-iteration treeAggregate
-        // sums gradients in partition order, so a layout that varies
-        // with cluster shape would make the coefficients (and the
-        // gated p1_bp column) drift across runs at the last float
-        // bit. Fixed count + hash-on-key + in-partition sort makes
-        // the float reduction order a function of the DATA only.
-        new LogisticRegression()
-          .setMaxIter(100).setRegParam(1e-3).setStandardization(false)
-          .fit(feat.filter(col("is_train") === 1L)
-            .repartition(8, col("doc_id")).sortWithinPartitions("doc_id"))
-          .write.overwrite().save(path)
-        LogisticRegressionModel.load(path)
-      })
+    val model = graft.Memo(spark, "qclsmodel", dir) {
+      import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
+      val path = graft.sources.TmpDir.scoped("qclsmodel",
+        spark.sparkContext.applicationId, dir)
+      // pin the train split to a FIXED deterministic partition
+      // layout before fit: L-BFGS's per-iteration treeAggregate
+      // sums gradients in partition order, so a layout that varies
+      // with cluster shape would make the coefficients (and the
+      // gated p1_bp column) drift across runs at the last float
+      // bit. Fixed count + hash-on-key + in-partition sort makes
+      // the float reduction order a function of the DATA only.
+      new LogisticRegression()
+        .setMaxIter(100).setRegParam(1e-3).setStandardization(false)
+        .fit(feat.filter(col("is_train") === 1L)
+          .repartition(8, col("doc_id")).sortWithinPartitions("doc_id"))
+        .write.overwrite().save(path)
+      LogisticRegressionModel.load(path)
+    }
     model.transform(feat)
       .select(col("doc_id"),
         col("label").cast("long").as("weak_label"),
@@ -796,10 +795,6 @@ object Curation {
           .cast("long").as("p1_bp"))
       .orderBy("doc_id")
   }
-
-  private val classifierCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String),
-      org.apache.spark.ml.classification.LogisticRegressionModel]
 
   /** The featurized + weak-labeled relation [[qualityClassifier]]
     * trains and scores over: hashed binary bag-of-tokens, df-median
@@ -924,25 +919,11 @@ object Curation {
     val tmp = graft.sources.TmpDir.scoped("nightly", appId, dir)
     val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(tmp)
-    // the corpus table is built ONCE per session; later invocations
-    // re-run the three waves with fresh idempotency keys against the
-    // accumulated corpus — every delivered document is then a re-crawl
-    // duplicate, the full dedup pipeline runs (quality gate, in-batch
-    // window, corpus anti-join — the append must evaluate the batch to
-    // see it is empty) and NOTHING commits, so the rollup stays the
-    // fixed point while warm samples price the steady-state nightly
-    // whose crawl delivered nothing new — the recurring cost of the
-    // pipeline, not the once-per-corpus bootstrap
-    val epoch =
-      if (nightlyBuilt.add((appId, tmp))) {
-        root.getFileSystem(conf).delete(root, true)
-        0
-      } else nightlyEpoch.incrementAndGet()
     val docs = Tables.documents(spark, dir)
       .withColumn("h", md5(TextAnalysis.normText(col("text"))))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("h").orderBy("doc_id")
-    (0 until 3).foreach { wave =>
+    def waves(epoch: Int): Unit = (0 until 3).foreach { wave =>
       val delivered = docs.filter(
         pmod(col("doc_id"), lit(3)) === wave ||
           pmod(col("doc_id"), lit(5)) === wave)
@@ -959,6 +940,20 @@ object Curation {
       graft.sources.SnapshotOps.append(spark, tmp, survivors,
         "source", Some(s"night-$wave-e$epoch"))
     }
+    // the corpus table is built ONCE per session; later invocations
+    // re-run the three waves with fresh idempotency keys against the
+    // accumulated corpus — every delivered document is then a re-crawl
+    // duplicate, the full dedup pipeline runs (quality gate, in-batch
+    // window, corpus anti-join — the append must evaluate the batch to
+    // see it is empty) and NOTHING commits, so the rollup stays the
+    // fixed point while warm samples price the steady-state nightly
+    // whose crawl delivered nothing new — the recurring cost of the
+    // pipeline, not the once-per-corpus bootstrap
+    val fresh = graft.Memo.bootstrap(spark, "nightly", dir) {
+      root.getFileSystem(conf).delete(root, true)
+      waves(0)
+    }
+    if (!fresh) waves(nightlyEpoch.incrementAndGet())
     graft.sources.Snapshot.read(spark, tmp)
       .groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("n"), sum("doc_id").as("sum_id"),
@@ -966,7 +961,5 @@ object Curation {
       .orderBy("lang", "source")
   }
 
-  private val nightlyBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
   private val nightlyEpoch = new java.util.concurrent.atomic.AtomicInteger(0)
 }

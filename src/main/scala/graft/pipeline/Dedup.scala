@@ -557,13 +557,6 @@ object Dedup {
       sys.props.getOrElse("user.name", "anon").replaceAll("[^A-Za-z0-9_.-]", "_")
   ).getPath
 
-  // TrieMap + Memo.once (not a check-then-act keyset): concurrent
-  // first callers — the warmup pool runs dedup_band_stats and the
-  // clusterLabels consumers side by side — must BLOCK on the build,
-  // not race past a flag into a half-written artifact
-  private val bandStatsBuilt =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Unit]
-
   /** Band-bucket occupancy telemetry over the full-corpus MinHash band
     * index — the observability SURVEY §4's pair-cost bound needs: LSH
     * dedup's candidate cost is Σ_buckets C(occ, 2), quadratic in the
@@ -600,9 +593,12 @@ object Dedup {
   private[pipeline] def bandStatsIndex(spark: SparkSession, dir: String,
                                        numPerm: Int = 64,
                                        bands: Int = 32): String = {
-    graft.Memo.once(bandStatsBuilt, (spark.sparkContext.applicationId, dir),
+    // blocking memo: the warmup pool runs dedup_band_stats and the
+    // clusterLabels consumers side by side
+    graft.Memo(spark, "band-stats-index", dir) {
       bandKeyed(signedDocs(normed(spark, dir), numPerm), numPerm, bands)
-        .write.mode("overwrite").parquet(s"$BandStatsGatePath/index"))
+        .write.mode("overwrite").parquet(s"$BandStatsGatePath/index")
+    }
     s"$BandStatsGatePath/index"
   }
 
@@ -614,9 +610,6 @@ object Dedup {
     * occupancy ~300, listing wall 334 s → 125 s with the cap).
     */
   val BucketCapThreshold: Int = 64
-
-  private val capCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Option[Int]]
 
   /** Cap ARM SELECTION — the knn_join footer-derived-choice template
     * applied to LSH density: probe the persisted band-occupancy
@@ -638,12 +631,12 @@ object Dedup {
     * were never going to survive the exact verify anyway.
     */
   def autoBucketCap(spark: SparkSession, dir: String): Option[Int] =
-    graft.Memo.once(capCache, (spark.sparkContext.applicationId, dir), {
+    graft.Memo(spark, "bucket-cap", dir) {
       val maxOcc = spark.read.parquet(bandStatsIndex(spark, dir))
         .groupBy("bh").agg(count(lit(1)).as("occ"))
         .agg(max("occ")).head().getLong(0)
       if (maxOcc > BucketCapThreshold) Some(BucketCapThreshold) else None
-    })
+    }
 
   /** Persist the corpus side of [[incrementalDedup]] as a reusable
     * MinHash band index: `index/` = the exploded (doc_id, band-bucket
@@ -680,24 +673,17 @@ object Dedup {
       spark.read.parquet(s"$indexDir/slim"), minBp, numPerm, bands)
   }
 
-  // blocking memo (see bandStatsBuilt): dedup_incremental_indexed and
-  // dedup_incremental_stream share this index and may warm concurrently
-  private val builtIndexes =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
   /** The `doc_id % 7` corpus/batch split's band index, built once per
     * session (the production artifact is written once at corpus
-    * layout) — shared by the batch and streaming gate forms.
+    * layout) — shared by the batch and streaming gate forms, which may
+    * warm concurrently.
     */
   private[graft] def bandIndexFor(spark: SparkSession, dir: String,
-                                  numPerm: Int, bands: Int): String = {
-    val idx = graft.sources.TmpDir.scoped("bandindex",
-      spark.sparkContext.applicationId, s"$dir:$numPerm:$bands")
-    graft.Memo.once(builtIndexes, idx,
+                                  numPerm: Int, bands: Int): String =
+    graft.Memo.dir(spark, "bandindex", s"$dir:$numPerm:$bands") { idx =>
       bandIndexWriteOf(normed(spark, dir).filter(!(col("doc_id") % 7 === 0)),
-        idx, numPerm, bands))
-    idx
-  }
+        idx, numPerm, bands)
+    }
 
   /** Gate form: build (memoized per session) then probe with the
     * `doc_id % 7` batch slice.
@@ -995,11 +981,8 @@ object Dedup {
     // drop could kill a CONCURRENTLY-warming consumer mid-execution
     // (split_assign reads the memoized labels; a checkpointed frame
     // cannot recompute once its blocks are gone).
-    evictStoppedComponents()
-    val labels = computeClusterLabels(spark, dir, minBp)
-    componentCache.put(
-      (spark.sparkContext.applicationId, dir, s"lsh:$minBp"), labels)
-    labels.orderBy("doc_id")
+    graft.Memo.put(spark, "cluster-labels", (dir, minBp),
+      computeClusterLabels(spark, dir, minBp)).orderBy("doc_id")
   }
 
   /** The shared (doc_id, rep) cluster-labels artifact, memoized per
@@ -1012,23 +995,13 @@ object Dedup {
     * localCheckpoint, so reuse reads materialized blocks — the local
     * stand-in for the persisted cluster-assignment table. [[clusters]]
     * (the gated operator) always computes fresh AND refreshes this
-    * cache; consumers calling here pay only their marginal cost.
+    * memo; consumers calling here pay only their marginal cost.
     */
-  private val componentCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame]
-
-  private def evictStoppedComponents(): Unit =
-    componentCache.filterInPlace { case (_, df) =>
-      !df.sparkSession.sparkContext.isStopped
-    }
-
   private[graft] def clusterLabels(spark: SparkSession, dir: String,
-                                   minBp: Long = 6500): DataFrame = {
-    evictStoppedComponents()
-    graft.Memo.once(componentCache,
-      (spark.sparkContext.applicationId, dir, s"lsh:$minBp"),
-      computeClusterLabels(spark, dir, minBp))
-  }
+                                   minBp: Long = 6500): DataFrame =
+    graft.Memo(spark, "cluster-labels", (dir, minBp)) {
+      computeClusterLabels(spark, dir, minBp)
+    }
 
   private def computeClusterLabels(spark: SparkSession, dir: String,
                                    minBp: Long): DataFrame =

@@ -27,21 +27,16 @@ object Gate {
   /** The (fixed, oracle-visible) artifact directory of one operator. */
   def path(op: String): String = s"$Root/$op"
 
-  private val built =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), Unit]
-
   /** Run `write` once per (session, op, input dir) — gate artifacts
     * are memoized like every other session fixture so bench re-runs
     * pay the write exactly once. Returns the artifact directory.
-    * Blocking memo (Memo.once), not a check-then-act flag: queries
-    * may warm concurrently, and a second caller must wait for the
-    * write, never read a half-written artifact.
+    * Blocking memo: queries may warm concurrently, and a second caller
+    * must wait for the write, never read a half-written artifact.
     */
   def once(spark: SparkSession, op: String, dir: String)
           (write: String => Unit): String = {
     val p = path(op)
-    graft.Memo.once(built,
-      (spark.sparkContext.applicationId, op, dir), write(p))
+    graft.Memo(spark, "gate", (op, dir))(write(p))
     p
   }
 }

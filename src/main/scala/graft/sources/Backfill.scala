@@ -173,6 +173,9 @@ object Backfill {
     * overwrite), delete dest-only orphan days, then persist the
     * copied days' manifest entries. Returns the number of days
     * COPIED. Idempotent: a clean rerun is a no-op returning 0.
+    * Both writes carry `partitionOverwriteMode` as a write option, so
+    * the session's conf is never set and a concurrent query never
+    * sees a dynamic-overwrite window.
     */
   def backfill(spark: SparkSession, srcDir: String, destDir: String,
                maxDays: Int = Int.MaxValue): Int = {
@@ -188,38 +191,31 @@ object Backfill {
     }
     val pending = d.filter(!_.isNullAt(1)).map(_.getString(0)).sorted.take(maxDays)
     if (pending.isEmpty) return 0
-    // session-conf mutation window: serialized against other conf
-    // mutators (see GraftSession.confMutex) so a concurrently-warming
-    // drain's set/restore can't interleave with this one
-    graft.GraftSession.confMutex.synchronized {
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      withDay(Tables.events(spark, srcDir))
-        .filter(col("day").isin(pending.toIndexedSeq: _*))
-        .repartition(col("day"))
-        .write.mode("overwrite")
-        .partitionBy("day")
-        .parquet(destDir)
-      // manifest entries AFTER the data commit (under-claim on a
-      // kill, never over-claim), stamped with each day directory's
-      // post-commit signature
-      val src = sourceManifest(spark, srcDir)
-        .filter(col("day").isin(pending.toIndexedSeq: _*)).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      import spark.implicits._
-      val entries = src.map { case (day, n, s) =>
-        val (nf, bytes) = signature(fs, new Path(root, s"day=$day"))
-        (day, n, s, nf, bytes)
-      }.toSeq.toDF("day", "n_rows", "sum_id", "n_files", "bytes")
-      entries.coalesce(1).write.mode("overwrite")
-        .partitionBy("day")
-        .parquet(new Path(root, ManifestDir).toString)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-    }
+    // dynamic overwrite (the write option Spark's
+    // InsertIntoHadoopFsRelationCommand reads): each write replaces
+    // only the day partitions it carries
+    withDay(Tables.events(spark, srcDir))
+      .filter(col("day").isin(pending.toIndexedSeq: _*))
+      .repartition(col("day"))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("day")
+      .parquet(destDir)
+    // manifest entries AFTER the data commit (under-claim on a
+    // kill, never over-claim), stamped with each day directory's
+    // post-commit signature
+    val src = sourceManifest(spark, srcDir)
+      .filter(col("day").isin(pending.toIndexedSeq: _*)).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    import spark.implicits._
+    val entries = src.map { case (day, n, s) =>
+      val (nf, bytes) = signature(fs, new Path(root, s"day=$day"))
+      (day, n, s, nf, bytes)
+    }.toSeq.toDF("day", "n_rows", "sum_id", "n_files", "bytes")
+    entries.coalesce(1).write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("day")
+      .parquet(new Path(root, ManifestDir).toString)
     pending.length
   }
 

@@ -131,51 +131,38 @@ object SnapshotFollow {
       .orderBy("version", "op", "date")
   }
 
-  private val fixtureCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   private[graft] def followFixture(spark: SparkSession, dir: String): String =
-    graft.Memo.once(fixtureCache,
-      (spark.sparkContext.applicationId, dir), {
-        val appId = spark.sparkContext.applicationId
-        val tmp = TmpDir.scoped("snapfollow", appId, dir)
-        val out = TmpDir.scoped("snapfollowout", appId, dir)
-        val cursor = s"$out/_cursor"
-        // out is reused across sessions on the same path: clear it so
-        // a stale cursor/log from a previous JVM cannot leak in
-        val fs = new Path(out)
-          .getFileSystem(spark.sessionState.newHadoopConf())
-        fs.delete(new Path(out), true)
+    graft.Memo.dir(spark, "snapfollowout", dir) { out =>
+      val tmp = TmpDir.scoped("snapfollow", spark.sparkContext.applicationId, dir)
+      val cursor = s"$out/_cursor"
+      // month-partitioned: the follow loop reads manifest diffs,
+      // which are orthogonal to partition count — the 30-dir day
+      // layout only multiplied staging/stats tasks (date stays a
+      // content column; the gate rollup uses it unchanged)
+      val events = Tables.events(spark, dir)
+        .withColumn("date", expr("date(timestamp_micros(ts div 1000))"))
+        .withColumn("ym", date_format(col("date"), "yyyy-MM"))
+      events.repartition(col("ym"))
+        .write.mode("overwrite").partitionBy("ym").parquet(tmp)
+      Snapshot.convert(spark, tmp, "ym")
+      followChanges(spark, tmp, cursor, out) // bootstrap: 0 pending
 
-        // month-partitioned: the follow loop reads manifest diffs,
-        // which are orthogonal to partition count — the 30-dir day
-        // layout only multiplied staging/stats tasks (date stays a
-        // content column; the gate rollup uses it unchanged)
-        val events = Tables.events(spark, dir)
-          .withColumn("date", expr("date(timestamp_micros(ts div 1000))"))
-          .withColumn("ym", date_format(col("date"), "yyyy-MM"))
-        events.repartition(col("ym"))
-          .write.mode("overwrite").partitionBy("ym").parquet(tmp)
-        Snapshot.convert(spark, tmp, "ym")
-        followChanges(spark, tmp, cursor, out) // bootstrap: 0 pending
+      val inWindow = dayofmonth(col("date")) <= 7
+      val updates = events
+        .filter(pmod(col("user_id"), lit(89)) === 5 && inWindow)
+        .withColumn("event_type", lit("corrected"))
+      val inserts = events
+        .filter(pmod(col("user_id"), lit(89)) === 7 && inWindow)
+        .withColumn("event_id", col("event_id") + lit(1000000000L))
+        .withColumn("event_type", lit("inserted"))
+      SnapshotOps.upsert(spark, tmp,
+        updates.unionByName(inserts), "event_id", "ym")
+      followChanges(spark, tmp, cursor, out) // emits 1→2
 
-        val inWindow = dayofmonth(col("date")) <= 7
-        val updates = events
-          .filter(pmod(col("user_id"), lit(89)) === 5 && inWindow)
-          .withColumn("event_type", lit("corrected"))
-        val inserts = events
-          .filter(pmod(col("user_id"), lit(89)) === 7 && inWindow)
-          .withColumn("event_id", col("event_id") + lit(1000000000L))
-          .withColumn("event_type", lit("inserted"))
-        SnapshotOps.upsert(spark, tmp,
-          updates.unionByName(inserts), "event_id", "ym")
-        followChanges(spark, tmp, cursor, out) // emits 1→2
-
-        val doomed = events
-          .filter(pmod(col("user_id"), lit(97)) === 3)
-          .select("event_id")
-        SnapshotOps.delete(spark, tmp, doomed, "event_id")
-        followChanges(spark, tmp, cursor, out) // emits 2→3
-        out
-      })
+      val doomed = events
+        .filter(pmod(col("user_id"), lit(97)) === 3)
+        .select("event_id")
+      SnapshotOps.delete(spark, tmp, doomed, "event_id")
+      followChanges(spark, tmp, cursor, out) // emits 2→3
+    }
 }

@@ -544,23 +544,17 @@ object SnapshotOps {
       .orderBy("date")
   }
 
-  private val restoreCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   private def restoreFixture(spark: SparkSession, dir: String): String =
-    graft.Memo.once(restoreCache,
-      (spark.sparkContext.applicationId, dir), {
-        val tmp = freshTable(spark, "snaprestore", dir)
-        val events = datedEvents(spark, dir)
-          .withColumn("ym", date_format(col("date"), "yyyy-MM"))
-        val v1 = append(spark, tmp, events, "ym", Some("restore-base"))
-          .version
-        delete(spark, tmp,
-          events.filter(pmod(col("user_id"), lit(7)) === 3)
-            .select("event_id"), "event_id")
-        restore(spark, tmp, v1)
-        tmp
-      })
+    graft.Memo.dir(spark, "snaprestore", dir) { tmp =>
+      val events = datedEvents(spark, dir)
+        .withColumn("ym", date_format(col("date"), "yyyy-MM"))
+      val v1 = append(spark, tmp, events, "ym", Some("restore-base"))
+        .version
+      delete(spark, tmp,
+        events.filter(pmod(col("user_id"), lit(7)) === 3)
+          .select("event_id"), "event_id")
+      restore(spark, tmp, v1)
+    }
 
   /** Append-only ingest commit — the primitive continuous ingestion
     * needs: the batch's partitions stage as NEW files (no key
@@ -776,9 +770,6 @@ object SnapshotOps {
     updates.unionByName(inserts)
   }
 
-  private val upsertBaseCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   /** The converted (v1) base table `snapshot_upsert` mutates — built
     * once per (session, input dir). Distinct from [[versionedFixture]]
     * (which the read-side gates share and must stay at its exact
@@ -786,12 +777,9 @@ object SnapshotOps {
     * `snapshot_upsert` invocation, with vacuum bounding the storage.
     */
   private def upsertBaseFixture(spark: SparkSession, dir: String): String =
-    graft.Memo.once(upsertBaseCache,
-      (spark.sparkContext.applicationId, dir), {
-        val tmp = freshTable(spark, "snapupsert", dir)
-        convertDateLayout(spark, datedEvents(spark, dir), tmp)
-        tmp
-      })
+    graft.Memo.dir(spark, "snapupsert", dir) { tmp =>
+      convertDateLayout(spark, datedEvents(spark, dir), tmp)
+    }
 
   /** The shared fixture construction: events date layout → convert
     * (v1) → the correction feed landed as ONE snapshot commit (v2).
@@ -817,21 +805,12 @@ object SnapshotOps {
     * independent build so its gate (and standing bench row) still
     * prices the mutation itself.
     */
-  private val compactBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
   private val compactEpoch = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private val fixtureCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   private def versionedFixture(spark: SparkSession, dir: String): String =
-    graft.Memo.once(fixtureCache,
-      (spark.sparkContext.applicationId, dir), {
-        val tmp = TmpDir.scoped("snapvers",
-          spark.sparkContext.applicationId, dir)
-        buildAndUpsert(spark, dir, tmp)
-        tmp
-      })
+    graft.Memo.dir(spark, "snapvers", dir) { tmp =>
+      buildAndUpsert(spark, dir, tmp)
+    }
 
   /** Time-travel gate query: the rollup of VERSION 1 resolved AFTER
     * v2 committed — the pinned old manifest still answers the exact
@@ -916,24 +895,23 @@ object SnapshotOps {
   def snapshotCompactRollup(spark: SparkSession, dir: String): DataFrame = {
     val tmp = TmpDir.scoped("snapcompact",
       spark.sparkContext.applicationId, dir)
-    val fs = new Path(tmp).getFileSystem(spark.sessionState.newHadoopConf())
     // first-week partitions only: the lifecycle (fragment → compact →
     // invariant) is identical on any partition subset, and a gate
     // should not cost five full-table materializations
     val events = datedEvents(spark, dir)
       .filter(dayofmonth(col("date")) <= 7)
       .withColumn("date", col("date").cast("string"))
-    if (compactBuilt.add((spark.sparkContext.applicationId, tmp))) {
-      // first invocation: the full ingest-then-compact lifecycle on a
-      // fresh table (three interleaved appends fragment every
-      // partition)
-      fs.delete(new Path(tmp), true)
+    // first invocation: the full ingest-then-compact lifecycle on a
+    // fresh table (three interleaved appends fragment every partition)
+    val fresh = graft.Memo.bootstrap(spark, "snapcompact", dir) {
+      freshTable(spark, "snapcompact", dir)
       (0 until 3).foreach { i =>
         append(spark, tmp,
           events.filter(pmod(col("event_id"), lit(3)) === i),
           "date", Some(s"seed-$i"))
       }
-    } else {
+    }
+    if (!fresh) {
       // later invocations: RE-fragment ONE partition (day 1) with a
       // delete + re-append of a third of its rows, so every sample
       // still prices real mutations and a real compaction, at the

@@ -69,9 +69,6 @@ object SnapshotSchema {
 
   // ---- gate fixture + query ----
 
-  private val fixtureCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   /** The evolution lifecycle fixture: base events committed WITHOUT
     * the new column, one metadata-only [[evolve]] adding
     * `quality_bp`, one post-evolution append whose batch CARRIES the
@@ -82,28 +79,25 @@ object SnapshotSchema {
     */
   private[graft] def evolutionFixture(spark: SparkSession,
                                       dir: String): String =
-    graft.Memo.once(fixtureCache,
-      (spark.sparkContext.applicationId, dir), {
-        val tmp = SnapshotOps.freshTable(spark, "snapschema", dir)
-        val events = Tables.events(spark, dir)
-          .withColumn("date", expr("date(timestamp_micros(ts div 1000))"))
-          .withColumn("ym", date_format(col("date"), "yyyy-MM"))
-          .select("event_id", "user_id", "event_type", "date", "ym")
-        SnapshotOps.append(spark, tmp, events, "ym", Some("schema-base"))
-        evolve(spark, tmp, Seq(StructField("quality_bp", LongType)))
-        // wave with the NEW column: shifted re-ingest slice, quality
-        // derived from the shifted id (oracle-reconstructible)
-        val wave = events.filter(pmod(col("user_id"), lit(13)) === 5)
-          .withColumn("event_id", col("event_id") + lit(4000000000L))
-          .withColumn("quality_bp", pmod(col("event_id"), lit(97)) * 100L)
-        SnapshotOps.append(spark, tmp, wave, "ym", Some("schema-wave"))
-        // an evolution-unaware append: no quality column in the batch,
-        // tag must carry forward anyway
-        val plain = events.filter(pmod(col("user_id"), lit(17)) === 3)
-          .withColumn("event_id", col("event_id") + lit(5000000000L))
-        SnapshotOps.append(spark, tmp, plain, "ym", Some("schema-plain"))
-        tmp
-      })
+    graft.Memo.dir(spark, "snapschema", dir) { tmp =>
+      val events = Tables.events(spark, dir)
+        .withColumn("date", expr("date(timestamp_micros(ts div 1000))"))
+        .withColumn("ym", date_format(col("date"), "yyyy-MM"))
+        .select("event_id", "user_id", "event_type", "date", "ym")
+      SnapshotOps.append(spark, tmp, events, "ym", Some("schema-base"))
+      evolve(spark, tmp, Seq(StructField("quality_bp", LongType)))
+      // wave with the NEW column: shifted re-ingest slice, quality
+      // derived from the shifted id (oracle-reconstructible)
+      val wave = events.filter(pmod(col("user_id"), lit(13)) === 5)
+        .withColumn("event_id", col("event_id") + lit(4000000000L))
+        .withColumn("quality_bp", pmod(col("event_id"), lit(97)) * 100L)
+      SnapshotOps.append(spark, tmp, wave, "ym", Some("schema-wave"))
+      // an evolution-unaware append: no quality column in the batch,
+      // tag must carry forward anyway
+      val plain = events.filter(pmod(col("user_id"), lit(17)) === 3)
+        .withColumn("event_id", col("event_id") + lit(5000000000L))
+      SnapshotOps.append(spark, tmp, plain, "ym", Some("schema-plain"))
+    }
 
   /** Gate query: the rollup over all three generations — the
     * NULL-fill semantics are IN the output (null counts + coalesced

@@ -369,9 +369,6 @@ object SnapshotStats {
     (kept, lines.size)
   }
 
-  private val skipFixtureCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   /** The gate fixture: a snapshot table built the way a real ingest
     * clusters data — FOUR range-disjoint `user_id` batches appended in
     * order (each append's files span one quartile, whatever Spark's
@@ -392,38 +389,35 @@ object SnapshotStats {
     * numbering.
     */
   private def skippingFixture(spark: SparkSession, dir: String): String =
-    graft.Memo.once(skipFixtureCache,
-      (spark.sparkContext.applicationId, dir), {
-        val tmp = SnapshotOps.freshTable(spark, "snapskip", dir)
-        val events = Tables.events(spark, dir)
-          .withColumn("date", expr("date(timestamp_micros(ts div 1000))"))
-          .withColumn("wk", expr("concat(date_format(date, 'yyyy-MM'), " +
-            "'-w', cast((day(date) - 1) div 7 as string))"))
-        val m = events.agg(max("user_id")).head().getLong(0)
-        val bounds = Seq(0L, m / 4, m / 2, 3 * m / 4, m + 1)
-        def batch(i: Int) = events.filter(
-          col("user_id") >= bounds(i) && col("user_id") < bounds(i + 1))
-        (0 until 3).foreach { i =>
-          SnapshotOps.append(spark, tmp, batch(i), "wk",
-            Some(s"skipseed-$i"))
-        }
-        statsify(spark, tmp, Seq("user_id"))
-        // blooms on event_id (high-cardinality, unclustered in this
-        // layout — exactly where zone maps prune nothing); the filter
-        // is PER FILE, so size to ~10+ bits per expected PER-FILE key
-        // count (n spread over ~20 files here), not per total rows —
-        // bits = highestOneBit(n) ≈ 10·(n/20)·2 keeps the per-key
-        // budget ≥ 10 bits at any gate sf (sizing per TOTAL rows / 8
-        // gave ~1-2 bits/key at sf ≥ 1: ~90% FP rate, every file kept,
-        // pruning silently degraded to a full scan). The 4th append's
-        // blooms come from the MAINTENANCE path like its zone maps.
-        val n = events.count()
-        val bits = math.max(65536L,
-          java.lang.Long.highestOneBit(n)).toInt
-        bloomify(spark, tmp, Seq(BloomSpec("event_id", bits, 5)))
-        SnapshotOps.append(spark, tmp, batch(3), "wk", Some("skipseed-3"))
-        tmp
-      })
+    graft.Memo.dir(spark, "snapskip", dir) { tmp =>
+      val events = Tables.events(spark, dir)
+        .withColumn("date", expr("date(timestamp_micros(ts div 1000))"))
+        .withColumn("wk", expr("concat(date_format(date, 'yyyy-MM'), " +
+          "'-w', cast((day(date) - 1) div 7 as string))"))
+      val m = events.agg(max("user_id")).head().getLong(0)
+      val bounds = Seq(0L, m / 4, m / 2, 3 * m / 4, m + 1)
+      def batch(i: Int) = events.filter(
+        col("user_id") >= bounds(i) && col("user_id") < bounds(i + 1))
+      (0 until 3).foreach { i =>
+        SnapshotOps.append(spark, tmp, batch(i), "wk",
+          Some(s"skipseed-$i"))
+      }
+      statsify(spark, tmp, Seq("user_id"))
+      // blooms on event_id (high-cardinality, unclustered in this
+      // layout — exactly where zone maps prune nothing); the filter
+      // is PER FILE, so size to ~10+ bits per expected PER-FILE key
+      // count (n spread over ~20 files here), not per total rows —
+      // bits = highestOneBit(n) ≈ 10·(n/20)·2 keeps the per-key
+      // budget ≥ 10 bits at any gate sf (sizing per TOTAL rows / 8
+      // gave ~1-2 bits/key at sf ≥ 1: ~90% FP rate, every file kept,
+      // pruning silently degraded to a full scan). The 4th append's
+      // blooms come from the MAINTENANCE path like its zone maps.
+      val n = events.count()
+      val bits = math.max(65536L,
+        java.lang.Long.highestOneBit(n)).toInt
+      bloomify(spark, tmp, Seq(BloomSpec("event_id", bits, 5)))
+      SnapshotOps.append(spark, tmp, batch(3), "wk", Some("skipseed-3"))
+    }
 
   /** Gate query: a selective rollup (`user_id ≤ max/5`) through the
     * data-skipping read over the range-clustered fixture — the zone
@@ -516,9 +510,6 @@ object SnapshotStats {
     aggFromManifest(spark, tmp, Seq("user_id")).orderBy("wk")
   }
 
-  private val clusterFixtureCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   /** The cluster-gate fixture: ingest arrives clustered by EVENT TIME
     * order (event_id range batches — the natural arrival order), which
     * leaves `user_id` scattered across every file, so a user-keyed
@@ -529,24 +520,21 @@ object SnapshotStats {
     * final row set = `events` exactly once.
     */
   private def clusteredFixture(spark: SparkSession, dir: String): String =
-    graft.Memo.once(clusterFixtureCache,
-      (spark.sparkContext.applicationId, dir), {
-        val tmp = SnapshotOps.freshTable(spark, "snapcluster", dir)
-        val events = Tables.events(spark, dir)
-          .withColumn("date", expr("date(timestamp_micros(ts div 1000))"))
-          .withColumn("ym", date_format(col("date"), "yyyy-MM"))
-        val mE = events.agg(max("event_id")).head().getLong(0)
-        val eb = Seq(0L, mE / 4, mE / 2, 3 * mE / 4, mE + 1)
-        (0 until 4).foreach { i =>
-          SnapshotOps.append(spark, tmp,
-            events.filter(col("event_id") >= eb(i) &&
-              col("event_id") < eb(i + 1)),
-            "ym", Some(s"clseed-$i"))
-        }
-        statsify(spark, tmp, Seq("user_id", "event_id"))
-        SnapshotOps.cluster(spark, tmp, ("user_id", "event_id"))
-        tmp
-      })
+    graft.Memo.dir(spark, "snapcluster", dir) { tmp =>
+      val events = Tables.events(spark, dir)
+        .withColumn("date", expr("date(timestamp_micros(ts div 1000))"))
+        .withColumn("ym", date_format(col("date"), "yyyy-MM"))
+      val mE = events.agg(max("event_id")).head().getLong(0)
+      val eb = Seq(0L, mE / 4, mE / 2, 3 * mE / 4, mE + 1)
+      (0 until 4).foreach { i =>
+        SnapshotOps.append(spark, tmp,
+          events.filter(col("event_id") >= eb(i) &&
+            col("event_id") < eb(i + 1)),
+          "ym", Some(s"clseed-$i"))
+      }
+      statsify(spark, tmp, Seq("user_id", "event_id"))
+      SnapshotOps.cluster(spark, tmp, ("user_id", "event_id"))
+    }
 
   /** Gate query: a conjunctive 2-D selective rollup
     * (`user_id ≤ maxU/3 AND event_id ≤ maxE/3`) through the

@@ -181,46 +181,36 @@ object SnapshotWap {
       .orderBy("event_type", "date")
   }
 
-  private val fixtureCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   private def wapFixture(spark: SparkSession, dir: String): String =
-    graft.Memo.once(fixtureCache,
-      (spark.sparkContext.applicationId, dir), {
-        val appId = spark.sparkContext.applicationId
-        val tmp = TmpDir.scoped("snapwap", appId, dir)
-        val root = new Path(tmp)
-        root.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(root, true)
-        // month-partitioned: WAP exercises manifest machinery, which
-        // is orthogonal to partition count — the 30-dir day layout
-        // only multiplied staging/stats tasks (date stays in content)
-        val events = Tables.events(spark, dir)
-          .withColumn("date", expr("date(timestamp_micros(ts div 1000))"))
-          .withColumn("ym", date_format(col("date"), "yyyy-MM"))
-        SnapshotOps.append(spark, tmp, events, "ym", Some("wap-base"))
+    graft.Memo.dir(spark, "snapwap", dir) { tmp =>
+      // month-partitioned: WAP exercises manifest machinery, which
+      // is orthogonal to partition count — the 30-dir day layout
+      // only multiplied staging/stats tasks (date stays in content)
+      val events = Tables.events(spark, dir)
+        .withColumn("date", expr("date(timestamp_micros(ts div 1000))"))
+        .withColumn("ym", date_format(col("date"), "yyyy-MM"))
+      SnapshotOps.append(spark, tmp, events, "ym", Some("wap-base"))
 
-        def audit(): Boolean =
-          Snapshot.read(spark, tmp)
-            .filter(col("event_type") === "corrupt").isEmpty
+      def audit(): Boolean =
+        Snapshot.read(spark, tmp)
+          .filter(col("event_type") === "corrupt").isEmpty
 
-        // wave 1: a corrupted delivery — the audit must catch it
-        val bad = events
-          .filter(pmod(col("user_id"), lit(101)) === 11)
-          .withColumn("event_id", col("event_id") + lit(2000000000L))
-          .withColumn("event_type", lit("corrupt"))
-        stage(spark, tmp, bad, "ym", "wave-bad")
-        require(!audit(), "audit failed to flag the bad wave")
-        reject(spark, tmp, "wave-bad")
+      // wave 1: a corrupted delivery — the audit must catch it
+      val bad = events
+        .filter(pmod(col("user_id"), lit(101)) === 11)
+        .withColumn("event_id", col("event_id") + lit(2000000000L))
+        .withColumn("event_type", lit("corrupt"))
+      stage(spark, tmp, bad, "ym", "wave-bad")
+      require(!audit(), "audit failed to flag the bad wave")
+      reject(spark, tmp, "wave-bad")
 
-        // wave 2: a clean delivery — audited, published
-        val good = events
-          .filter(pmod(col("user_id"), lit(103)) === 13)
-          .withColumn("event_id", col("event_id") + lit(3000000000L))
-          .withColumn("event_type", lit("appended"))
-        stage(spark, tmp, good, "ym", "wave-good")
-        require(audit(), "audit rejected the good wave")
-        publish(spark, tmp, "wave-good")
-        tmp
-      })
+      // wave 2: a clean delivery — audited, published
+      val good = events
+        .filter(pmod(col("user_id"), lit(103)) === 13)
+        .withColumn("event_id", col("event_id") + lit(3000000000L))
+        .withColumn("event_type", lit("appended"))
+      stage(spark, tmp, good, "ym", "wave-good")
+      require(audit(), "audit rejected the good wave")
+      publish(spark, tmp, "wave-good")
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.Tables
 import graft.logs.LogView
@@ -65,25 +65,17 @@ object LiveVisitors {
     */
   def trackVisitorsStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val stream = Tables.stream(spark, dir, "events")
-    val keyed: Dataset[(Long, Long, String)] = LogView.fromEvents(stream)
-      .select(col("event_id"), col("timestamp"), col("remote_host"))
-      .as[(Long, Long, String)]
-    val tracked = keyed
-      .groupByKey(_._3)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(updateHost)
-    val name = "graft_live_visitors"
     StreamOps.sizedForState(spark, derived = Some(
-      StreamOps.derivedStateFor(spark, dir, "events"))) {
-      val q = tracked.toDF().writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      StreamOps.derivedStateFor(spark, dir, "events"))) { child =>
+      val stream = Tables.stream(child, dir, "events")
+      val keyed: Dataset[(Long, Long, String)] = LogView.fromEvents(stream)
+        .select(col("event_id"), col("timestamp"), col("remote_host"))
+        .as[(Long, Long, String)]
+      val tracked = keyed
+        .groupByKey(_._3)
+        .flatMapGroupsWithState(
+          OutputMode.Append(), GroupStateTimeout.NoTimeout())(updateHost)
+      StreamOps.toMemory(spark, tracked.toDF(), "graft_live_visitors", "append")
     }
-    spark.table(name)
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.Tables
 import graft.logs.LogView
@@ -79,33 +79,25 @@ object RateLimiter {
                       rate: Double, burstOpt: Option[Double] = None): DataFrame = {
     import spark.implicits._
     val burst = burstOpt.getOrElse(10 * rate)
-    val stream = Tables.stream(spark, dir, "events")
-    val logs = LogView.fromEvents(stream)
-      .select(col("event_id"), col("timestamp"), col("site"), col("type"))
     // IsMessage guard (Database.cxx:107-115): only http_error records
     // with a site are subject to the bucket
     val isMessage = col("type") === "http_error" && col("site").isNotNull
-    val keyed: Dataset[(Long, Long, String)] = logs.filter(isMessage)
-      .drop("type").as[(Long, Long, String)]
-    val limited = keyed
-      .groupByKey(_._3)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        updateSite(rate, burst))
-    val passthrough = logs.filter(!isMessage).drop("type")
-      .as[(Long, Long, String)]
-      .map(r => Accepted(r._1, r._2, r._3))
-    val name = "graft_rate_limit"
     StreamOps.sizedForState(spark, derived = Some(
-      StreamOps.derivedStateFor(spark, dir, "events"))) {
-      val q = limited.union(passthrough).toDF().writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(name).orderBy("timestamp", "event_id")
+      StreamOps.derivedStateFor(spark, dir, "events"))) { child =>
+      val logs = LogView.fromEvents(Tables.stream(child, dir, "events"))
+        .select(col("event_id"), col("timestamp"), col("site"), col("type"))
+      val keyed: Dataset[(Long, Long, String)] = logs.filter(isMessage)
+        .drop("type").as[(Long, Long, String)]
+      val limited = keyed
+        .groupByKey(_._3)
+        .flatMapGroupsWithState(
+          OutputMode.Append(), GroupStateTimeout.NoTimeout())(
+          updateSite(rate, burst))
+      val passthrough = logs.filter(!isMessage).drop("type")
+        .as[(Long, Long, String)]
+        .map(r => Accepted(r._1, r._2, r._3))
+      StreamOps.toMemory(spark, limited.union(passthrough).toDF(),
+        "graft_rate_limit", "append")
+    }.orderBy("timestamp", "event_id")
   }
 }

@@ -16,6 +16,10 @@ object StreamOps {
 
   /** Shared drain scaffold: one testdata table as a file stream →
     * `transform` → memory sink, AvailableNow-drained to completion.
+    * The stream lives in [[sizedForState]]'s child session, and so
+    * must the transform's result (start from the stream, or build
+    * static sides from `stream.sparkSession`): a frame of the caller's
+    * session would run the stream with the caller's partition count.
     * The schema comes from the batch loader (explicit — stream
     * sources must never infer), and the glob pins the stream to the
     * one table file. Every streaming operator here differs ONLY in
@@ -24,20 +28,29 @@ object StreamOps {
     */
   private def drain(spark: SparkSession, dir: String, table: String,
                     name: String, mode: String)(
-      transform: DataFrame => DataFrame): DataFrame = {
-    val stream = Tables.stream(spark, dir, table)
+      transform: DataFrame => DataFrame): DataFrame =
     sizedForState(spark,
-      derived = Some(derivedStateFor(spark, dir, table))) {
-      val q = transform(stream)
-        .writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      derived = Some(derivedStateFor(spark, dir, table))) { child =>
+      toMemory(spark, transform(Tables.stream(child, dir, table)), name, mode)
     }
-    spark.table(name)
+
+  /** Drains `result`, a stream of [[sizedForState]]'s child session,
+    * AvailableNow into the memory sink `name`, and returns the sink's
+    * table as a frame of the CALLER's session: batch work on the
+    * drained rows (the sorts and windows after every drain) plans
+    * with the caller's conf, not the state-sized partition count, and
+    * reaches the caller's query-execution listeners.
+    */
+  private[streaming] def toMemory(spark: SparkSession, result: DataFrame,
+                                  name: String, mode: String): DataFrame = {
+    result.writeStream
+      .format("memory")
+      .queryName(name)
+      .outputMode(mode)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    org.apache.spark.sql.GraftFrames.rebind(spark, result.sparkSession.table(name))
   }
 
   /** Footer-derived row count of the drained table, memoized per
@@ -47,15 +60,12 @@ object StreamOps {
     * constant tuned for one scale factor. Metadata-only (parquet
     * footers), no job.
     */
-  private val rowCountCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
-
   private[streaming] def tableRows(spark: SparkSession, dir: String,
                                    table: String): Long =
-    graft.Memo.once(rowCountCache,
-      (spark.sparkContext.applicationId, s"$dir/$table"),
+    graft.Memo(spark, "table-rows", s"$dir/$table") {
       try graft.sources.StorageStats.parquetRowCount(spark, s"$dir/$table.parquet")
-      catch { case _: Throwable => 400000L })
+      catch { case _: Throwable => 400000L }
+    }
 
   /** The drain-site derived partition count: the arrival-rate formula
     * bounded BELOW by a small compute floor — a tiny batch still
@@ -101,29 +111,42 @@ object StreamOps {
     * Sizing precedence: explicit `n` > [[StatePartitionsConf]] >
     * [[statePartitionsFor]] of the drain's batch size (AvailableNow
     * delivers the whole table as ~one batch; 4e5 rows at sf0.1 → 8
-    * partitions). Batch queries are unaffected — the conf is restored
-    * after the drain completes. The set/restore mutates the SESSION
-    * conf, so it runs under [[graft.GraftSession.confMutex]]: drains
-    * serialize among themselves (two interleaved set/restore windows
-    * would race the restore and leave the session misconfigured),
-    * while concurrently-warming batch queries — whose RESULTS never
-    * depend on the shuffle partition count — proceed unblocked. A
-    * deployment would set [[StatePartitionsConf]] per session or pass
-    * `n` and skip the mutation.
+    * partitions). `body` gets a child session of `spark` holding the
+    * parent's modifiable SQL conf and streaming listeners, with
+    * `spark.sql.shuffle.partitions` set to the target; it builds its
+    * stream from the child and hands the drained rows back through
+    * [[toMemory]]. The parent session's conf is never touched, so
+    * drains and concurrently-warming queries share no conf window.
+    * One child serves every drain of a (session, target) pair, one
+    * drain at a time: a session's StreamingQueryManager registers a
+    * listener on the SparkContext's bus that is never removed, so a
+    * child per drain would grow the bus with every drain.
     */
   private[streaming] def sizedForState[T](spark: SparkSession,
                                           n: Option[Int] = None,
-                                          derived: Option[Int] = None)(body: => T): T =
-    graft.GraftSession.confMutex.synchronized {
-      val target = n
-        .orElse(spark.conf.getOption(StatePartitionsConf).map(_.toInt))
-        .orElse(derived)
-        .getOrElse(statePartitionsFor(400000L))
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", target.toString)
-      try body
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+                                          derived: Option[Int] = None)(
+      body: SparkSession => T): T = {
+    val target = n
+      .orElse(spark.conf.getOption(StatePartitionsConf).map(_.toInt))
+      .orElse(derived)
+      .getOrElse(statePartitionsFor(400000L))
+    val child = graft.Memo(spark, "state-session", (spark, target))(spark.newSession())
+    child.synchronized {
+      val conf = spark.conf.getAll.filter { case (k, _) => spark.conf.isModifiable(k) }
+      child.conf.getAll.keys.foreach { k =>
+        if (!conf.contains(k) && child.conf.isModifiable(k)) child.conf.unset(k)
+      }
+      conf.foreach { case (k, v) => child.conf.set(k, v) }
+      child.conf.set("spark.sql.shuffle.partitions", target.toString)
+      // the drain is the caller's query: its progress reaches exactly
+      // the caller's streaming listeners
+      val want = spark.streams.listListeners().toSet
+      val have = child.streams.listListeners().toSet
+      (have -- want).foreach(child.streams.removeListener)
+      (want -- have).foreach(child.streams.addListener)
+      body(child)
     }
+  }
 
   /** The [[graft.logs.Shaping.timeseries]] rollup as an incremental
     * windowed aggregation: watermarked event-time 1-hour windows over
@@ -284,7 +307,7 @@ object StreamOps {
     val idx = graft.pipeline.Dedup.bandIndexFor(spark, dir, 64, 32)
     drain(spark, dir, "documents", "graft_inc_dedup_stream", "append") {
       stream =>
-        graft.pipeline.Dedup.incrementalStreamProbe(spark,
+        graft.pipeline.Dedup.incrementalStreamProbe(stream.sparkSession,
           graft.pipeline.Dedup.normedOf(stream)
             .filter(col("doc_id") % 7 === 0), idx)
     }.orderBy("new_id", "dup_of")
@@ -312,26 +335,19 @@ object StreamOps {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("path", "string").add("modificationTime", "timestamp")
       .add("length", "long").add("content", "binary")
-    val stream = spark.readStream.format("binaryFile")
-      .schema(schema).load(tmp)
     sizedForState(spark, derived = Some(
-      derivedStateFor(spark, dir, "events"))) {
-      val q = stream.select(col("content")).as[Array[Byte]]
+      derivedStateFor(spark, dir, "events"))) { child =>
+      toMemory(spark, child.readStream.format("binaryFile")
+        .schema(schema).load(tmp)
+        .select(col("content")).as[Array[Byte]]
         .map(graft.sources.DatagramCodec.parseStats(_))
         .agg(
           sum("nReceived").as("n_received"),
           sum("nMalformed").as("n_malformed"),
           sum("nDiscarded").as("n_discarded"),
-          sum("nParsed").as("n_parsed"))
-        .writeStream
-        .format("memory")
-        .queryName("graft_datagram_stats_stream")
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+          sum("nParsed").as("n_parsed")),
+        "graft_datagram_stats_stream", "complete")
     }
-    spark.table("graft_datagram_stats_stream")
   }
 
   /** [[graft.logs.Shaping.accumulateTop]] as a live top-N: the
@@ -536,22 +552,21 @@ object StreamOps {
     // samples price the steady-state poll of an up-to-date ingest —
     // source listing + checkpoint resume + snapshot read — which is
     // what a 100 TB continuous ingest pays between arrivals.
-    if (ingestBuilt.add((appId, tableDir))) {
+    def ingest(): Unit = ingestSnapshot(spark, dir, "events", tableDir, ckpt)
+    val fresh = graft.Memo.bootstrap(spark, "snapingest", dir) {
       val conf = spark.sessionState.newHadoopConf()
       Seq(tableDir, ckpt).foreach { d =>
         val p = new org.apache.hadoop.fs.Path(d)
         p.getFileSystem(conf).delete(p, true)
       }
+      ingest()
     }
-    ingestSnapshot(spark, dir, "events", tableDir, ckpt)
+    if (!fresh) ingest()
     graft.sources.Snapshot.read(spark, tableDir)
       .groupBy(col("date"))
       .agg(count(lit(1)).as("n"), sum("event_id").as("sum_id"))
       .orderBy("date")
   }
-
-  private val ingestBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
 
   /** Gate query: the change-data feed consumed as a STREAM — the
     * consumer half of the table-format contract done with Structured

@@ -1,7 +1,6 @@
 package graft
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -27,20 +26,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     dir
   }
 
-  /** Jobs `body` submits. Counts only jobs in a job group of its own,
-    * then runs a sentinel job in another group: the listener bus
-    * delivers in order, so once the sentinel is seen every earlier
-    * job start has been counted.
+  /** Jobs `body` submits. */
+  protected def jobsOf(body: => Unit): Int = jobPropertiesOf(body).size
+
+  /** The local properties of every job `body` submits (SQL executions
+    * carry the session's set SQL conf there). Counts only jobs in a
+    * job group of its own, then runs a sentinel job in another group:
+    * the listener bus delivers in order, so once the sentinel is seen
+    * every earlier job start has been seen.
     */
-  protected def jobsOf(body: => Unit): Int = {
+  protected def jobPropertiesOf(body: => Unit): Seq[java.util.Properties] = {
     val sc = spark.sparkContext
     val group = s"jobs-of-${System.nanoTime()}"
-    val jobs = new AtomicInteger(0)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
     val drained = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
         Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`group`) => jobs.add(js.properties)
           case Some(g) if g == s"$group-sentinel" => drained.countDown()
           case _ =>
         }
@@ -52,7 +55,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       sc.setJobGroup(s"$group-sentinel", "sentinel")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(drained.await(30, TimeUnit.SECONDS), "listener bus never drained")
-      jobs.get()
+      jobs.toArray(Array.empty[java.util.Properties]).toSeq
     } finally sc.removeSparkListener(listener)
   }
 

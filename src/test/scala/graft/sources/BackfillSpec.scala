@@ -33,6 +33,21 @@ class BackfillSpec extends SparkSpec {
     assert(src == dst)
   }
 
+  test("backfill sets dynamic overwrite per write, never in the session conf") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val dest = freshDest()
+    // SQL executions carry the session's set conf in their jobs'
+    // properties: a conf window during the writes would show here
+    val props = jobPropertiesOf(Backfill.backfill(spark, sf, dest, maxDays = 3): Unit)
+    assert(props.nonEmpty)
+    assert(props.forall(_.getProperty(key) == null),
+      s"session conf set during backfill: ${props.map(_.getProperty(key)).distinct}")
+    assert(!spark.conf.getAll.contains(key))
+    // the resumed copy still replaces only the days it carries
+    Backfill.backfill(spark, sf, dest)
+    assert(Backfill.diff(spark, sf, dest).isEmpty)
+  }
+
   test("interrupted clone resumes: bounded run leaves a diff, rerun completes") {
     val dest = freshDest()
     val first = Backfill.backfill(spark, sf, dest, maxDays = 3)

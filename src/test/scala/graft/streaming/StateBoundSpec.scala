@@ -1,8 +1,13 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import graft.{SparkSpec, Tables}
+import org.apache.spark.ListenerBusProbe
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress, Trigger}
 
 /** Proves the stream-stream attribution join's state store is
   * watermark-BOUNDED, not append-only: fed the same month of events
@@ -57,17 +62,20 @@ class StateBoundSpec extends SparkSpec {
 
   test("sizedForState: precedence explicit > conf > formula, and restores") {
     val before = spark.conf.get("spark.sql.shuffle.partitions")
-    def inside(): Int =
-      spark.conf.get("spark.sql.shuffle.partitions").toInt
+    def inside(child: org.apache.spark.sql.SparkSession): Int = {
+      // the drain's sizing lives in the child; the parent never changes
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == before)
+      child.conf.get("spark.sql.shuffle.partitions").toInt
+    }
     // formula fallback (no explicit/conf/derived: the assumed
     // ~4e5-row batch at 12.5k rows/partition → 32)
-    assert(StreamOps.sizedForState(spark)(inside()) == 32)
+    assert(StreamOps.sizedForState(spark)(inside) == 32)
     // session conf override — the deploy-time knob
     spark.conf.set(StreamOps.StatePartitionsConf, "4")
     try {
-      assert(StreamOps.sizedForState(spark)(inside()) == 4)
+      assert(StreamOps.sizedForState(spark)(inside) == 4)
       // explicit parameter beats the conf
-      assert(StreamOps.sizedForState(spark, Some(16))(inside()) == 16)
+      assert(StreamOps.sizedForState(spark, Some(16))(inside) == 16)
     } finally spark.conf.unset(StreamOps.StatePartitionsConf)
     // batch queries never see the drain sizing
     assert(spark.conf.get("spark.sql.shuffle.partitions") == before)
@@ -81,5 +89,46 @@ class StateBoundSpec extends SparkSpec {
     assert(StreamOps.statePartitionsFor(1L) == 1)
     assert(StreamOps.statePartitionsFor(0L) == 1)
     assert(StreamOps.statePartitionsFor(Long.MaxValue) == 2048)
+  }
+
+  test("drains of one state size share a child: flat listener bus, results planned by the caller") {
+    val sc = spark.sparkContext
+    val before = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        progress.add(e.progress)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    spark.conf.set(StreamOps.StatePartitionsConf, "7")
+    try {
+      val first = StreamOps.dedupExactStream(spark, sf)
+      // repeat drains reuse the child's streaming bus. Stateless ones:
+      // a stateful query's own session clone opens one more bus per
+      // run inside Spark, whichever session starts it
+      val bus = ListenerBusProbe.streamingBuses(sc)
+      (1 to 3).foreach(_ => StreamOps.piiScrubStream(spark, sf))
+      assert(ListenerBusProbe.streamingBuses(sc) == bus)
+      // the state ran at the drain's size, and its progress reached
+      // the caller's listener
+      ListenerBusProbe.drain(sc)
+      val stateParts = progress.asScala.toSeq
+        .flatMap(_.stateOperators.map(_.numShufflePartitions)).toSet
+      assert(stateParts == Set(7L))
+      // the drained rows are a frame of the caller: its sort plans
+      // with the caller's partition count, not the state size
+      assert(first.sparkSession eq spark)
+      val plan = first.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      val exchanges = plan.collect { case e: ShuffleExchangeLike => e.numPartitions }
+      assert(exchanges == Seq(before))
+    } finally {
+      spark.conf.unset(StreamOps.StatePartitionsConf)
+      spark.streams.removeListener(listener)
+    }
   }
 }
