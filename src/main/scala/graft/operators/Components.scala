@@ -16,53 +16,15 @@ import org.apache.spark.sql.functions._
   *    formulation of Kiveris et al., "Connected Components in
   *    MapReduce and Beyond", SoCC 2014).
   *
-  * Each round is two shuffle joins on node id; [[cut]] truncates the
-  * iterative lineage (an uncut 2·k-join plan tree hangs the optimizer
-  * long before the data is the problem — on a cluster this would be a
+  * Each round is two shuffle joins on node id; [[Frames.materialize]]
+  * truncates the iterative lineage and resets its size estimate (an
+  * uncut 2·k-join plan tree hangs the optimizer long before the data
+  * is the problem — on a cluster this would be a
   * reliable checkpoint instead). Convergence is detected by the
   * label-sum invariant: labels only ever decrease, so an unchanged
   * sum means a fixpoint (summed in decimal — see labelSum).
   */
 object Components {
-
-  /** Materialize `df` and cut both its lineage AND its plan-size
-    * statistics. A bare `localCheckpoint` truncates lineage but
-    * PRESERVES the origin plan's estimated `sizeInBytes`
-    * (`LogicalRDD.fromDataset` carries the origin stats), and the
-    * size estimator multiplies child sizes at every join — so in a
-    * self-join loop the carried estimate SQUARES each round. The data
-    * never misbehaves, but by round ~15 the estimate is a
-    * megabit-long BigInteger and ONE stats visit costs minutes of
-    * driver CPU in Karatsuba multiplication (observed at the 100×
-    * scale probe: `dedup_keep` spent >10 min inside
-    * `SizeInBytesOnlyStatsPlanVisitor` while the cluster sat idle).
-    * Wrapping the checkpoint in a fresh-leaf frame (row RDD +
-    * schema) resets each round to default leaf statistics, keeping
-    * per-round planning O(1) at any round count.
-    */
-  private def cut(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    spark.createDataFrame(df.rdd, df.schema).localCheckpoint(true)
-  }
-
-  /** Free a superseded [[cut]] frame's checkpoint blocks. Every round
-    * retires the previous round's labels; without an explicit drop
-    * the blocks accumulate for the LOOP's lifetime and then linger
-    * for the SESSION's (observed at the 100× probe: an 8 g driver
-    * carried every round of dedup_clusters + dedup_keep and OOM'd
-    * two queries later in knn_join's aggregate). Only superseded
-    * frames are dropped — the returned final labels keep their
-    * blocks, because consumers (the memoized cluster-labels
-    * artifact) read them long after this call returns, and a
-    * checkpointed frame cannot be recomputed once its blocks are
-    * gone.
-    */
-  private def drop(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** @param nodes one column `node` (every vertex, including
     *              singletons — they emerge as their own component)
@@ -92,10 +54,10 @@ object Components {
       .join(nodes.select(col("node").as("b")), Seq("b"), "left_semi")
       .select(col("a"), col("b"))
     val touched = sym0.select(col("a").as("node")).distinct()
-    val sym = cut(sym0
+    val sym = Frames.materialize(sym0
       .union(touched.select(col("node").as("a"), col("node").as("b")))
       .distinct())
-    var labels = cut(sym.select(col("a").as("node")).distinct()
+    var labels = Frames.materialize(sym.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("label")))
     // the sum accumulates in DECIMAL(38,0): int64 would overflow (and,
     // under the session's pinned ANSI mode, raise) once node ids are
@@ -116,7 +78,7 @@ object Components {
         .groupBy(sym("a").as("node")).agg(min("label").as("label"))
       // pointer jumping: every label IS a node id (min over a set
       // containing ids), so the self-join is total
-      val jumped = cut(stepped.as("x")
+      val jumped = Frames.materialize(stepped.as("x")
         .join(stepped.select(col("node").as("pn"), col("label").as("pl")).as("y"),
           col("x.label") === col("y.pn"))
         .select(col("x.node").as("node"),
@@ -124,10 +86,13 @@ object Components {
       val newSum = labelSum(jumped)
       converged = newSum.compareTo(prevSum) == 0
       prevSum = newSum
-      drop(labels)
+      // only superseded rounds are dropped: the returned labels keep
+      // their blocks, which consumers (the memoized cluster-labels
+      // artifact) read long after this call returns
+      Frames.drop(labels)
       labels = jumped
     }
-    drop(sym)
+    Frames.drop(sym)
     // singletons (nodes never touched by an edge) label themselves
     val singles = nodes
       .join(labels.select(col("node")), Seq("node"), "left_anti")

@@ -8,9 +8,16 @@ import org.apache.spark.sql.DataFrame
   *  - a frame consumed by several branches or loop iterations is
   *    computed ONCE per invocation (never re-derived per consumer —
   *    at 100 TB each re-derivation is a full corpus pass), and
-  *  - carried size estimates reset to leaf defaults (a bare
-  *    localCheckpoint preserves origin stats, which SQUARE per round
-  *    in self-join loops — see [[Components]]'s cut note).
+  *  - carried size estimates reset to leaf defaults. A bare
+  *    `localCheckpoint` truncates lineage but PRESERVES the origin
+  *    plan's estimated `sizeInBytes` (`LogicalRDD.fromDataset` carries
+  *    the origin stats), and the size estimator multiplies child sizes
+  *    at every join — so in a self-join loop ([[Components]]) the
+  *    carried estimate SQUARES each round: by round ~15 it is a
+  *    megabit-long BigInteger and ONE stats visit costs minutes of
+  *    driver CPU (observed at the 100× scale probe: `dedup_keep` spent
+  *    >10 min inside `SizeInBytesOnlyStatsPlanVisitor` while the
+  *    cluster sat idle). The fresh leaf keeps per-round planning O(1).
   * Blocks are MEMORY_AND_DISK and freed by the ContextCleaner once
   * the invocation's result is unreachable; nothing persists across
   * invocations, so every bench/oracle sample still computes from the
@@ -25,8 +32,8 @@ import org.apache.spark.sql.DataFrame
   * MEMORY_AND_DISK evicts to disk under heap pressure rather than
   * OOM, and heap pressure itself triggers the GC that lets the
   * ContextCleaner reap the previous invocation's now-unreachable
-  * blocks. (The [[graft.operators.Components]] OOM its drop-note
-  * records came from EAGERLY-consumed loop state that could and now
+  * blocks. (The [[graft.operators.Components]] OOM recorded at
+  * [[drop]] came from EAGERLY-consumed loop state that could and now
   * does unpersist deterministically mid-loop — a different lifetime:
   * those blocks were provably dead before the function returned.)
   */
@@ -38,10 +45,12 @@ object Frames {
 
   /** Free a [[materialize]]d frame's checkpoint blocks NOW instead of
     * waiting for the ContextCleaner — for call sites that can prove
-    * the frame is superseded (e.g. a refreshed session artifact whose
-    * previous generation no live plan references). A checkpointed
-    * frame cannot be recomputed once its blocks are gone, so callers
-    * must only drop frames no consumer will touch again.
+    * the frame is superseded, such as [[Components]]' retired rounds
+    * (without the drop they linger for the SESSION: at the 100× probe
+    * an 8 g driver carried every round of dedup_clusters + dedup_keep
+    * and OOM'd two queries later). A checkpointed frame cannot be
+    * recomputed once its blocks are gone, so callers must only drop
+    * frames no consumer will touch again.
     */
   def drop(df: DataFrame): Unit =
     df.queryExecution.analyzed match {

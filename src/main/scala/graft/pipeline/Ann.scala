@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -19,9 +18,14 @@ import graft.functions.{cosine_sim, hyperplane_buckets}
 object Ann {
 
   private def vectors(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(spark, dir)
-      .select(col("vec_id"),
-        expr("transform(embedding, x -> cast(x as double))").as("v"))
+    Tables.embeddings(spark, dir).select(col("vec_id"), Candidates.vector)
+
+  /** The query slice `vec_id < nQueries` of a (vec_id, v) relation as
+    * (q_id, qv).
+    */
+  private def queriesOf(vecs: DataFrame, nQueries: Int): DataFrame =
+    vecs.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("q_id"), col("v").as("qv"))
 
   /** Exact top-k cosine neighbours for query vectors `vec_id < nQueries`
     * (self excluded). Broadcast the tiny query side; rank per query
@@ -30,16 +34,10 @@ object Ann {
   def bruteTopK(spark: SparkSession, dir: String,
                 nQueries: Int = 5, k: Int = 10): DataFrame = {
     val all = vectors(spark, dir)
-    val queries = all.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val scored = all.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        cosine_sim(col("qv"), col("v")).as("cos"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id")
-      .orderBy("q_id", "rank")
+    Candidates.ranked(
+      all.join(broadcast(queriesOf(all, nQueries)), col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("vec_id").as("n_id"),
+          cosine_sim(col("qv"), col("v")).as("cos")), k)
   }
 
   /** LSH-bucketed approximate top-k: 16 tables × 6 random-hyperplane
@@ -91,31 +89,21 @@ object Ann {
     val qb = buckets.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("t"), col("bucket"))
-    val candidates = buckets.join(broadcast(qb), Seq("t", "bucket"))
+    Candidates.ranked(buckets.join(broadcast(qb), Seq("t", "bucket"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
         cosine_sim(col("qv"), col("v")).as("cos"))
-      .groupBy("q_id", "n_id").agg(max("cos").as("cos"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    candidates
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id")
-      .orderBy("q_id", "rank")
+      .groupBy("q_id", "n_id").agg(max("cos").as("cos")), k)
   }
 
-  /** IVF-style approximate top-k: an MLlib KMeans coarse quantiser
-    * partitions the corpus into `cells`; each query probes its
-    * `nprobe` nearest cells and runs exact cosine only there — the
-    * classic inverted-file ANN layout. At 100 TB the quantiser trains
-    * on a sample, assignment is one map pass, and the probe join
-    * shuffles on cell id (each cell ≈ N/cells rows, the nprobe/cells
-    * fraction of the corpus is all a query touches).
-    *
-    * KMeans is seeded → deterministic for a fixed input partitioning;
-    * still *rows-only* (cluster boundaries are engine-specific), with
-    * recall vs [[bruteTopK]] gated in AnnSpec.
+  /** Cap on the quantiser's training-set size: KMeans quality needs a
+    * representative sample, not the corpus — a full-corpus fit is the
+    * one step of IVF construction that would NOT scale (10 iterations
+    * × all N vectors through the driver-coordinated ML job). 100k
+    * vectors is orders of magnitude more than `cells` needs.
     */
+  val MaxTrainVectors = 100000L
+
   /** The shared IVF coarse quantiser: KMeans over the embedding
     * corpus, returning (per-vector cell assignment, cell-center dim).
     * Used by both [[ivfTopK]] and
@@ -127,14 +115,6 @@ object Ann {
     * (session, dir, cells) here — the local stand-in for a persisted
     * model artifact.
     */
-  /** Cap on the quantiser's training-set size: KMeans quality needs a
-    * representative sample, not the corpus — a full-corpus fit is the
-    * one step of IVF construction that would NOT scale (10 iterations
-    * × all N vectors through the driver-coordinated ML job). 100k
-    * vectors is orders of magnitude more than `cells` needs.
-    */
-  val MaxTrainVectors = 100000L
-
   def ivfAssign(spark: SparkSession, dir: String,
                 cells: Int = 16): (DataFrame, DataFrame) =
     graft.Memo(spark, "ivf-quantiser", (dir, cells)) {
@@ -198,20 +178,35 @@ object Ann {
 
   /** The router as a plan-side column: a nested literal under the
     * budget (ksuper·dim + cells·dim doubles), a one-row broadcast
-    * relation past it — same discipline as [[attachGrid]]; a
-    * million-cell router is ~500 MB of centers and must never ride
-    * every task's serialized plan.
+    * relation past it ([[Candidates.attach]]); a million-cell router
+    * is ~500 MB of centers and must never ride every task's
+    * serialized plan.
     */
   private[graft] def attachRouter(df: DataFrame, router: RouterSupers,
-                                  budget: Int = MaxPlanLiteralDoubles): (DataFrame, Column) = {
-    val doubles = router.map(s => s._1.size + s._3.map(_._2.size).sum).sum
-    if (doubles <= budget) (df, typedLit(router))
-    else {
-      val sq = df.sparkSession
-      import sq.implicits._
-      (df.crossJoin(broadcast(Seq(Tuple1(router)).toDF("__router"))),
-        col("__router"))
-    }
+                                  budget: Int = MaxPlanLiteralDoubles): (DataFrame, Column) =
+    Candidates.attach(df, router,
+      router.map(s => s._1.size + s._3.map(_._2.size).sum).sum, "__router", budget)
+
+  /** `vecs` (vec_id, v) listed under each vector's `nprobe` nearest
+    * cells through the router ([[routeProbeExpr]] — O(√cells) loops
+    * per vector once the cell count scales with the corpus; pure
+    * per-row compute, no window, no model state), as (vec_id, v, cell).
+    */
+  private[pipeline] def probedOf(vecs: DataFrame, router: RouterSupers,
+                                 nprobe: Int): DataFrame = {
+    val (rframe, rcol) = attachRouter(vecs, router)
+    rframe.select(col("vec_id"), col("v"),
+      explode(routeProbeExpr(rcol, router, nprobe)).as("cell"))
+  }
+
+  /** The corpus under the shared `cells` quantiser, multi-probe
+    * listed ([[probedOf]]): the symmetric blocking of the kNN join and
+    * of IVF-blocked embedding dedup.
+    */
+  private[pipeline] def probedCorpus(spark: SparkSession, dir: String,
+                                     cells: Int, nprobe: Int): DataFrame = {
+    val (assigned, centersDf) = ivfAssign(spark, dir, cells)
+    probedOf(assigned.drop("cell"), routerFromCenters(centersDf), nprobe)
   }
 
   /** Euclidean cell assignment through the router: argmin over the
@@ -622,33 +617,13 @@ object Ann {
     */
   val MaxPlanLiteralDoubles: Int = 1 << 16
 
-  /** A flat double lookup grid as (frame-to-scan, grid column):
-    * literal under `budget`, broadcast one-row relation above it.
+  /** The per-subspace codebooks (m × ksub × sub doubles) as a plan
+    * column ([[Candidates.attach]]).
     */
-  private def attachGrid(df: DataFrame, grid: Seq[Double], name: String,
-                         budget: Int): (DataFrame, Column) =
-    if (grid.size <= budget) (df, typedLit(grid))
-    else {
-      val sq = df.sparkSession
-      import sq.implicits._
-      (df.crossJoin(broadcast(Seq(Tuple1(grid)).toDF(name))), col(name))
-    }
-
-  /** [[attachGrid]] for the nested per-subspace codebook array
-    * (m × ksub × sub doubles).
-    */
-  private def attachBooks(df: DataFrame,
-                          codebooks: Array[Array[Array[Double]]],
-                          name: String, budget: Int): (DataFrame, Column) = {
-    val nested = codebooks.map(_.map(_.toSeq).toSeq).toSeq
-    val size = codebooks.map(_.map(_.length).sum).sum
-    if (size <= budget) (df, typedLit(nested))
-    else {
-      val sq = df.sparkSession
-      import sq.implicits._
-      (df.crossJoin(broadcast(Seq(Tuple1(nested)).toDF(name))), col(name))
-    }
-  }
+  private def attachBooks(df: DataFrame, codebooks: Array[Array[Array[Double]]],
+                          budget: Int): (DataFrame, Column) =
+    Candidates.attach(df, codebooks.map(_.map(_.toSeq).toSeq).toSeq,
+      codebooks.map(_.map(_.length).sum).sum, "pq_books", budget)
 
   /** Unit-normalize once: cosine == dot on normalized vectors, which
     * is what the PQ codebooks and LUTs quantize.
@@ -741,7 +716,7 @@ object Ann {
                             cellCol: Column = col("cell"),
                             literalBudget: Int = MaxPlanLiteralDoubles): DataFrame = {
     val sub = 64 / m
-    val (frame, books) = attachBooks(normed, codebooks, "pq_books", literalBudget)
+    val (frame, books) = attachBooks(normed, codebooks, literalBudget)
     def subSlice(vec: Column, s: Int): Column =
       slice(vec, s * sub + 1, sub)
     // dists(s) = per-centroid squared L2 of subspace s
@@ -804,7 +779,7 @@ object Ann {
     // against every centroid — lut[s*ksub + c] = <qn_sub, centroid(s)(c)>
     val queries = normalized(vecs.filter(col("vec_id") < nQueries))
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("vn").as("qn"))
-    val (qFrame, books) = attachBooks(queries, codebooks, "pq_books", literalBudget)
+    val (qFrame, books) = attachBooks(queries, codebooks, literalBudget)
     val withLut = qFrame.withColumn("lut",
       flatten(transform(sequence(lit(0), lit(m - 1)), s =>
         transform(element_at(books, s + 1), c =>
@@ -812,23 +787,17 @@ object Ann {
             zip_with(slice(col("qn"), s * lit(sub) + 1, lit(sub)), c,
               (x, w) => x * w),
             lit(0.0), (a, y) => a + y)))))
-    val wProbe = Window.partitionBy("q_id").orderBy(col("ccos").desc, col("cell"))
-    val probes = withLut.crossJoin(broadcast(centersDf))
-      .withColumn("ccos", cosine_sim(col("qv"), col("center")))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= nprobe)
+    val probes = probeCells(withLut, centersDf, nprobe)
       .select("q_id", "lut", "cell")
     // ADC scan over probed cells (m array lookups per vector) on
     // codes only, top `rerank` by approx score — nothing wider than
     // (q_id, n_id, approx) crosses the ranking shuffle
     val adc = (0 until m)
       .map(s => s"element_at(lut, $s * $ksub + code$s + 1)").mkString(" + ")
-    val wAdc = Window.partitionBy("q_id").orderBy(col("approx").desc, col("n_id"))
-    encoded.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), expr(adc).as("approx"))
-      .withColumn("ar", row_number().over(wAdc))
-      .filter(col("ar") <= rerank)
+    Candidates.topK(encoded.join(broadcast(probes), Seq("cell"))
+        .filter(col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("vec_id").as("n_id"), expr(adc).as("approx")),
+        "approx", "n_id", rerank)
       .select("q_id", "n_id")
   }
 
@@ -842,20 +811,25 @@ object Ann {
     */
   private def pqExactRerank(vecs: DataFrame, winners: DataFrame,
                             nQueries: Int, k: Int): DataFrame = {
-    val wExact = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    val queries = vecs.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    vecs.select(col("vec_id").as("n_id"), col("v"))
+    Candidates.ranked(vecs.select(col("vec_id").as("n_id"), col("v"))
       .join(broadcast(winners), Seq("n_id"))
-      .join(broadcast(queries), Seq("q_id"))
+      .join(broadcast(queriesOf(vecs, nQueries)), Seq("q_id"))
       .select(col("q_id"), col("n_id"),
-        cosine_sim(col("qv"), col("v")).as("cos"))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id")
-      .orderBy("q_id", "rank")
+        cosine_sim(col("qv"), col("v")).as("cos")), k)
   }
 
+  /** IVF-style approximate top-k: an MLlib KMeans coarse quantiser
+    * partitions the corpus into `cells`; each query probes its
+    * `nprobe` nearest cells and runs exact cosine only there — the
+    * classic inverted-file ANN layout. At 100 TB the quantiser trains
+    * on a sample, assignment is one map pass, and the probe join
+    * shuffles on cell id (each cell ≈ N/cells rows, the nprobe/cells
+    * fraction of the corpus is all a query touches).
+    *
+    * KMeans is seeded → deterministic for a fixed input partitioning;
+    * still *rows-only* (cluster boundaries are engine-specific), with
+    * recall vs [[bruteTopK]] gated in AnnSpec.
+    */
   def ivfTopK(spark: SparkSession, dir: String,
               nQueries: Int = 5, k: Int = 10,
               cells: Int = 16, nprobe: Int = 4): DataFrame = {
@@ -863,24 +837,25 @@ object Ann {
     ivfProbePlan(assigned, centersDf, nQueries, k, nprobe)
   }
 
-  /** The per-query probe list: each query's `nprobe` nearest cells by
-    * center cosine (ties to the lower cell id) — shared by
+  /** Each query row's `nprobe` nearest cells by center cosine (ties
+    * to the lower cell id), the query's columns kept — the probe
+    * ranking of both IVF searches.
+    */
+  private def probeCells(queries: DataFrame, centersDf: DataFrame,
+                         nprobe: Int): DataFrame =
+    Candidates.topK(queries.crossJoin(broadcast(centersDf))
+      .withColumn("ccos", cosine_sim(col("qv"), col("center"))),
+      "ccos", "cell", nprobe)
+
+  /** The per-query probe list (q_id, qv, cell) — shared by
     * [[ivfProbePlan]] and the gate-artifact writers, so the persisted
     * (q_id, cell) relation is BY CONSTRUCTION the probe set the
     * search ran with.
     */
   private def probesOf(assigned: DataFrame, centersDf: DataFrame,
-                       nQueries: Int, nprobe: Int): DataFrame = {
-    val queries = assigned.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val wProbe = Window.partitionBy("q_id")
-      .orderBy(col("ccos").desc, col("cell"))
-    queries.crossJoin(broadcast(centersDf))
-      .withColumn("ccos", cosine_sim(col("qv"), col("center")))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= nprobe)
+                       nQueries: Int, nprobe: Int): DataFrame =
+    probeCells(queriesOf(assigned, nQueries), centersDf, nprobe)
       .select("q_id", "qv", "cell")
-  }
 
   /** Persist an IVF search's engine-specific structure — the
     * (vec_id, cell) assignments and the per-query (q_id, cell) probe
@@ -946,15 +921,10 @@ object Ann {
   private def ivfProbePlan(assigned: DataFrame, centersDf: DataFrame,
                            nQueries: Int, k: Int, nprobe: Int): DataFrame = {
     val probes = probesOf(assigned, centersDf, nQueries, nprobe)
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    assigned.join(broadcast(probes), Seq("cell"))
+    Candidates.ranked(assigned.join(broadcast(probes), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-        cosine_sim(col("qv"), col("v")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id")
-      .orderBy("q_id", "rank")
+        cosine_sim(col("qv"), col("v")).as("cos")), k)
   }
 
   /** Full-corpus kNN JOIN: the top-`k` cosine neighbours of EVERY
@@ -1006,11 +976,21 @@ object Ann {
               m: Int = 8, ksub: Int = 16, rerank: Int = 128,
               literalBudget: Int = MaxPlanLiteralDoubles,
               pqThreshold: Long = KnnPqThresholdVectors): DataFrame = {
-    val nVecs = graft.sources.StorageStats.parquetRowCount(
+    val (n, cells) = knnSized(spark, dir, cellsMin)
+    if (n < pqThreshold) knnExactFromProbed(probedCorpus(spark, dir, cells, nprobe), k)
+    else knnPqPlan(spark, dir, k, cells, nprobe, m, ksub, rerank, literalBudget)
+  }
+
+  /** The corpus size, read ONCE per kNN call from parquet FOOTERS
+    * (metadata, no count() job — in production this scalar comes off
+    * the table manifest), and the cell count it implies:
+    * `max(cellsMin, n/256)`, a constant ~256 target occupancy.
+    */
+  private def knnSized(spark: SparkSession, dir: String,
+                       cellsMin: Int): (Long, Int) = {
+    val n = graft.sources.StorageStats.parquetRowCount(
       spark, s"$dir/embeddings.parquet")
-    if (nVecs < pqThreshold) knnJoinExactCand(spark, dir, k, cellsMin, nprobe)
-    else knnJoinPq(spark, dir, k, cellsMin, nprobe, m, ksub, rerank,
-      literalBudget)
+    (n, math.max(cellsMin, (n / 256L).toInt))
   }
 
   /** Corpus size (vectors) above which [[knnJoin]] switches from
@@ -1025,12 +1005,13 @@ object Ann {
                                k: Int = 5, cellsMin: Int = 16,
                                nprobe: Int = 2, m: Int = 8, ksub: Int = 16,
                                rerank: Int = 128,
-                               literalBudget: Int = MaxPlanLiteralDoubles): DataFrame = {
-    // corpus size from parquet FOOTERS (metadata, no count() job) —
-    // in production this scalar comes off the table manifest
-    val n = graft.sources.StorageStats.parquetRowCount(
-      spark, s"$dir/embeddings.parquet")
-    val cells = math.max(cellsMin, (n / 256L).toInt)
+                               literalBudget: Int = MaxPlanLiteralDoubles): DataFrame =
+    knnPqPlan(spark, dir, k, knnSized(spark, dir, cellsMin)._2, nprobe, m,
+      ksub, rerank, literalBudget)
+
+  private def knnPqPlan(spark: SparkSession, dir: String, k: Int, cells: Int,
+                        nprobe: Int, m: Int, ksub: Int, rerank: Int,
+                        literalBudget: Int): DataFrame = {
     val (assigned, centersDf) = ivfAssign(spark, dir, cells)
     val codebooks = pqCodebooksFor(spark, dir, cells, m, ksub)
     val router = routerFromCenters(centersDf)
@@ -1057,7 +1038,8 @@ object Ann {
     val joined = probed.as("a")
       .join(probed.as("b"), col("a.cell") === col("b.cell") &&
         col("a.vec_id") =!= col("b.vec_id"))
-    val (scored, sdc) = attachGrid(joined, sdcGrid, "sdc_grid", literalBudget)
+    val (scored, sdc) =
+      Candidates.attach(joined, sdcGrid, sdcGrid.size, "sdc_grid", literalBudget)
     val approx = (0 until m).map { s =>
       element_at(sdc,
         (lit(s * ksub * ksub) + col(s"a.code$s") * lit(ksub) +
@@ -1072,21 +1054,14 @@ object Ann {
     // top `rerank` frontier per query by approximate score — only
     // these rehydrate raw vectors for the exact cosine, so the
     // full-width rows number N·rerank instead of N·candidates
-    val wA = Window.partitionBy("q_id").orderBy(col("approx").desc, col("n_id"))
-    val frontier = cand.withColumn("fr", row_number().over(wA))
-      .filter(col("fr") <= rerank)
+    val frontier = Candidates.topK(cand, "approx", "n_id", rerank)
       .select("q_id", "n_id")
     val vecs = assigned.select(col("vec_id"), col("v"))
-    val exact = frontier
+    Candidates.ranked(frontier
       .join(vecs.select(col("vec_id").as("n_id"), col("v").as("nv")), Seq("n_id"))
       .join(vecs.select(col("vec_id").as("q_id"), col("v").as("qv")), Seq("q_id"))
       .select(col("q_id"), col("n_id"),
-        cosine_sim(col("qv"), col("nv")).as("cos"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    exact.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id")
-      .orderBy("q_id", "rank")
+        cosine_sim(col("qv"), col("nv")).as("cos")), k)
   }
 
   /** The exact-candidates scorer (exact cosine over EVERY same-cell
@@ -1100,57 +1075,38 @@ object Ann {
   private[graft] def knnJoinExactCand(spark: SparkSession, dir: String,
                                       k: Int = 5, cellsMin: Int = 16,
                                       nprobe: Int = 2): DataFrame =
-    knnExactFromProbed(knnProbed(spark, dir, cellsMin, nprobe), k)
-
-  /** The symmetric multi-probe (vec_id, v, cell) relation behind the
-    * exact-candidates kNN arm — its (vec_id, cell) projection is the
-    * gate artifact: persisted, the oracle re-derives candidates
-    * (same-cell pairs), exact cosine and the final per-query ranking.
-    */
-  private def knnProbed(spark: SparkSession, dir: String,
-                        cellsMin: Int, nprobe: Int): DataFrame = {
-    val n = graft.sources.StorageStats.parquetRowCount(
-      spark, s"$dir/embeddings.parquet")
-    val cells = math.max(cellsMin, (n / 256L).toInt)
-    val (assigned, centersDf) = ivfAssign(spark, dir, cells)
-    val router = routerFromCenters(centersDf)
-    val (rframe, rcol) = attachRouter(assigned.drop("cell"), router)
-    rframe.select(col("vec_id"), col("v"),
-      explode(routeProbeExpr(rcol, router, nprobe)).as("cell"))
-  }
+    knnExactFromProbed(
+      probedCorpus(spark, dir, knnSized(spark, dir, cellsMin)._2, nprobe), k)
 
   /** [[knnJoin]] + the `knn_join` gate artifact. Only the
     * exact-candidates arm persists (every gate/bench scale selects it
     * — the PQ arm starts at [[KnnPqThresholdVectors]] vectors, where
     * no oracle runs); the footer-derived arm selection is unchanged.
+    * The persisted (vec_id, cell) projection of the symmetric
+    * multi-probe relation lets the oracle re-derive candidates
+    * (same-cell pairs), exact cosine and the final per-query ranking.
     */
   def knnJoinGate(spark: SparkSession, dir: String,
                   k: Int = 5, cellsMin: Int = 16, nprobe: Int = 2,
                   pqThreshold: Long = KnnPqThresholdVectors): DataFrame = {
-    val nVecs = graft.sources.StorageStats.parquetRowCount(
-      spark, s"$dir/embeddings.parquet")
-    if (nVecs < pqThreshold) {
-      val probed = knnProbed(spark, dir, cellsMin, nprobe)
+    val (n, cells) = knnSized(spark, dir, cellsMin)
+    if (n < pqThreshold) {
+      val probed = probedCorpus(spark, dir, cells, nprobe)
       Gate.once(spark, "knn_join", dir)(g =>
         probed.select("vec_id", "cell")
           .coalesce(1).write.mode("overwrite").parquet(s"$g/probed"))
       knnExactFromProbed(probed, k)
-    } else knnJoinPq(spark, dir, k, cellsMin, nprobe)
+    } else knnPqPlan(spark, dir, k, cells, nprobe, m = 8, ksub = 16,
+      rerank = 128, literalBudget = MaxPlanLiteralDoubles)
   }
 
-  private def knnExactFromProbed(probed: DataFrame, k: Int): DataFrame = {
-    val cand = probed.as("a")
+  private def knnExactFromProbed(probed: DataFrame, k: Int): DataFrame =
+    Candidates.ranked(probed.as("a")
       .join(probed.as("b"), col("a.cell") === col("b.cell") &&
         col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("q_id"), col("b.vec_id").as("n_id"),
         cosine_sim(col("a.v"), col("b.v")).as("cos"))
-      .groupBy("q_id", "n_id").agg(max("cos").as("cos"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id")
-      .orderBy("q_id", "rank")
-  }
+      .groupBy("q_id", "n_id").agg(max("cos").as("cos")), k)
 
   /** Persist the shared IVF quantiser as a parquet index:
     * `assigned/` = (vec_id, v, cell) partitioned BY CELL — so a probe
@@ -1181,10 +1137,7 @@ object Ann {
     assigned.write.mode("overwrite").partitionBy("cell")
       .parquet(s"$outDir/assigned")
     centersDf.write.mode("overwrite").parquet(s"$outDir/centers")
-    val router = routerFromCenters(centersDf)
-    val (rframe, rcol) = attachRouter(assigned.drop("cell"), router)
-    rframe.select(col("vec_id"), col("v"),
-        explode(routeProbeExpr(rcol, router, IndexNprobe)).as("cell"))
+    probedOf(assigned.drop("cell"), routerFromCenters(centersDf), IndexNprobe)
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$outDir/probed")
   }
@@ -1201,11 +1154,22 @@ object Ann {
     */
   def ivfTopKIndexed(spark: SparkSession, dir: String,
                      nQueries: Int = 5, k: Int = 10,
-                     cells: Int = 16, nprobe: Int = 4): DataFrame = {
-    val idx = ivfIndexFor(spark, dir, cells)
-    ivfProbePlan(
-      spark.read.parquet(s"$idx/assigned"),
-      spark.read.parquet(s"$idx/centers"), nQueries, k, nprobe)
+                     cells: Int = 16, nprobe: Int = 4): DataFrame =
+    indexSearch(spark, dir, ivfIndexFor(spark, dir, cells), None,
+      nQueries, k, nprobe)
+
+  /** [[ivfProbePlan]] over a persisted index's `assigned/` and
+    * `centers/`; with `gateOp`, its assignments and probe lists are
+    * first persisted at that gate path ([[ivfGateWrite]]).
+    */
+  private def indexSearch(spark: SparkSession, dir: String, idx: String,
+                          gateOp: Option[String], nQueries: Int, k: Int,
+                          nprobe: Int): DataFrame = {
+    val assigned = spark.read.parquet(s"$idx/assigned")
+    val centersDf = spark.read.parquet(s"$idx/centers")
+    gateOp.foreach(op =>
+      ivfGateWrite(spark, op, dir, assigned, centersDf, nQueries, nprobe))
+    ivfProbePlan(assigned, centersDf, nQueries, k, nprobe)
   }
 
   // index-family queries share the persisted indexes below and may
@@ -1236,9 +1200,7 @@ object Ann {
     af.select(col("vec_id"), col("v"), routeCellExpr(ac).as("cell"))
       .write.mode("append").partitionBy("cell")
       .parquet(s"$idx/assigned")
-    val (pf, pc) = attachRouter(batch, router)
-    pf.select(col("vec_id"), col("v"),
-        explode(routeProbeExpr(pc, router, IndexNprobe)).as("cell"))
+    probedOf(batch, router, IndexNprobe)
       .write.mode("append").partitionBy("cell")
       .parquet(s"$idx/probed")
   }
@@ -1255,12 +1217,9 @@ object Ann {
     */
   def ivfTopKAppended(spark: SparkSession, dir: String,
                       nQueries: Int = 5, k: Int = 10,
-                      cells: Int = 16, nprobe: Int = 4): DataFrame = {
-    val idx = appendedIndexFor(spark, dir, cells)
-    ivfProbePlan(
-      spark.read.parquet(s"$idx/assigned"),
-      spark.read.parquet(s"$idx/centers"), nQueries, k, nprobe)
-  }
+                      cells: Int = 16, nprobe: Int = 4): DataFrame =
+    indexSearch(spark, dir, appendedIndexFor(spark, dir, cells), None,
+      nQueries, k, nprobe)
 
   /** [[ivfTopKAppended]] + its gate artifact: the APPENDED index's
     * assignments and probe lists persist at the fixed gate path, and
@@ -1271,14 +1230,9 @@ object Ann {
     */
   def ivfTopKAppendedGate(spark: SparkSession, dir: String,
                           nQueries: Int = 5, k: Int = 10,
-                          cells: Int = 16, nprobe: Int = 4): DataFrame = {
-    val idx = appendedIndexFor(spark, dir, cells)
-    val assigned = spark.read.parquet(s"$idx/assigned")
-    val centersDf = spark.read.parquet(s"$idx/centers")
-    ivfGateWrite(spark, "ann_index_append", dir, assigned, centersDf,
-      nQueries, nprobe)
-    ivfProbePlan(assigned, centersDf, nQueries, k, nprobe)
-  }
+                          cells: Int = 16, nprobe: Int = 4): DataFrame =
+    indexSearch(spark, dir, appendedIndexFor(spark, dir, cells),
+      Some("ann_index_append"), nQueries, k, nprobe)
 
   private[graft] def appendedIndexFor(spark: SparkSession, dir: String,
                                       cells: Int): String = {
@@ -1367,12 +1321,9 @@ object Ann {
     */
   def ivfTopKRebuilt(spark: SparkSession, dir: String,
                      nQueries: Int = 5, k: Int = 10,
-                     cells: Int = 16, nprobe: Int = 4): DataFrame = {
-    val idx = rebuiltIndexFor(spark, dir, cells)
-    ivfProbePlan(
-      spark.read.parquet(s"$idx/assigned"),
-      spark.read.parquet(s"$idx/centers"), nQueries, k, nprobe)
-  }
+                     cells: Int = 16, nprobe: Int = 4): DataFrame =
+    indexSearch(spark, dir, rebuiltIndexFor(spark, dir, cells), None,
+      nQueries, k, nprobe)
 
   /** [[ivfTopKRebuilt]] + its gate artifact — same discipline as the
     * append gate: the REBUILT index's (retrained) assignments and
@@ -1381,14 +1332,9 @@ object Ann {
     */
   def ivfTopKRebuiltGate(spark: SparkSession, dir: String,
                          nQueries: Int = 5, k: Int = 10,
-                         cells: Int = 16, nprobe: Int = 4): DataFrame = {
-    val idx = rebuiltIndexFor(spark, dir, cells)
-    val assigned = spark.read.parquet(s"$idx/assigned")
-    val centersDf = spark.read.parquet(s"$idx/centers")
-    ivfGateWrite(spark, "ann_index_rebuild", dir, assigned, centersDf,
-      nQueries, nprobe)
-    ivfProbePlan(assigned, centersDf, nQueries, k, nprobe)
-  }
+                         cells: Int = 16, nprobe: Int = 4): DataFrame =
+    indexSearch(spark, dir, rebuiltIndexFor(spark, dir, cells),
+      Some("ann_index_rebuild"), nQueries, k, nprobe)
 
   private[graft] def rebuiltIndexFor(spark: SparkSession, dir: String,
                                      cells: Int): String = {

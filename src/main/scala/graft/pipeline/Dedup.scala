@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.{cosine_sim, minhash_signature, simhash_agg, sorted_intersect_atleast, sorted_intersect_count}
+import graft.functions.{minhash_signature, simhash_agg}
+import graft.operators.Frames
+import graft.pipeline.Candidates.SortedSet
 
 /** Near-duplicate detection (SURVEY §2E). Every variant follows the
   * same scale discipline: CANDIDATE GENERATION BY BUCKETING (shuffle
@@ -23,41 +25,25 @@ object Dedup {
       s"transform(sequence(1, greatest(length($textCol) - ${n - 1}, 1)), " +
         s"i -> substring($textCol, i, $n))"))
 
-  /** The early-exit exact-verify predicate shared by every detector's
-    * verify filter: `|A∩B| ≥ ceil(t·S/(1e4+t))` ⟺
-    * `|A∩B|·(1e4+t) ≥ t·S` ⟺ `floor(1e4·J) ≥ t` (the count is an
-    * integer, so the ceil-division threshold is bit-identical to the
-    * product inequality), but the sorted merge stops at `needed`
-    * matches (near-identical pairs) or at the first impossibility
-    * bound (false candidates) instead of always walking O(|A|+|B|).
-    * Survivors still compute the exact count once for `jac_bp`.
+  /** The `a`/`b` sides of a shingle-set verify. */
+  private val setA = SortedSet(col("a.sh"), col("a.nsh"))
+  private val setB = SortedSet(col("b.sh"), col("b.nsh"))
+
+  /** Verified pairs of a candidate frame carrying both sides' slim
+    * columns as `a.*`/`b.*`: same (lang, source) block — re-checked
+    * exactly, since the bucket key only makes cross-block candidates
+    * hash-collision-unlikely — and the exact Jaccard test.
     */
-  private def exactAtLeast(aSh: Column, bSh: Column, sizes: Column,
-                           minBp: Long): Column =
-    sorted_intersect_atleast(aSh, bSh,
-      call_function("div",
-        (lit(minBp) * sizes + lit(10000L + minBp - 1)).cast("long"),
-        lit(10000L + minBp)).cast("int"))
+  private def verifiedPairs(cand: DataFrame, minBp: Long,
+                            ids: Column*): DataFrame =
+    Candidates.jaccardBp(
+      cand.filter(col("a.lang") === col("b.lang") &&
+        col("a.source") === col("b.source") &&
+        Candidates.jaccardAtLeast(setA, setB, minBp)),
+      setA, setB, ids: _*)
 
   private def normed(spark: SparkSession, dir: String): DataFrame =
     normedOf(Tables.documents(spark, dir))
-
-  /** Materialize a per-invocation intermediate ONCE (eager
-    * localCheckpoint behind a fresh-leaf frame, the
-    * [[graft.operators.Components]] `cut` discipline) so a frame
-    * consumed by several plan branches is computed a single time.
-    * The detectors' signature/fingerprint frames are each read by
-    * 2–4 branches (bucket self-join sides + rehydration sides);
-    * without the cut, each branch re-runs the scan + shingle + sign
-    * pass — at 100 TB that is 2–4 full corpus passes where one is
-    * enough (guide §1.2 step 1: don't compute things twice). Blocks
-    * are MEMORY_AND_DISK and freed by the ContextCleaner once the
-    * invocation's result is unreachable; nothing persists across
-    * invocations, so every bench/oracle sample still computes from
-    * the parquet inputs.
-    */
-  private[pipeline] def materialize(df: DataFrame): DataFrame =
-    graft.operators.Frames.materialize(df)
 
   /** The shared normalization projection, usable on a batch table or
     * an arriving stream alike.
@@ -102,10 +88,7 @@ object Dedup {
   }
 
   private def pairsFromBandKeys(exploded: DataFrame): DataFrame = {
-    val a = exploded.as("a")
-    val b = exploded.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-        col("a.doc_id") < col("b.doc_id"))
+    Candidates.selfJoin(exploded, Seq("band", "bh"), "doc_id", hashHint = false)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
       .orderBy("doc_a", "doc_b")
@@ -199,9 +182,7 @@ object Dedup {
     }.toSeq
     val keyed = sigs
       .select(col("doc_id"), col("sig"), explode(array(keys: _*)).as("k"))
-    val a = keyed.as("a")
-    val b = keyed.as("b")
-    a.join(b, col("a.k") === col("b.k") && col("a.doc_id") < col("b.doc_id"))
+    Candidates.selfJoin(keyed, Seq("k"), "doc_id", hashHint = false)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         expr("bit_count(a.sig ^ b.sig)").cast("long").as("hamming"))
       .distinct()
@@ -224,14 +205,10 @@ object Dedup {
     *
     * Perf shape: shingle sets are sorted ONCE per document
     * (projection, before the join); each CANDIDATE pair costs one
-    * allocation-free early-exit merge ([[exactAtLeast]] — the
-    * threshold form of `inter * (10000 + t) >= t * (|A| + |B|)`,
-    * ⇔ floor(1e4·J) >= t) in the join condition.
-    * SURVIVING pairs re-run the merge once more in the projection to
-    * produce `jac_bp` — a deliberate trade: survivors are a tiny
-    * fraction of candidates, and keeping the exact test inside the
-    * join condition is what lets the cheap length prune short-circuit
-    * ahead of it (see below).
+    * allocation-free early-exit merge in the join condition, behind
+    * the two-int length prune ([[Candidates.jaccardAtLeast]]);
+    * SURVIVING pairs re-run the merge once for `jac_bp`
+    * ([[Candidates.jaccardBp]]).
     *
     * @param docSlice deterministic corpus sample for the GATE query:
     *   `Some(h)` keeps only documents whose `md5(doc_id)` first hex
@@ -249,40 +226,20 @@ object Dedup {
                         docSlice: Option[String] = None): DataFrame = {
     val base = docSlice.foldLeft(normed(spark, dir))((df, h) =>
       df.filter(substring(md5(col("doc_id").cast("string")), 1, 1) < lit(h)))
-    val g = materialize(base
+    val g = Frames.materialize(base
       .withColumn("sh", array_sort(shingles("txt")))
       .select(col("doc_id"), col("lang"), col("source"), col("sh"),
         size(col("sh")).as("nsh")))
-    val a = g.as("a")
-    val b = g.as("b")
     // pin a shuffle-hash join on the block key: the build side per
     // block is bounded by the blocking, and the alternatives are both
     // wrong here (broadcast: the shingle arrays are ~40 MB and AQE
     // stats can flip it to a sort-merge join; SMJ: sorts rows carrying
-    // the full arrays).
-    // BOTH threshold conjuncts are authored into the join condition in
-    // cheap-first order: the length-ratio prune (with |A∩B| ≤
-    // min(|A|,|B|), J ≥ t is impossible unless min·(1e4+t) ≥
-    // t·(|A|+|B|) — two ints) short-circuits before the O(|A|+|B|)
-    // sorted-merge. Writing the exact test as a post-join filter
-    // instead lets Catalyst push it into the condition AHEAD of the
-    // prune, running the expensive merge first (observed in the
-    // physical plan).
-    val sizes = col("a.nsh") + col("b.nsh")
-    val lengthPrune =
-      least(col("a.nsh"), col("b.nsh")) * (10000L + minBp) >= lit(minBp) * sizes
-    val exactTest = exactAtLeast(col("a.sh"), col("b.sh"), sizes, minBp)
-    a.join(b.hint("shuffle_hash"), col("a.lang") === col("b.lang") &&
-        col("a.source") === col("b.source") &&
-        col("a.doc_id") < col("b.doc_id") &&
-        lengthPrune && exactTest)
-      .select(
-        col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        sorted_intersect_count(col("a.sh"), col("b.sh")).as("inter"),
-        sizes.as("sizes"))
-      .select(col("doc_a"), col("doc_b"),
-        floor(lit(10000.0) * col("inter") / (col("sizes") - col("inter")))
-          .cast("long").as("jac_bp"))
+    // the full arrays). The verify sits IN the join condition, after
+    // the block and id conjuncts.
+    val pairs = Candidates.selfJoin(g, Seq("lang", "source"), "doc_id",
+      hashHint = true, Candidates.jaccardAtLeast(setA, setB, minBp))
+    Candidates.jaccardBp(pairs, setA, setB,
+        col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .orderBy("doc_a", "doc_b")
   }
 
@@ -346,21 +303,11 @@ object Dedup {
                       minBp: Long = 6500, numPerm: Int = 64,
                       bands: Int = 32,
                       bucketCap: Option[Int] = None): DataFrame = {
-    require(numPerm % bands == 0, "bands must divide numPerm")
-    val rows = numPerm / bands
-    // the guarantee this operator sells is "the exact pair set at LSH
-    // cost" — refuse configurations where the banding would miss
-    // at-threshold pairs at a rate a gate could ever observe, instead
-    // of silently under-recalling (miss prob at J: (1 - J^rows)^bands)
-    val missAtThreshold =
-      math.pow(1.0 - math.pow(minBp / 10000.0, rows), bands)
-    require(missAtThreshold < 1e-6,
-      f"banding $bands×$rows misses J=${minBp / 10000.0}%.2f pairs with " +
-        f"p=$missAtThreshold%.2e — use more bands (rows=1 for low thresholds)")
+    requireBanding(minBp, numPerm, bands)
     // same signing + band keys as the persisted dedup_band_stats
     // index ([[bandKeyExprs]]) — which is what lets [[autoBucketCap]]
     // select this join's arm from that artifact's histogram
-    val g = materialize(signedDocs(normed(spark, dir), numPerm))
+    val g = Frames.materialize(signedDocs(normed(spark, dir), numPerm))
     // band keys carry each doc's shingle-set size (one int per
     // exploded row): the two-int length prune runs INSIDE the
     // candidate join, so pairs the verify's lengthPrune would reject
@@ -371,15 +318,12 @@ object Dedup {
     // ~70 % of raw band collisions before any shingle bytes move.
     val keyed = g.select(col("doc_id"), col("nsh"),
       explode(array(bandKeyExprs(numPerm, bands): _*)).as("bh"))
-    def lenOk(an: Column, bn: Column): Column =
-      least(an, bn) * (10000L + minBp) >= lit(minBp) * (an + bn)
+    def clique(keys: DataFrame): DataFrame =
+      Candidates.selfJoin(keys, Seq("bh"), "doc_id", hashHint = true,
+          Candidates.lengthOk(col("a.nsh"), col("b.nsh"), minBp))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
     val cand0 = bucketCap match {
-      case None =>
-        keyed.as("ka")
-          .join(keyed.as("kb").hint("shuffle_hash"),
-            col("ka.bh") === col("kb.bh") && col("ka.doc_id") < col("kb.doc_id") &&
-              lenOk(col("ka.nsh"), col("kb.nsh")))
-          .select(col("ka.doc_id").as("doc_a"), col("kb.doc_id").as("doc_b"))
+      case None => clique(keyed)
       case Some(cap) =>
         // per-bucket occupancy + hub in one bh-shuffled aggregate
         // (same key as the pair join); under-cap buckets keep the
@@ -389,57 +333,18 @@ object Dedup {
         val occ = keyed.groupBy("bh")
           .agg(count(lit(1)).as("occ"), min("doc_id").as("hub"))
         val kc = keyed.join(occ.hint("shuffle_hash"), Seq("bh"))
-        val small = kc.filter(col("occ") <= cap)
-        val clique = small.as("ka")
-          .join(small.as("kb").hint("shuffle_hash"),
-            col("ka.bh") === col("kb.bh") && col("ka.doc_id") < col("kb.doc_id") &&
-              lenOk(col("ka.nsh"), col("kb.nsh")))
-          .select(col("ka.doc_id").as("doc_a"), col("kb.doc_id").as("doc_b"))
         val star = kc.filter(col("occ") > cap && col("doc_id") =!= col("hub"))
           .select(col("hub").as("doc_a"), col("doc_id").as("doc_b"))
-        clique.unionByName(star)
+        clique(kc.filter(col("occ") <= cap)).unionByName(star)
     }
+    val slim = slimOf(g)
     val cand = cand0.distinct()
-    val slim = g.select(col("doc_id"), col("lang"), col("source"),
-      col("sh"), col("nsh"))
-    val a = slim.as("a")
-    val b = slim.as("b")
-    val sizes = col("a.nsh") + col("b.nsh")
-    // same cheap-first conjunct order as ngramJaccardPairs: the
-    // two-int length prune short-circuits ahead of the merge (block
-    // equality re-checked exactly — the bucket key only makes
-    // cross-block candidates hash-collision-unlikely). The exact test
-    // is the EARLY-EXIT threshold form: |A∩B| ≥ ceil(t·S/(1e4+t)) ⟺
-    // floor(1e4·J) ≥ t — bit-identical to the count inequality, but
-    // the merge stops at `needed` matches (near-identical pairs) or
-    // at the first impossibility bound (false candidates) instead of
-    // always walking O(|A|+|B|); survivors still compute the exact
-    // count once for jac_bp.
-    val lengthPrune =
-      least(col("a.nsh"), col("b.nsh")) * (10000L + minBp) >= lit(minBp) * sizes
-    val exactTest = exactAtLeast(col("a.sh"), col("b.sh"), sizes, minBp)
-    cand
-      .join(a.hint("shuffle_hash"), col("doc_a") === col("a.doc_id"))
-      .join(b.hint("shuffle_hash"), col("doc_b") === col("b.doc_id"))
-      .filter(col("a.lang") === col("b.lang") &&
-        col("a.source") === col("b.source") && lengthPrune && exactTest)
-      .select(col("doc_a"), col("doc_b"),
-        sorted_intersect_count(col("a.sh"), col("b.sh")).as("inter"),
-        sizes.as("sizes"))
-      .select(col("doc_a"), col("doc_b"),
-        floor(lit(10000.0) * col("inter") / (col("sizes") - col("inter")))
-          .cast("long").as("jac_bp"))
+      .join(slim.as("a").hint("shuffle_hash"), col("doc_a") === col("a.doc_id"))
+      .join(slim.as("b").hint("shuffle_hash"), col("doc_b") === col("b.doc_id"))
+    verifiedPairs(cand, minBp, col("doc_a"), col("doc_b"))
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Chunk-level partial-duplicate pairs via content-defined chunking
-    * (*rows-only*): split each document at content-determined
-    * boundaries ([[graft.functions.CdcChunks]]), build the chunk-hash
-    * inverted index, and emit document pairs sharing ≥ `minShared`
-    * chunks — the standard common-passage / partial-overlap detector.
-    * Explode → groupBy chunk → pair-count: one shuffle on chunk hash,
-    * one on the pair; never all-pairs.
-    */
   /** Incremental ingestion dedup: near-duplicate pairs between a NEW
     * batch and the EXISTING corpus — the nightly pipeline shape
     * (today's crawl against everything already ingested), where
@@ -466,13 +371,19 @@ object Dedup {
                        minBp: Long = 6500, numPerm: Int = 64,
                        bands: Int = 32): DataFrame = {
     requireBanding(minBp, numPerm, bands)
-    val g = materialize(signedDocs(normed(spark, dir), numPerm))
+    val g = Frames.materialize(signedDocs(normed(spark, dir), numPerm))
     val isNew = col("doc_id") % 7 === 0
     incrementalCore(g.filter(isNew),
       bandKeyed(g.filter(!isNew), numPerm, bands),
       slimOf(g.filter(!isNew)), minBp, numPerm, bands)
   }
 
+  /** The banding guard of the LSH Jaccard detectors. Their guarantee
+    * is "the exact pair set at LSH cost", so a configuration whose
+    * banding would miss at-threshold pairs at a rate a gate could ever
+    * observe is refused instead of silently under-recalling (miss
+    * probability at J: (1 − J^rows)^bands).
+    */
   private def requireBanding(minBp: Long, numPerm: Int, bands: Int): Unit = {
     require(numPerm % bands == 0, "bands must divide numPerm")
     val rows = numPerm / bands
@@ -525,23 +436,10 @@ object Dedup {
         .withColumnRenamed("doc_id", "new_id")), Seq("bh"))
       .select(col("new_id"), col("doc_id").as("dup_of"))
       .distinct()
-    val a = corpusSlim.as("a") // corpus / dup_of side
-    val b = slimOf(batchSigned).as("b") // batch / new side
-    val sizes = col("a.nsh") + col("b.nsh")
-    val lengthPrune =
-      least(col("a.nsh"), col("b.nsh")) * (10000L + minBp) >= lit(minBp) * sizes
-    val exactTest = exactAtLeast(col("a.sh"), col("b.sh"), sizes, minBp)
-    cand
-      .join(broadcast(b), col("new_id") === col("b.doc_id"))
-      .join(a.hint("shuffle_hash"), col("dup_of") === col("a.doc_id"))
-      .filter(col("a.lang") === col("b.lang") &&
-        col("a.source") === col("b.source") && lengthPrune && exactTest)
-      .select(col("new_id"), col("dup_of"),
-        sorted_intersect_count(col("a.sh"), col("b.sh")).as("inter"),
-        sizes.as("sizes"))
-      .select(col("new_id"), col("dup_of"),
-        floor(lit(10000.0) * col("inter") / (col("sizes") - col("inter")))
-          .cast("long").as("jac_bp"))
+      // a = corpus / dup_of side, b = batch / new side
+      .join(broadcast(slimOf(batchSigned).as("b")), col("new_id") === col("b.doc_id"))
+      .join(corpusSlim.as("a").hint("shuffle_hash"), col("dup_of") === col("a.doc_id"))
+    verifiedPairs(cand, minBp, col("new_id"), col("dup_of"))
       .orderBy("new_id", "dup_of")
   }
 
@@ -719,50 +617,40 @@ object Dedup {
       numPerm: Int = 64, bands: Int = 32): DataFrame = {
     requireBanding(minBp, numPerm, bands)
     val probes = signedDocs(arrivals, numPerm)
-      .select(col("doc_id").as("new_id"), col("lang").as("b_lang"),
-        col("source").as("b_source"), col("sh").as("b_sh"),
-        size(col("sh")).as("b_nsh"),
+      .select(col("doc_id").as("new_id"), col("lang"), col("source"),
+        col("sh"), col("nsh"),
         explode(array(bandKeyExprs(numPerm, bands): _*)).as("bh"))
     val cand = spark.read.parquet(s"$indexDir/index")
       .join(broadcast(probes), Seq("bh"))
       .select(col("new_id"), col("doc_id").as("dup_of"),
-        col("b_lang"), col("b_source"), col("b_sh"), col("b_nsh"))
+        col("lang"), col("source"), col("sh"), col("nsh"))
       .dropDuplicates("new_id", "dup_of")
-    val a = spark.read.parquet(s"$indexDir/slim").as("a")
-    val sizes = col("a.nsh") + col("b_nsh")
-    val lengthPrune =
-      least(col("a.nsh"), col("b_nsh")) * (10000L + minBp) >= lit(minBp) * sizes
-    val exactTest = exactAtLeast(col("a.sh"), col("b_sh"), sizes, minBp)
-    cand
-      .join(a.hint("shuffle_hash"), col("dup_of") === col("a.doc_id"))
-      .filter(col("a.lang") === col("b_lang") &&
-        col("a.source") === col("b_source") && lengthPrune && exactTest)
-      .select(col("new_id"), col("dup_of"),
-        sorted_intersect_count(col("a.sh"), col("b_sh")).as("inter"),
-        sizes.as("sizes"))
-      .select(col("new_id"), col("dup_of"),
-        floor(lit(10000.0) * col("inter") / (col("sizes") - col("inter")))
-          .cast("long").as("jac_bp"))
+      .as("b")
+      .join(spark.read.parquet(s"$indexDir/slim").as("a").hint("shuffle_hash"),
+        col("dup_of") === col("a.doc_id"))
+    verifiedPairs(cand, minBp, col("new_id"), col("dup_of"))
   }
 
+  /** Chunk-level partial-duplicate pairs via content-defined chunking
+    * (*rows-only*): split each document at content-determined
+    * boundaries ([[graft.functions.CdcChunks]]), build the chunk-hash
+    * inverted index, and emit document pairs sharing ≥ `minShared`
+    * chunks — the standard common-passage / partial-overlap detector.
+    * Explode → groupBy chunk → pair-count: one shuffle on chunk hash,
+    * one on the pair; never all-pairs.
+    */
   def cdcPairs(spark: SparkSession, dir: String,
                minShared: Long = 3, maxDf: Long = 1000): DataFrame =
     cdcPairsOf(normed(spark, dir), minShared, maxDf)
 
-  /** [[cdcPairs]] over any (doc_id, txt) DataFrame.
-    *
-    * `maxDf` is the hot-chunk guard: a chunk shared by k documents
-    * costs k²/2 pairs in the inverted-index join, so one boilerplate
+  /** [[cdcPairs]] over any (doc_id, txt) DataFrame. `maxDf` is the
+    * hot-chunk guard ([[Candidates.sharedKeyPairs]]): one boilerplate
     * passage (license header, navigation chrome) shared by millions of
-    * docs would dominate the whole job. Chunks with document frequency
-    * above `maxDf` carry no dedup signal (they're corpus-wide
-    * boilerplate, not copied passages) and are dropped BEFORE the pair
-    * join. The df filter is a groupBy on the same chunk key the join
-    * shuffles on — co-partitioned, one cheap extra pass.
+    * docs would otherwise dominate the whole job.
     */
   def cdcPairsOf(docs: DataFrame, minShared: Long = 3,
                  maxDf: Long = 1000): DataFrame =
-    cdcPairsFromChunks(cdcChunksOf(docs), minShared, maxDf)
+    Candidates.sharedKeyPairs(cdcChunksOf(docs), "chunk", minShared, maxDf)
 
   /** The distinct (doc_id, chunk-hash) relation behind [[cdcPairs]] —
     * also the gate artifact: persisted, the oracle re-derives the df
@@ -785,24 +673,8 @@ object Dedup {
     val p = Gate.once(spark, "dedup_cdc", dir)(g =>
       cdcChunksOf(normed(spark, dir))
         .write.mode("overwrite").parquet(s"$g/chunks"))
-    cdcPairsFromChunks(spark.read.parquet(s"$p/chunks"), minShared, maxDf)
-  }
-
-  private def cdcPairsFromChunks(chunks: DataFrame, minShared: Long,
-                                 maxDf: Long): DataFrame = {
-    val rare = chunks.groupBy("chunk")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf)
-      .select("chunk")
-    val kept = chunks.join(rare.hint("shuffle_hash"), Seq("chunk"), "left_semi")
-    val a = kept.as("a")
-    val b = kept.as("b")
-    a.join(b.hint("shuffle_hash"), col("a.chunk") === col("b.chunk") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-      .orderBy("doc_a", "doc_b")
+    Candidates.sharedKeyPairs(spark.read.parquet(s"$p/chunks"), "chunk",
+      minShared, maxDf)
   }
 
   /** Embedding-cosine near-dup pairs, blocked by `label`. Emits pair
@@ -820,20 +692,20 @@ object Dedup {
     * `dedup_keep` gate hash-match a DuckDB oracle.
     */
   def embeddingPairs(spark: SparkSession, dir: String,
-                     threshold: Double = 0.8): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label"),
-        expr("transform(embedding, x -> cast(x as double))").as("v"))
-    val a = e.as("a")
-    val b = e.as("b")
-    a.join(b, col("a.label") === col("b.label") &&
-        col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        cosine_sim(col("a.v"), col("b.v")).as("cos"))
-      .filter(col("cos") >= threshold)
-      .select("vec_a", "vec_b")
-      .orderBy("vec_a", "vec_b")
-  }
+                     threshold: Double = 0.8): DataFrame =
+    blockCosinePairs(Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("label"), Candidates.vector),
+      "label", threshold, distinct = false)
+
+  /** `(vec_a, vec_b)` pairs of `(vec_id, v, key)` rows sharing a
+    * `key` block whose exact cosine reaches `threshold`.
+    */
+  private def blockCosinePairs(vecs: DataFrame, key: String,
+                               threshold: Double, distinct: Boolean): DataFrame =
+    Candidates.cosinePairs(
+      Candidates.selfJoin(vecs, Seq(key), "vec_id", hashHint = false),
+      col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
+      col("a.v"), col("b.v"), threshold, distinct)
 
   /** Embedding near-dup pairs blocked by the IVF coarse quantiser's
     * cells ([[Ann.ivfAssign]]) — the real 100 TB blocker behind
@@ -849,23 +721,8 @@ object Dedup {
   def embeddingPairsIvf(spark: SparkSession, dir: String,
                         threshold: Double = 0.8, cells: Int = 16,
                         nprobe: Int = 2): DataFrame =
-    embeddingPairsFromProbed(embeddingProbed(spark, dir, cells, nprobe),
-      threshold)
-
-  private def embeddingProbed(spark: SparkSession, dir: String,
-                              cells: Int, nprobe: Int): DataFrame = {
-    val (assigned, centersDf) = graft.pipeline.Ann.ivfAssign(spark, dir, cells)
-    // probe routing goes through the shared two-level router
-    // ([[Ann.routeProbeExpr]] — O(√cells) loops per vector once the
-    // cell count scales with the corpus); pure per-row compute, no
-    // window, no model state
-    val router = graft.pipeline.Ann.routerFromCenters(centersDf)
-    val (rframe, rcol) =
-      graft.pipeline.Ann.attachRouter(assigned.drop("cell"), router)
-    rframe.select(col("vec_id"), col("v"),
-      explode(graft.pipeline.Ann.routeProbeExpr(rcol, router, nprobe))
-        .as("cell"))
-  }
+    blockCosinePairs(Ann.probedCorpus(spark, dir, cells, nprobe), "cell",
+      threshold, distinct = true)
 
   /** [[embeddingPairsIvf]] with the multi-probe (vec_id, cell) keys
     * PERSISTED at the fixed gate path — the KMeans cells stay
@@ -876,25 +733,11 @@ object Dedup {
   def embeddingPairsIvfGate(spark: SparkSession, dir: String,
                             threshold: Double = 0.8, cells: Int = 16,
                             nprobe: Int = 2): DataFrame = {
-    val probed = embeddingProbed(spark, dir, cells, nprobe)
+    val probed = Ann.probedCorpus(spark, dir, cells, nprobe)
     Gate.once(spark, "dedup_embedding_ivf", dir)(g =>
       probed.select("vec_id", "cell")
         .coalesce(1).write.mode("overwrite").parquet(s"$g/probed"))
-    embeddingPairsFromProbed(probed, threshold)
-  }
-
-  private def embeddingPairsFromProbed(probed: DataFrame,
-                                       threshold: Double): DataFrame = {
-    val a = probed.as("a")
-    val b = probed.as("b")
-    a.join(b, col("a.cell") === col("b.cell") &&
-        col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        cosine_sim(col("a.v"), col("b.v")).as("cos"))
-      .filter(col("cos") >= threshold)
-      .select("vec_a", "vec_b")
-      .distinct()
-      .orderBy("vec_a", "vec_b")
+    blockCosinePairs(probed, "cell", threshold, distinct = true)
   }
 
   /** Incremental EMBEDDING dedup: near-dup pairs between a new batch
@@ -935,16 +778,13 @@ object Dedup {
                                        threshold: Double, cells: Int,
                                        nprobe: Int,
                                        gateOp: Option[String]): DataFrame = {
-    val idx = graft.pipeline.Ann.ivfIndexFor(spark, dir, cells)
-    val router = graft.pipeline.Ann.routerFromCenters(
-      spark.read.parquet(s"$idx/centers"))
+    val idx = Ann.ivfIndexFor(spark, dir, cells)
+    val router = Ann.routerFromCenters(spark.read.parquet(s"$idx/centers"))
     val isNew = col("vec_id") % 7 === 0
-    val (bframe, bcol) = graft.pipeline.Ann.attachRouter(
-      spark.read.parquet(s"$idx/assigned").filter(isNew).drop("cell"), router)
-    val batch = bframe
-      .select(col("vec_id").as("new_id"), col("v").as("bv"),
-        explode(graft.pipeline.Ann.routeProbeExpr(bcol, router, nprobe))
-          .as("cell"))
+    val batch = Ann.probedOf(
+        spark.read.parquet(s"$idx/assigned").filter(isNew).drop("cell"),
+        router, nprobe)
+      .select(col("vec_id").as("new_id"), col("v").as("bv"), col("cell"))
     val corpus = spark.read.parquet(s"$idx/probed").filter(!isNew)
     gateOp.foreach(op => Gate.once(spark, op, dir) { g =>
       batch.select("new_id", "cell")
@@ -952,14 +792,9 @@ object Dedup {
       corpus.select("vec_id", "cell")
         .coalesce(1).write.mode("overwrite").parquet(s"$g/corpus")
     })
-    corpus
-      .join(broadcast(batch), Seq("cell"))
-      .select(col("new_id"), col("vec_id").as("dup_of"),
-        cosine_sim(col("bv"), col("v")).as("cos"))
-      .filter(col("cos") >= threshold)
-      .select("new_id", "dup_of")
-      .distinct()
-      .orderBy("new_id", "dup_of")
+    Candidates.cosinePairs(corpus.join(broadcast(batch), Seq("cell")),
+      col("new_id"), col("vec_id").as("dup_of"), col("bv"), col("v"),
+      threshold, distinct = true)
   }
 
   /** Near-dup pairs → dedup clusters: connected components over the
@@ -1124,20 +959,8 @@ object Dedup {
     */
   def winnowPairs(spark: SparkSession, dir: String,
                   minShared: Long = 20, maxDf: Long = 50): DataFrame = {
-    val fps = materialize(graft.pipeline.TextAnalysis.winnowFps(spark, dir))
-    val rare = fps.groupBy("fp")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf)
-      .select("fp")
-    val kept = fps.join(rare.hint("shuffle_hash"), Seq("fp"), "left_semi")
-    val a = kept.as("a")
-    val b = kept.as("b")
-    a.join(b.hint("shuffle_hash"), col("a.fp") === col("b.fp") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-      .orderBy("doc_a", "doc_b")
+    val fps = Frames.materialize(TextAnalysis.winnowFps(spark, dir))
+    Candidates.sharedKeyPairs(fps, "fp", minShared, maxDf)
   }
 
   /** Exact duplicated-substring spans (the "ExactSubstr" dedup pass,

@@ -6,11 +6,14 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One memo for session state: [[Memo]] is the only place that caches
-  * per-session artifacts, and no code mutates a shared session's conf
-  * under a JVM-wide lock. A private `TrieMap` cache, a check-then-act
-  * key set or a conf mutex anywhere else in the main sources fails
-  * here.
+/** One place per shared mechanism, enforced on the main sources:
+  *  - one memo for session state: [[Memo]] is the only place that
+  *    caches per-session artifacts, and no code mutates a shared
+  *    session's conf under a JVM-wide lock. A private `TrieMap` cache,
+  *    a check-then-act key set or a conf mutex anywhere else fails;
+  *  - one materialize helper (`operators.Frames`) and one candidate
+  *    core (`pipeline.Candidates`): a copied checkpoint, Jaccard verify
+  *    or per-query rank elsewhere fails.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -22,19 +25,34 @@ class SourceGuardSpec extends AnyFunSuite {
     finally walk.close()
   }
 
-  test("session caches, key-set flags and conf mutexes live only in Memo") {
-    assert(Files.isDirectory(root), s"run from the repository root: $root")
-    val allowed: Map[String, Set[String]] = Map(
-      "TrieMap" -> Set("Memo.scala"),
-      "ConcurrentHashMap.newKeySet" -> Set("Memo.scala", "TmpDir.scala"),
-      "confMutex" -> Set.empty[String])
-    val hits = for {
-      f <- sources
+  /** Lines of the sources under `dir` holding a token outside the
+    * files that token is allowed in.
+    */
+  private def strayUses(dir: Path, allowed: Map[String, Set[String]]): Seq[String] =
+    for {
+      f <- sources if f.startsWith(dir)
       (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
       (token, ok) <- allowed
       if line.contains(token) && !ok(f.getFileName.toString)
     } yield s"$f:${n + 1}: $token"
+
+  test("session caches, key-set flags and conf mutexes live only in Memo") {
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val hits = strayUses(root, Map(
+      "TrieMap" -> Set("Memo.scala"),
+      "ConcurrentHashMap.newKeySet" -> Set("Memo.scala", "TmpDir.scala"),
+      "confMutex" -> Set.empty[String]))
     assert(sources.exists(_.getFileName.toString == "Memo.scala"))
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("checkpoints live only in Frames, verify and rank only in Candidates") {
+    val pipeline = root.resolve("graft/pipeline")
+    assert(Files.isRegularFile(pipeline.resolve("Candidates.scala")))
+    val hits = strayUses(root, Map(".localCheckpoint(" -> Set("Frames.scala"))) ++
+      strayUses(pipeline, Map(
+        "sorted_intersect_atleast" -> Set("Candidates.scala"),
+        "Window.partitionBy(\"q_id\")" -> Set("Candidates.scala")))
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 }
