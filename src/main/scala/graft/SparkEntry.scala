@@ -1679,8 +1679,8 @@ object SparkEntry {
       Some(ivfOracleSql("ann_index_append", annAppendedEmbCte))),
     // the cadence rebuild retiring append's centers-drift debt:
     // retrain on the index's current corpus, re-assign, re-derive the
-    // inverted list, commit by staged dir swap — search parity with a
-    // from-scratch build + crash-window recovery gated in
+    // inverted list, commit one index version — search parity with a
+    // from-scratch build, pinned readers and a killed writer gated in
     // PipelineSpec; gate artifact + oracle like the append row
     ("ann_index_rebuild",
       (s: SparkSession, d: String) => Ann.ivfTopKRebuiltGate(s, d),

@@ -1,9 +1,12 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.Tables
+import graft.sources.{Snapshot, SnapshotOps}
 import graft.functions.{cosine_sim, hyperplane_buckets}
 
 /** Approximate-nearest-neighbour search over the embedding column
@@ -142,9 +145,7 @@ object Ann {
     * super "center" is the MEAN of its member cells' centers — a
     * routing representative derivable from the (cell, center, super)
     * relation alone, so the persisted index needs no extra
-    * `supercenters/` file and legacy flat indexes (no super column)
-    * degrade to one super holding every cell, which makes the
-    * two-level expressions EXACTLY the old single-level ones.
+    * `supercenters/` file.
     */
   private[graft] type RouterSupers =
     Seq[(Seq[Double], Double, Seq[(Int, Seq[Double], Double)])]
@@ -160,14 +161,12 @@ object Ann {
       (sc, math.max(math.sqrt(sc.map(x => x * x).sum), 1e-12), cells)
     }
 
-  /** Build the router from any (cell, center[, super]) relation —
+  /** Build the router from any (cell, center, super) relation —
     * in-memory centersDf or the persisted `centers/` parquet.
     */
-  private[graft] def routerFromCenters(centersDf: DataFrame): RouterSupers = {
-    val hasSuper = centersDf.columns.contains("super")
+  private[graft] def routerFromCenters(centersDf: DataFrame): RouterSupers =
     routerOf(centersDf.collect().map(r =>
-      (r.getInt(0), r.getSeq[Double](1), if (hasSuper) r.getInt(2) else 0)))
-  }
+      (r.getInt(0), r.getSeq[Double](1), r.getInt(2))))
 
   /** The router as a bare plan literal — for call sites (streaming)
     * where the broadcast-relation fallback is unavailable and the
@@ -234,7 +233,7 @@ object Ann {
   /** The `nprobe` nearest cells of `v` through the router, ranked by
     * cosine (dot/|c| — |v| is a positive per-row constant): rank the
     * supers, gather the cells of the top `min(nSupers, max(2, nprobe))`
-    * supers, rank only those. With one super (flat/legacy router) this
+    * supers, rank only those. With one super (the flat quantiser) this
     * is exactly the old single-level multi-probe expression — same
     * scoring, same (score desc, cell asc) tie order.
     */
@@ -1112,40 +1111,104 @@ object Ann {
     * `assigned/` = (vec_id, v, cell) partitioned BY CELL — so a probe
     * of `nprobe` cells is a partition-pruned read touching only those
     * directories, the file-layout analogue of an inverted list —
-    * and `centers/` = the (cell, center) model. Same
-    * persist-at-layout-time discipline as [[Dedup.bandIndexWriteOf]]:
-    * at 100 TB the corpus is assigned once, and every later search /
-    * incremental-dedup job probes the artifact without re-training or
-    * re-assigning anything.
+    * `centers/` = the (cell, center, super) model, and `probed/` =
+    * the dedup-grade inverted list: each vector listed under its
+    * [[IndexNprobe]] nearest cells (multi-probe INDEXING, the
+    * storage-for-recall trade IVF dedup needs at low thresholds — a
+    * probe misses a vector only if the probe cells and all its index
+    * cells are disjoint). Same persist-at-layout-time discipline as
+    * [[Dedup.bandIndexWriteOf]]: at 100 TB the corpus is assigned
+    * once, and every later search / incremental-dedup job probes the
+    * artifact without re-training or re-assigning anything.
+    *
+    * An index root is a [[Snapshot]]-versioned set of immutable
+    * SEGMENTS, `s<version>_<token>/{assigned/cell=*, probed/cell=*,
+    * centers}`: build and [[ivfIndexRebuild]] commit one whole
+    * segment as the next version, [[ivfIndexAppend]] commits the base
+    * version's files plus an `assigned/` + `probed/` segment. Each
+    * version root declares the three relations' schemas, one struct
+    * field per relation, and [[ivfIndexRead]] is the one reader. Every
+    * write is one commit, so a reader sees all of one version, never
+    * a mix.
     */
   def ivfIndexWrite(spark: SparkSession, dir: String, outDir: String,
                     cells: Int = 16): Unit = {
     val (assigned, centersDf) = ivfAssign(spark, dir, cells)
-    writeIndexParts(assigned, centersDf, outDir)
-  }
-
-  /** Write the three index relations of a trained quantiser — shared
-    * by fresh build ([[ivfIndexWrite]]) and [[ivfIndexRebuild]]'s
-    * staging pass. `probed/` is the dedup-grade inverted list: each
-    * vector listed under its [[IndexNprobe]] nearest cells
-    * (multi-probe INDEXING, the storage-for-recall trade IVF dedup
-    * needs at low thresholds — a probe misses a vector only if the
-    * probe cells and all its index cells are disjoint).
-    */
-  private def writeIndexParts(assigned: DataFrame, centersDf: DataFrame,
-                              outDir: String): Unit = {
-    assigned.write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$outDir/assigned")
-    centersDf.write.mode("overwrite").parquet(s"$outDir/centers")
-    probedOf(assigned.drop("cell"), routerFromCenters(centersDf), IndexNprobe)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$outDir/probed")
+    SnapshotOps.retryConflicts(3) {
+      commitSegment(spark, outDir, fullSegment(assigned, centersDf))
+    }
   }
 
   /** How many cells each vector is indexed under in the persisted
     * `probed/` inverted list (multi-probe indexing).
     */
   val IndexNprobe = 2
+
+  /** One pinned version of a persisted IVF index. */
+  private[graft] final case class IvfIndex(
+      pin: Snapshot.Pin, assigned: DataFrame, probed: DataFrame,
+      centers: DataFrame)
+
+  /** Pin the current version of index `idx` once and read its three
+    * relations: each is the union of its pinned segment directories,
+    * one scan per segment (Spark discovers partitions under one root
+    * per scan) under the declared schema, so `cell` stays a partition
+    * column (a probe prunes cell directories, dynamically when the
+    * probe side is a broadcast) and no footer is read at planning.
+    * The frames list their files here: they keep reading this
+    * version whatever commits later, while vacuum retains it.
+    */
+  private[graft] def ivfIndexRead(spark: SparkSession, idx: String): IvfIndex = {
+    val p = Snapshot.pin(spark, idx)
+    def relation(name: String): DataFrame = {
+      val schema = p.schema(name).dataType.asInstanceOf[StructType]
+      p.files.map(_.split('/')).filter(_(1) == name).map(_(0)).distinct
+        .map(segment => spark.read.schema(schema).parquet(s"$idx/$segment/$name"))
+        .reduce(_ unionByName _)
+    }
+    IvfIndex(p, relation("assigned"), relation("probed"), relation("centers"))
+  }
+
+  /** A whole segment of a trained quantiser: its assignments, centers
+    * and multi-probe inverted list.
+    */
+  private def fullSegment(assigned: DataFrame,
+                          centersDf: DataFrame): Seq[(String, DataFrame)] =
+    Seq("assigned" -> assigned, "centers" -> centersDf,
+      "probed" -> probedOf(assigned.drop("cell"), routerFromCenters(centersDf),
+        IndexNprobe))
+
+  /** The one commit of an index write: stage `relations` as a hidden
+    * segment, place it with one rename, commit `keep` (files of the
+    * pinned `base` that stay live) plus the segment's files as the
+    * next version under the base's declared schema, then vacuum.
+    * Without a base (a build) the next version follows whatever is
+    * current and declares the schema of `relations`. A lost commit
+    * race throws [[Snapshot.CommitConflict]]; callers re-run the whole
+    * write from a fresh pin through [[SnapshotOps.retryConflicts]].
+    */
+  private def commitSegment(spark: SparkSession, idx: String,
+                            relations: Seq[(String, DataFrame)],
+                            base: Option[Snapshot.Pin] = None,
+                            keep: Seq[String] = Nil): Unit = {
+    val root = new Path(idx)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val version = base.map(_.version)
+      .orElse(Snapshot.currentVersion(fs, root)).getOrElse(0L)
+    val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+    val segment = s"s${version + 1}_$token"
+    relations.foreach { case (name, df) =>
+      val w = df.write.mode("overwrite")
+      (if (name == "centers") w else w.partitionBy("cell"))
+        .parquet(s"$idx/.$segment/$name")
+    }
+    val files = Snapshot.place(fs, root, new Path(root, s".$segment"), segment)
+    val schema = base.map(_.schema).getOrElse(StructType(
+      relations.map { case (name, df) => StructField(name, df.schema.toNullable) }))
+    Snapshot.commit(fs, root, keep ++ files, version, schema,
+      baseFiles = Some(keep))
+    Snapshot.vacuum(fs, root)
+  }
 
   /** [[ivfTopK]] against the PERSISTED index (built once per session;
     * the production artifact is written once at corpus layout).
@@ -1165,11 +1228,10 @@ object Ann {
   private def indexSearch(spark: SparkSession, dir: String, idx: String,
                           gateOp: Option[String], nQueries: Int, k: Int,
                           nprobe: Int): DataFrame = {
-    val assigned = spark.read.parquet(s"$idx/assigned")
-    val centersDf = spark.read.parquet(s"$idx/centers")
-    gateOp.foreach(op =>
-      ivfGateWrite(spark, op, dir, assigned, centersDf, nQueries, nprobe))
-    ivfProbePlan(assigned, centersDf, nQueries, k, nprobe)
+    val index = ivfIndexRead(spark, idx)
+    gateOp.foreach(op => ivfGateWrite(spark, op, dir, index.assigned,
+      index.centers, nQueries, nprobe))
+    ivfProbePlan(index.assigned, index.centers, nQueries, k, nprobe)
   }
 
   // index-family queries share the persisted indexes below and may
@@ -1182,38 +1244,46 @@ object Ann {
 
   /** Nightly IVF index maintenance: append a vector batch to the
     * persisted index WITHOUT retraining and WITHOUT touching any
-    * existing file — new part files land under the batch's cell
-    * directories, everything already committed stays byte-identical
-    * (spec-asserted). Assignment routes through the persisted centers'
-    * router ([[routeCellExpr]] — the quantiser's own euclidean-argmin
-    * rule, two-level when the index is, so an appended vector lands
-    * exactly where an index rebuild would put it); `probed/`
-    * membership uses the same multi-probe cosine ranking the index was
-    * built with. Centers drift as the corpus grows is the operator's
-    * known debt — production re-trains on a cadence and rebuilds,
-    * exactly like any IVF deployment.
+    * existing file — the batch lands as a new segment, committed on
+    * top of the pinned version's files, so everything already
+    * committed stays byte-identical (spec-asserted). One router
+    * attach routes the batch once: the euclidean cell
+    * ([[routeCellExpr]] — the quantiser's own euclidean-argmin rule,
+    * two-level when the index is, so an appended vector lands exactly
+    * where an index rebuild would put it) and the multi-probe cells
+    * the index was built with ([[routeProbeExpr]]) come from one
+    * projection that feeds both `assigned/` and `probed/`. Centers
+    * drift as the corpus grows is the operator's known debt —
+    * production re-trains on a cadence ([[ivfIndexRebuild]]), exactly
+    * like any IVF deployment.
     */
   def ivfIndexAppend(spark: SparkSession, idx: String,
-                     batch: DataFrame): Unit = {
-    val router = routerFromCenters(spark.read.parquet(s"$idx/centers"))
-    val (af, ac) = attachRouter(batch, router)
-    af.select(col("vec_id"), col("v"), routeCellExpr(ac).as("cell"))
-      .write.mode("append").partitionBy("cell")
-      .parquet(s"$idx/assigned")
-    probedOf(batch, router, IndexNprobe)
-      .write.mode("append").partitionBy("cell")
-      .parquet(s"$idx/probed")
-  }
+                     batch: DataFrame): Unit =
+    SnapshotOps.retryConflicts(3) {
+      val base = ivfIndexRead(spark, idx)
+      val router = routerFromCenters(base.centers)
+      val (af, ac) = attachRouter(batch, router)
+      // the first relation's write fills the cache, the second reads it
+      val routed = af.select(col("vec_id"), col("v"),
+        routeCellExpr(ac).as("cell"),
+        routeProbeExpr(ac, router, IndexNprobe).as("probes")).cache()
+      try commitSegment(spark, idx, Seq(
+          "assigned" -> routed.select("vec_id", "v", "cell"),
+          "probed" -> routed.select(col("vec_id"), col("v"),
+            explode(col("probes")).as("cell"))),
+        Some(base.pin), base.pin.files)
+      finally routed.unpersist()
+    }
 
-  /** The append gate's fixture + search: clone the corpus index (a
-    * production append mutates in place; the clone keeps the memoized
-    * base index pristine for its other consumers), append a
-    * re-ingested-duplicates batch (`vec_id % 11 == 0`, shifted ids,
-    * identical vectors — the nightly arrival every dedup-less ingest
-    * produces), and search it. The duplicates surface as cos≈1
-    * neighbours of their originals — PipelineSpec asserts the rank-1
-    * hit, assignment identity with the originals' cells, and that
-    * append left every pre-existing file untouched.
+  /** The append gate's fixture + search: clone the corpus index (the
+    * clone keeps the memoized base index pristine for its other
+    * consumers), append a re-ingested-duplicates batch
+    * (`vec_id % 11 == 0`, shifted ids, identical vectors — the nightly
+    * arrival every dedup-less ingest produces), and search it. The
+    * duplicates surface as cos≈1 neighbours of their originals —
+    * PipelineSpec asserts the rank-1 hit, assignment identity with the
+    * originals' cells, and that append left every pre-existing file
+    * untouched.
     */
   def ivfTopKAppended(spark: SparkSession, dir: String,
                       nQueries: Int = 5, k: Int = 10,
@@ -1239,85 +1309,64 @@ object Ann {
     val src = ivfIndexFor(spark, dir, cells)
     graft.Memo.dir(spark, "ivfappend", s"$dir:$cells") { idx =>
       cloneIndex(spark, src, idx)
-      val batch = spark.read.parquet(s"$src/assigned")
+      val batch = ivfIndexRead(spark, src).assigned
         .filter(pmod(col("vec_id"), lit(11)) === 0)
         .select((col("vec_id") + lit(1000000L)).as("vec_id"), col("v"))
       ivfIndexAppend(spark, idx, batch)
     }
   }
 
-  /** Copy an index's three relations (fixture plumbing: production
-    * rebuild/append mutate in place; specs and gate fixtures clone so
-    * the memoized base index stays pristine for its other consumers).
-    *
+  /** Copy an index root — every segment and every retained version —
+    * to `dst` (fixture plumbing: specs and gate fixtures clone so the
+    * memoized base index stays pristine for its other consumers).
     * Filesystem-level recursive copy, not a read→write re-encode: a
-    * clone's contract is byte-identical relations under a new root,
-    * and the three Spark jobs this replaces re-shuffled and re-coded
-    * every cell directory (measured as the bulk of
-    * `ann_index_append`'s 28 s cold build — the suite's single worst
-    * fixture). A production clone is likewise a file-level copy (or a
-    * storage snapshot), never a decode/encode pass.
+    * clone's contract is a byte-identical index under a new root, and
+    * a re-encode re-shuffles and re-codes every cell directory. A
+    * production clone is likewise a file-level copy (or a storage
+    * snapshot), never a decode/encode pass.
     */
   private[graft] def cloneIndex(spark: SparkSession, src: String,
                                 dst: String): Unit = {
     val conf = spark.sessionState.newHadoopConf()
-    val srcPath = new org.apache.hadoop.fs.Path(src)
-    val dstPath = new org.apache.hadoop.fs.Path(dst)
-    val fs = srcPath.getFileSystem(conf)
-    Seq("assigned", "probed", "centers").foreach { sub =>
-      val d = new org.apache.hadoop.fs.Path(dstPath, sub)
-      fs.delete(d, true)
-      org.apache.hadoop.fs.FileUtil.copy(
-        fs, new org.apache.hadoop.fs.Path(srcPath, sub),
-        fs, d, false /* deleteSource */, true /* overwrite */, conf)
-    }
+    val dstPath = new Path(dst)
+    val fs = dstPath.getFileSystem(conf)
+    fs.delete(dstPath, true)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new Path(src), fs, dstPath,
+      false /* deleteSource */, conf)
   }
-
-  private val RebuildStage = ".rebuild_stage"
-  private val RebuildTrash = ".rebuild_trash"
 
   /** Cadence rebuild of a persisted IVF index — the operator that
     * RETIRES [[ivfIndexAppend]]'s documented centers-drift debt:
-    * retrain the coarse quantiser on the index's CURRENT corpus (the
+    * retrain the coarse quantiser on the pinned version's corpus (the
     * capped deterministic sample, exactly like a fresh build),
     * re-assign every vector, re-derive the multi-probe inverted list,
-    * and commit the three relations by the PartitionSwap staged-
-    * rename protocol so searchers see the old index until the swap
-    * and the new one after — never a mix, with every crash window
-    * recoverable ([[graft.sources.PartitionSwap.recover]] runs
-    * first, so a rebuild killed mid-commit completes or rolls back
-    * on the next invocation).
+    * and commit the result as one new segment holding the whole
+    * index. Readers pinned before the commit keep the old version,
+    * readers after it get the new one; a rebuild killed before its
+    * commit leaves the old index current, and its staged segment is
+    * an orphan for the next write's vacuum.
     *
     * Scale shape: one training sample, one linear re-assign pass, two
     * partitioned writes — the same cost as the original build, paid
-    * on the rebuild cadence; consumers cut over atomically per
-    * relation (assigned → centers → probed, so a reader pinning the
-    * directory set mid-swap can at worst mix new assignments with old
-    * centers for the probe ORDER — recall-neutral, since ranking is
-    * exact cosine over the probed rows). Search parity with a
-    * from-scratch build on the same corpus is spec-asserted.
+    * on the rebuild cadence. Search parity with a from-scratch build
+    * on the same corpus is spec-asserted.
     */
   def ivfIndexRebuild(spark: SparkSession, idx: String,
-                      cells: Int = 16): Unit = {
-    val root = new org.apache.hadoop.fs.Path(idx)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sources.PartitionSwap.recover(fs, root, RebuildStage, RebuildTrash)
-    val current = spark.read.parquet(s"$idx/assigned").select("vec_id", "v")
-    val (assigned, centersDf) = trainAssignOf(current, cells)
-    writeIndexParts(assigned, centersDf, s"$idx/$RebuildStage")
-    Seq("assigned", "centers", "probed").foreach { sub =>
-      graft.sources.PartitionSwap.commit(fs, root, sub, RebuildStage, RebuildTrash)
+                      cells: Int = 16): Unit =
+    SnapshotOps.retryConflicts(3) {
+      val base = ivfIndexRead(spark, idx)
+      val (assigned, centersDf) =
+        trainAssignOf(base.assigned.select("vec_id", "v"), cells)
+      try commitSegment(spark, idx, fullSegment(assigned, centersDf), Some(base.pin))
+      finally assigned.unpersist()
     }
-    fs.delete(new org.apache.hadoop.fs.Path(root, RebuildStage), true)
-    fs.delete(new org.apache.hadoop.fs.Path(root, RebuildTrash), true)
-    assigned.unpersist()
-  }
 
   /** The rebuild gate's lifecycle fixture + search: clone the
     * APPENDED index (build → append — the drifted state every nightly
-    * ingest accumulates), rebuild it in place, and search the result.
+    * ingest accumulates), rebuild it, and search the result.
     * PipelineSpec asserts parity with a from-scratch build over the
-    * same vector set and that no stage/trash residue survives.
+    * same vector set and that every directory left under the index
+    * belongs to a retained version.
     */
   def ivfTopKRebuilt(spark: SparkSession, dir: String,
                      nQueries: Int = 5, k: Int = 10,

@@ -778,14 +778,12 @@ object Dedup {
                                        threshold: Double, cells: Int,
                                        nprobe: Int,
                                        gateOp: Option[String]): DataFrame = {
-    val idx = Ann.ivfIndexFor(spark, dir, cells)
-    val router = Ann.routerFromCenters(spark.read.parquet(s"$idx/centers"))
+    val index = Ann.ivfIndexRead(spark, Ann.ivfIndexFor(spark, dir, cells))
     val isNew = col("vec_id") % 7 === 0
-    val batch = Ann.probedOf(
-        spark.read.parquet(s"$idx/assigned").filter(isNew).drop("cell"),
-        router, nprobe)
+    val batch = Ann.probedOf(index.assigned.filter(isNew).drop("cell"),
+        Ann.routerFromCenters(index.centers), nprobe)
       .select(col("vec_id").as("new_id"), col("v").as("bv"), col("cell"))
-    val corpus = spark.read.parquet(s"$idx/probed").filter(!isNew)
+    val corpus = index.probed.filter(!isNew)
     gateOp.foreach(op => Gate.once(spark, op, dir) { g =>
       batch.select("new_id", "cell")
         .coalesce(1).write.mode("overwrite").parquet(s"$g/batch")

@@ -528,13 +528,8 @@ object Snapshot {
     parts.foreach { part =>
       val src = new Path(root,
         s"$stage/__snap_part=${esc.escapePathName(part)}")
-      if (fs.exists(src)) {
-        val sub = s"$part/u1_$token"
-        val dst = new Path(root, sub)
-        if (!fs.rename(src, dst))
-          throw new java.io.IOException(s"convert placement failed for $dst")
-        files ++= dataFilesUnder(fs, root, sub)
-      }
+      if (fs.exists(src))
+        files ++= place(fs, root, src, s"$part/u1_$token")
       legacy ++= fs.listStatus(new Path(root, part)).filter(_.isFile)
         .filter(_.getPath.getName.endsWith(".parquet")).map(_.getPath)
     }
@@ -546,10 +541,44 @@ object Snapshot {
     v
   }
 
-  /** Relative paths of the parquet files under `root/<rel>`. */
-  private[sources] def dataFilesUnder(fs: FileSystem, root: Path,
-                                      rel: String): Seq[String] =
-    fs.listStatus(new Path(root, rel)).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(st => s"$rel/${st.getPath.getName}").sorted
+  /** Place a staged directory: rename `staged` to `root/<rel>` in one
+    * metadata operation and return the relative paths of the parquet
+    * files now under it, sorted. `rel` must carry a writer-unique name,
+    * so the rename never lands on a directory another writer placed;
+    * nothing is visible to readers until a version references the
+    * files. Every staged write of the snapshot layer places through
+    * here: table mutations, [[convert]] and the IVF index segments.
+    */
+  private[graft] def place(fs: FileSystem, root: Path, staged: Path,
+                           rel: String): Seq[String] = {
+    val dst = new Path(root, rel)
+    fs.mkdirs(dst.getParent)
+    if (!fs.rename(staged, dst))
+      throw new java.io.IOException(s"staged placement failed for $dst")
+    // a plain listStatus walk: a recursive listFiles resolves every
+    // file's block locations, which a file list does not need
+    def under(dir: Path, rel: String): Seq[String] =
+      fs.listStatus(dir).toSeq.flatMap { st =>
+        val name = st.getPath.getName
+        if (st.isDirectory) under(st.getPath, s"$rel/$name")
+        else if (name.endsWith(".parquet") && !name.startsWith(".")) Seq(s"$rel/$name")
+        else Nil
+      }
+    under(dst, rel).sorted
+  }
+
+  /** Replace the small text file `p` through a hidden tmp file and one
+    * rename: a crash leaves the old content or an ignored tmp file,
+    * never a truncated file.
+    */
+  private[sources] def replaceText(fs: FileSystem, p: Path, text: String): Unit = {
+    val tmp = new Path(p.getParent,
+      s".${p.getName}.tmp.${java.util.UUID.randomUUID}")
+    val out = fs.create(tmp, true)
+    try out.write(text.getBytes("UTF-8"))
+    finally out.close()
+    fs.delete(p, false)
+    if (!fs.rename(tmp, p))
+      throw new java.io.IOException(s"replace failed for $p")
+  }
 }

@@ -57,12 +57,13 @@ object SnapshotFollow {
     // cursor = the NEW live.min and silently skip the oldest delta;
     // with the cursor written, that poll trips the loud fell-behind
     // require above instead of gapping
-    if (persisted.isEmpty) writeCursor(fs, cursorPath, cursor)
+    val cursorFile = new Path(cursorPath)
+    if (persisted.isEmpty) Snapshot.replaceText(fs, cursorFile, s"$cursor\n")
     val pending = live.filter(_ > cursor)
     pending.foldLeft(cursor) { (from, to) =>
       SnapshotOps.changesBetween(spark, tableDir, from, to)
         .write.mode("overwrite").parquet(s"$outDir/version=$to")
-      writeCursor(fs, cursorPath, to)
+      Snapshot.replaceText(fs, cursorFile, s"$to\n")
       to
     }
     pending.size
@@ -77,8 +78,9 @@ object SnapshotFollow {
   /** An empty or unparseable cursor file (a legacy writer that died
     * between create-truncate and write) reads as ABSENT — the follower
     * re-bootstraps instead of crashing unrecoverably on every poll.
-    * [[writeCursor]]'s tmp+rename makes that window impossible for
-    * cursors written by this code.
+    * Cursor writes go through [[Snapshot.replaceText]]'s tmp+rename,
+    * which makes that window impossible for cursors written by this
+    * code.
     */
   private def readCursor(fs: org.apache.hadoop.fs.FileSystem,
                          path: String): Option[Long] = {
@@ -93,23 +95,6 @@ object SnapshotFollow {
       first.map(_.trim).filter(_.nonEmpty)
         .flatMap(s => scala.util.Try(s.toLong).toOption)
     }
-  }
-
-  /** Cursor writes go through tmp + rename (the manifest-commit
-    * discipline): a crash mid-write leaves either the old cursor or a
-    * tmp file that is simply ignored — never a truncated cursor.
-    */
-  private def writeCursor(fs: org.apache.hadoop.fs.FileSystem,
-                          path: String, v: Long): Unit = {
-    val p = new Path(path)
-    val tmp = new Path(p.getParent,
-      s".${p.getName}.tmp.${java.util.UUID.randomUUID}")
-    val out = fs.create(tmp, true)
-    try out.write(s"$v\n".getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"cursor write failed for $p")
   }
 
   /** Gate fixture + query: the two-mutation lifecycle consumed

@@ -169,7 +169,7 @@ object SnapshotOps {
     * conflicting commit between pin and commit to prove both
     * mutations' effects land.
     */
-  private[sources] def retryConflicts[T](attempts: Int)(body: => T): T = {
+  private[graft] def retryConflicts[T](attempts: Int)(body: => T): T = {
     var left = attempts
     while (true) {
       try return body
@@ -347,14 +347,8 @@ object SnapshotOps {
       .parquet(s"$dir/$stage")
     parts.foreach { part =>
       val src = new Path(root, s"$stage/$StageTag=${escapePart(part)}")
-      if (fs.exists(src)) {
-        val sub = s"$part/u${newVersion}_$token"
-        val dst = new Path(root, sub)
-        fs.mkdirs(dst.getParent)
-        if (!fs.rename(src, dst))
-          throw new java.io.IOException(s"staged placement failed for $dst")
-        newFiles ++= Snapshot.dataFilesUnder(fs, root, sub)
-      }
+      if (fs.exists(src))
+        newFiles ++= Snapshot.place(fs, root, src, s"$part/u${newVersion}_$token")
     }
     fs.delete(new Path(root, stage), true)
     newFiles.toSeq

@@ -259,10 +259,9 @@ object StreamOps {
   def annStream(spark: SparkSession, dir: String,
                 nQueries: Int = 5, k: Int = 10,
                 cells: Int = 16, nprobe: Int = 4): DataFrame = {
-    val idx = graft.pipeline.Ann.ivfIndexFor(spark, dir, cells)
-    val assigned = spark.read.parquet(s"$idx/assigned")
-    val router = graft.pipeline.Ann.routerFromCenters(
-      spark.read.parquet(s"$idx/centers"))
+    val index = graft.pipeline.Ann.ivfIndexRead(spark,
+      graft.pipeline.Ann.ivfIndexFor(spark, dir, cells))
+    val router = graft.pipeline.Ann.routerFromCenters(index.centers)
     // router rides as a LITERAL here (streaming-legal per-row compute;
     // the broadcast fallback would be a stream-static cross join and
     // the query side is a handful of rows anyway)
@@ -275,7 +274,7 @@ object StreamOps {
         q.select(col("q_id"), col("v").as("qv"),
             explode(graft.pipeline.Ann.routeProbeExpr(
               routerCol, router, nprobe)).as("cell"))
-          .join(assigned, Seq("cell"))
+          .join(index.assigned, Seq("cell"))
           .filter(col("vec_id") =!= col("q_id"))
           .select(col("q_id"), col("vec_id").as("n_id"),
             graft.functions.cosine_sim(col("qv"), col("v")).as("cos"))

@@ -13,7 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    a check-then-act key set or a conf mutex anywhere else fails;
   *  - one materialize helper (`operators.Frames`) and one candidate
   *    core (`pipeline.Candidates`): a copied checkpoint, Jaccard verify
-  *    or per-query rank elsewhere fails.
+  *    or per-query rank elsewhere fails;
+  *  - one commit primitive: a rename commits or places files only in
+  *    [[graft.sources.Snapshot]] (tables and IVF indexes alike) and in
+  *    the datagram sink's per-file committer, and the directory-swap
+  *    stack stays deleted.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -53,6 +57,13 @@ class SourceGuardSpec extends AnyFunSuite {
       strayUses(pipeline, Map(
         "sorted_intersect_atleast" -> Set("Candidates.scala"),
         "Window.partitionBy(\"q_id\")" -> Set("Candidates.scala")))
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("renames live only in the snapshot layer and the datagram sink") {
+    val hits = strayUses(root, Map(
+      ".rename(" -> Set("Snapshot.scala", "DatagramSource.scala"),
+      "PartitionSwap" -> Set.empty[String]))
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 }

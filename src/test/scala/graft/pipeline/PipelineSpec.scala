@@ -317,10 +317,10 @@ class PipelineSpec extends SparkSpec {
     val src = Ann.ivfIndexFor(spark, sf01, 16)
     // (a) every appended duplicate landed in its original's cell —
     // euclid-argmin over literal centers == the quantiser's predict
-    val orig = spark.read.parquet(s"$src/assigned")
+    val orig = Ann.ivfIndexRead(spark, src).assigned
       .filter(pmod(col("vec_id"), lit(11)) === 0)
       .collect().map(r => r.getLong(0) -> r.getAs[Int]("cell")).toMap
-    val appended = spark.read.parquet(s"$idx/assigned")
+    val appended = Ann.ivfIndexRead(spark, idx).assigned
       .filter(col("vec_id") >= 1000000L)
       .collect().map(r => (r.getLong(0) - 1000000L) -> r.getAs[Int]("cell")).toMap
     assert(appended.nonEmpty && appended == orig,
@@ -343,18 +343,14 @@ class PipelineSpec extends SparkSpec {
     // a fresh clone of the base index, appended in place
     val src = Ann.ivfIndexFor(spark, sf01, 16)
     val dir = Files.createTempDirectory("graft_append_test").toString
-    Seq("assigned", "probed").foreach { sub =>
-      spark.read.parquet(s"$src/$sub")
-        .write.partitionBy("cell").parquet(s"$dir/$sub")
-    }
-    spark.read.parquet(s"$src/centers").write.parquet(s"$dir/centers")
+    Ann.cloneIndex(spark, src, dir)
     def snapshot(): Map[String, Long] = Files.walk(Paths.get(dir)).iterator().asScala
       .filter(p => Files.isRegularFile(p) &&
         !p.getFileName.toString.startsWith("_") &&
         !p.getFileName.toString.startsWith("."))  // _SUCCESS markers + crcs
       .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toMap
     val before = snapshot()
-    val batch = spark.read.parquet(s"$src/assigned")
+    val batch = Ann.ivfIndexRead(spark, src).assigned
       .filter(pmod(col("vec_id"), lit(11)) === 3)
       .select((col("vec_id") + lit(2000000L)).as("vec_id"), col("v"))
     Ann.ivfIndexAppend(spark, dir, batch)
@@ -371,13 +367,14 @@ class PipelineSpec extends SparkSpec {
     val idx = Ann.rebuiltIndexFor(spark, sf01, 16)
     val src = Ann.appendedIndexFor(spark, sf01, 16)
     // (a) the corpus is preserved: same vec_id set as the appended index
-    val before = spark.read.parquet(s"$src/assigned")
+    val rebuilt = Ann.ivfIndexRead(spark, idx)
+    val before = Ann.ivfIndexRead(spark, src).assigned
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    val after = spark.read.parquet(s"$idx/assigned")
+    val after = rebuilt.assigned
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(after == before)
     // (b) the inverted list is fully re-derived
-    assert(spark.read.parquet(s"$idx/probed").count() ==
+    assert(rebuilt.probed.count() ==
       before.size.toLong * Ann.IndexNprobe)
     // (c) ARTIFACT parity with a from-scratch build over the same
     // vector set (read the same way — a second clone): training is
@@ -386,22 +383,22 @@ class PipelineSpec extends SparkSpec {
     val clone2 = java.nio.file.Files.createTempDirectory("graft_rebuild_ref").toString
     Ann.cloneIndex(spark, src, clone2)
     val (fa, fc) = Ann.trainAssignOf(
-      spark.read.parquet(s"$clone2/assigned").select("vec_id", "v"), 16)
+      Ann.ivfIndexRead(spark, clone2).assigned.select("vec_id", "v"), 16)
     val freshCenters = fc.collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
-    val rebuiltCenters = spark.read.parquet(s"$idx/centers").collect()
+    val rebuiltCenters = rebuilt.centers.collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
     assert(rebuiltCenters == freshCenters,
       "rebuilt centers differ from a fresh build on the same corpus")
     val freshCells = fa.collect()
       .map(r => r.getLong(0) -> r.getAs[Int]("cell")).toMap
     fa.unpersist()
-    val rebuiltCells = spark.read.parquet(s"$idx/assigned").collect()
+    val rebuiltCells = rebuilt.assigned.collect()
       .map(r => r.getLong(0) -> r.getAs[Int]("cell")).toMap
     assert(rebuiltCells == freshCells)
     // (d) drift is actually retired: the rebuilt centers were trained
     // on corpus+batch, not carried over from the pre-append build
-    val staleCenters = spark.read.parquet(s"$src/centers").collect()
+    val staleCenters = Ann.ivfIndexRead(spark, src).centers.collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
     assert(rebuiltCenters != staleCenters,
       "rebuild kept the stale centers — retrain did not happen")
@@ -411,34 +408,109 @@ class PipelineSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
     rank1.foreach { case (q, n) => assert(n == q + 1000000L) }
     assert(rank1.nonEmpty)
-    // (f) no stage/trash residue under the rebuilt index
-    val resid = new java.io.File(idx).listFiles()
-      .map(_.getName).filter(_.startsWith(".rebuild"))
-    assert(resid.isEmpty, s"residue: ${resid.mkString(",")}")
+    // (f) every directory under the rebuilt index belongs to a kept
+    // version: the commit left no staged or unreferenced segment
+    val root = new org.apache.hadoop.fs.Path(idx)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val kept = graft.sources.Snapshot.versions(fs, root)
+      .flatMap(v => graft.sources.Snapshot.filesOf(fs, root, v))
+      .map(_.takeWhile(_ != '/')).toSet
+    val dirs = new java.io.File(idx).listFiles().filter(_.isDirectory)
+      .map(_.getName).filter(_ != graft.sources.Snapshot.MetaDir).toSet
+    assert(dirs.nonEmpty && dirs.subsetOf(kept),
+      s"unreferenced: ${(dirs -- kept).mkString(",")}")
   }
 
-  test("ivf index rebuild recovers a crash between trash and swap") {
+  /** The vec_ids of an index relation. */
+  private def vecIds(df: org.apache.spark.sql.DataFrame): Set[Long] =
+    df.select("vec_id").collect().map(_.getLong(0)).toSet
+
+  /** `index` reads as one whole version: `ids` assigned once each,
+    * listed IndexNprobe times each in probed/, under `centers`.
+    */
+  private def assertWhole(index: Ann.IvfIndex, ids: Set[Long],
+                          centers: Map[Int, Seq[Double]]): Unit = {
+    assert(index.assigned.count() == ids.size.toLong && vecIds(index.assigned) == ids)
+    assert(index.probed.count() == ids.size.toLong * Ann.IndexNprobe &&
+      vecIds(index.probed) == ids)
+    assert(centersOf(index) == centers)
+  }
+
+  private def centersOf(index: Ann.IvfIndex): Map[Int, Seq[Double]] =
+    index.centers.collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
+
+  /** Run `body` over a scratch clone of the base index, a batch of
+    * shifted copies of its `vec_id % 13 == 5` vectors and the batch's
+    * ids; the clone is deleted afterwards.
+    */
+  private def withClone(prefix: String, shift: Long)
+                       (body: (String, org.apache.spark.sql.DataFrame, Set[Long]) => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    try {
+      Ann.cloneIndex(spark, Ann.ivfIndexFor(spark, sf01, 16), dir)
+      val batch = Ann.ivfIndexRead(spark, dir).assigned
+        .filter(pmod(col("vec_id"), lit(13)) === 5)
+        .select((col("vec_id") + lit(shift)).as("vec_id"), col("v"))
+      body(dir, batch, vecIds(batch))
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(dir))
+  }
+
+  test("ivf index: a reader pinned before an append or a rebuild reads the " +
+       "old version whole; a reader pinned after reads the new one whole") {
+    withClone("graft_ivf_pinned", 3000000L) { (dir, batch, added) =>
+      val v1 = Ann.ivfIndexRead(spark, dir)
+      val base = vecIds(v1.assigned)
+      val c1 = centersOf(v1)
+      Ann.ivfIndexAppend(spark, dir, batch)
+      assertWhole(v1, base, c1)
+      val v2 = Ann.ivfIndexRead(spark, dir)
+      assert(v2.pin.version == v1.pin.version + 1)
+      assertWhole(v2, base ++ added, c1)
+      // the append reused the base segment's shard and wrote one more
+      val root = new org.apache.hadoop.fs.Path(dir)
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      def shards(v: Long) = graft.sources.Snapshot.shardRefsOf(fs, root, v).toSet
+      assert(shards(v1.pin.version).subsetOf(shards(v2.pin.version)) &&
+        shards(v2.pin.version).size == shards(v1.pin.version).size + 1)
+      Ann.ivfIndexRebuild(spark, dir, 16)
+      assertWhole(v2, base ++ added, c1)
+      val v3 = Ann.ivfIndexRead(spark, dir)
+      assert(v3.pin.version == v2.pin.version + 1)
+      // the rebuild commits one segment holding the whole retrained index
+      assert(v3.pin.files.map(_.takeWhile(_ != '/')).distinct.size == 1)
+      assertWhole(v3, base ++ added, centersOf(v3))
+      assert(centersOf(v3).keySet == (0 until 16).toSet)
+    }
+  }
+
+  test("ivf index: a writer killed between staging and commit leaves the " +
+       "old index readable; the next write's vacuum reaps its leftovers") {
     import java.nio.file.{Files, Paths}
-    val src = Ann.rebuiltIndexFor(spark, sf01, 16)
-    val dir = Files.createTempDirectory("graft_rebuild_crash").toString
-    Ann.cloneIndex(spark, src, dir)
-    val want = spark.read.parquet(s"$dir/assigned")
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    // simulate death between steps (2) and (3) of the swap: the live
-    // assigned/ is gone, the staged copy (with _SUCCESS) is whole
-    val stage = Paths.get(dir, ".rebuild_stage")
-    Files.createDirectories(stage)
-    Files.move(Paths.get(dir, "assigned"), stage.resolve("assigned"))
-    if (!Files.exists(stage.resolve("assigned").resolve("_SUCCESS")))
-      Files.createFile(stage.resolve("assigned").resolve("_SUCCESS"))
-    // the next rebuild must first complete the interrupted swap (or
-    // the read of assigned/ would see nothing) and then run normally
-    Ann.ivfIndexRebuild(spark, dir, 16)
-    val got = spark.read.parquet(s"$dir/assigned")
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(got == want)
-    assert(!Files.exists(stage) &&
-      !Files.exists(Paths.get(dir, ".rebuild_trash")))
+    import java.nio.file.attribute.FileTime
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    withClone("graft_ivf_killed", 4000000L) { (dir, batch, added) =>
+      val before = Ann.ivfIndexRead(spark, dir)
+      val base = vecIds(before.assigned)
+      val c1 = centersOf(before)
+      // the dead writer's leftovers, each a whole copy of the live
+      // segment: one still staged (hidden, older than the stage grace)
+      // and one placed that no version references
+      val live = before.pin.files.head.takeWhile(_ != '/')
+      val staged = s".s2_${"d" * 12}"
+      val placed = s"s2_${"e" * 12}"
+      val conf = spark.sessionState.newHadoopConf()
+      val fs = new Path(dir).getFileSystem(conf)
+      Seq(staged, placed).foreach(d =>
+        FileUtil.copy(fs, new Path(dir, live), fs, new Path(dir, d), false, conf))
+      Files.setLastModifiedTime(Paths.get(dir, staged), FileTime.fromMillis(
+        System.currentTimeMillis() - graft.sources.Snapshot.StageGraceMs - 60000L))
+      val during = Ann.ivfIndexRead(spark, dir)
+      assert(during.pin == before.pin)
+      assertWhole(during, base, c1)
+      Ann.ivfIndexAppend(spark, dir, batch)
+      assert(!Files.exists(Paths.get(dir, staged)) && !Files.exists(Paths.get(dir, placed)))
+      assertWhole(Ann.ivfIndexRead(spark, dir), base ++ added, c1)
+    }
   }
 
   test("plan-literal budget: forcing the broadcast-grid path (budget 0) " +
