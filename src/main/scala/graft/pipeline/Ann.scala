@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.Tables
-import graft.sources.{Snapshot, SnapshotOps}
+import graft.sources.Snapshot
 import graft.functions.{cosine_sim, hyperplane_buckets}
 
 /** Approximate-nearest-neighbour search over the embedding column
@@ -1128,14 +1128,18 @@ object Ann {
     * version's files plus an `assigned/` + `probed/` segment. Each
     * version root declares the three relations' schemas, one struct
     * field per relation, and [[ivfIndexRead]] is the one reader. Every
-    * write is one commit, so a reader sees all of one version, never
-    * a mix.
+    * write is one [[Snapshot.transact]] commit, so a reader sees all of
+    * one version, never a mix.
     */
   def ivfIndexWrite(spark: SparkSession, dir: String, outDir: String,
                     cells: Int = 16): Unit = {
     val (assigned, centersDf) = ivfAssign(spark, dir, cells)
-    SnapshotOps.retryConflicts(3) {
-      commitSegment(spark, outDir, fullSegment(assigned, centersDf))
+    Snapshot.transact(spark, outDir, bootstrap = true) { p =>
+      val relations = fullSegment(assigned, centersDf)
+      (Some(segmentWrite(spark, outDir, p, relations).copy(schema = Some(
+        StructType(relations.map { case (name, df) =>
+          StructField(name, df.schema.toNullable)
+        })))), ())
     }
   }
 
@@ -1158,8 +1162,12 @@ object Ann {
     * The frames list their files here: they keep reading this
     * version whatever commits later, while vacuum retains it.
     */
-  private[graft] def ivfIndexRead(spark: SparkSession, idx: String): IvfIndex = {
-    val p = Snapshot.pin(spark, idx)
+  private[graft] def ivfIndexRead(spark: SparkSession, idx: String): IvfIndex =
+    ivfIndexAt(spark, idx, Snapshot.pin(spark, idx))
+
+  /** [[ivfIndexRead]] of an already pinned version of `idx`. */
+  private def ivfIndexAt(spark: SparkSession, idx: String,
+                         p: Snapshot.Pin): IvfIndex = {
     def relation(name: String): DataFrame = {
       val schema = p.schema(name).dataType.asInstanceOf[StructType]
       p.files.map(_.split('/')).filter(_(1) == name).map(_(0)).distinct
@@ -1178,36 +1186,26 @@ object Ann {
       "probed" -> probedOf(assigned.drop("cell"), routerFromCenters(centersDf),
         IndexNprobe))
 
-  /** The one commit of an index write: stage `relations` as a hidden
-    * segment, place it with one rename, commit `keep` (files of the
-    * pinned `base` that stay live) plus the segment's files as the
-    * next version under the base's declared schema, then vacuum.
-    * Without a base (a build) the next version follows whatever is
-    * current and declares the schema of `relations`. A lost commit
-    * race throws [[Snapshot.CommitConflict]]; callers re-run the whole
-    * write from a fresh pin through [[SnapshotOps.retryConflicts]].
+  /** The plan step of every index write: stage `relations` as a
+    * hidden segment, place it with one rename, and name `keep` (files
+    * of pin `p` that stay live) plus the segment's files as the next
+    * version under the pin's declared schema. The transaction around
+    * it commits, vacuums and re-runs the whole write from a fresh pin
+    * when the commit loses a race.
     */
-  private def commitSegment(spark: SparkSession, idx: String,
-                            relations: Seq[(String, DataFrame)],
-                            base: Option[Snapshot.Pin] = None,
-                            keep: Seq[String] = Nil): Unit = {
+  private def segmentWrite(spark: SparkSession, idx: String, p: Snapshot.Pin,
+                           relations: Seq[(String, DataFrame)],
+                           keep: Seq[String] = Nil): Snapshot.Write = {
     val root = new Path(idx)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val version = base.map(_.version)
-      .orElse(Snapshot.currentVersion(fs, root)).getOrElse(0L)
-    val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val segment = s"s${version + 1}_$token"
+    val segment = s"s${p.version + 1}_${Snapshot.writerToken()}"
     relations.foreach { case (name, df) =>
       val w = df.write.mode("overwrite")
       (if (name == "centers") w else w.partitionBy("cell"))
         .parquet(s"$idx/.$segment/$name")
     }
     val files = Snapshot.place(fs, root, new Path(root, s".$segment"), segment)
-    val schema = base.map(_.schema).getOrElse(StructType(
-      relations.map { case (name, df) => StructField(name, df.schema.toNullable) }))
-    Snapshot.commit(fs, root, keep ++ files, version, schema,
-      baseFiles = Some(keep))
-    Snapshot.vacuum(fs, root)
+    Snapshot.Write(keep ++ files, files)
   }
 
   /** [[ivfTopK]] against the PERSISTED index (built once per session;
@@ -1259,19 +1257,18 @@ object Ann {
     */
   def ivfIndexAppend(spark: SparkSession, idx: String,
                      batch: DataFrame): Unit =
-    SnapshotOps.retryConflicts(3) {
-      val base = ivfIndexRead(spark, idx)
+    Snapshot.transact(spark, idx) { p =>
+      val base = ivfIndexAt(spark, idx, p)
       val router = routerFromCenters(base.centers)
       val (af, ac) = attachRouter(batch, router)
       // the first relation's write fills the cache, the second reads it
       val routed = af.select(col("vec_id"), col("v"),
         routeCellExpr(ac).as("cell"),
         routeProbeExpr(ac, router, IndexNprobe).as("probes")).cache()
-      try commitSegment(spark, idx, Seq(
+      try (Some(segmentWrite(spark, idx, p, Seq(
           "assigned" -> routed.select("vec_id", "v", "cell"),
           "probed" -> routed.select(col("vec_id"), col("v"),
-            explode(col("probes")).as("cell"))),
-        Some(base.pin), base.pin.files)
+            explode(col("probes")).as("cell"))), p.files)), ())
       finally routed.unpersist()
     }
 
@@ -1353,11 +1350,10 @@ object Ann {
     */
   def ivfIndexRebuild(spark: SparkSession, idx: String,
                       cells: Int = 16): Unit =
-    SnapshotOps.retryConflicts(3) {
-      val base = ivfIndexRead(spark, idx)
-      val (assigned, centersDf) =
-        trainAssignOf(base.assigned.select("vec_id", "v"), cells)
-      try commitSegment(spark, idx, fullSegment(assigned, centersDf), Some(base.pin))
+    Snapshot.transact(spark, idx) { p =>
+      val (assigned, centersDf) = trainAssignOf(
+        ivfIndexAt(spark, idx, p).assigned.select("vec_id", "v"), cells)
+      try (Some(segmentWrite(spark, idx, p, fullSegment(assigned, centersDf))), ())
       finally assigned.unpersist()
     }
 

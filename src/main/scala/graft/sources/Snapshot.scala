@@ -39,15 +39,19 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    a pinned reader may straggle, exactly like any table format's
   *    snapshot-expiry policy.
   *
-  * Crash windows, all recoverable ([[recoverMeta]] runs before every
-  * mutation): data files staged but manifest never committed →
+  * Every writer — table mutations, metadata commits, WAP finalizers
+  * and IVF index segments — commits through ONE write transaction,
+  * [[transact]]: it recovers, pins, runs the writer's plan, collects
+  * the maintained stats of the staged files, applies the one tag
+  * policy ([[expireTags]]), commits and vacuums. Crash windows, all
+  * recoverable ([[recoverMeta]] runs at the start of every
+  * transaction): data files staged but manifest never committed →
   * orphans invisible to every reader, deleted by the next [[vacuum]];
   * tmp manifest left behind → deleted; died right after the rename →
   * the commit simply happened. Concurrent writers serialize
   * optimistically: the atomic rename turns a race into a
-  * [[CommitConflict]] for the loser — never a torn table — and
-  * SnapshotOps retries the losing mutation against the winner's
-  * version.
+  * [[CommitConflict]] for the loser — never a torn table — and the
+  * transaction re-runs the losing plan against the winner's version.
   *
   * Snapshot-managed tables carry the partition column IN the data
   * (as a string) in addition to the directory name — [[convert]]
@@ -190,31 +194,37 @@ object Snapshot {
       else Seq.empty
     }
 
-  /** The idempotency tags a version carries (`#`-prefixed manifest
-    * lines — e.g. the ingest batch ids [[SnapshotOps.append]] records
-    * so a replayed micro-batch commits nothing twice). Mutations copy
-    * tags forward, so the replay-protection window is exactly the
-    * vacuum retention — the bound every table format's
-    * transaction-id tracking documents. The schema line is not a tag
-    * ([[schemaOf]]); [[commit]] writes it from its own argument.
+  private def tagsIn(lines: Seq[String]): Seq[String] =
+    lines.filter(l => l.startsWith("#") && !l.startsWith(SchemaTag))
+
+  /** The tags a version carries: its `#`-prefixed root lines — the
+    * ingest batch ids [[SnapshotOps.append]] records (see
+    * [[TagKeepVersions]]), the maintenance columns of
+    * [[SnapshotStats]], the stage ids of [[SnapshotWap]]. The schema
+    * line is not a tag ([[schemaOf]]); [[commit]] writes it from its
+    * own argument.
     */
   def tagsOf(fs: FileSystem, root: Path, v: Long): Seq[String] =
-    manifestLines(fs, root, v)
-      .filter(l => l.startsWith("#") && !l.startsWith(SchemaTag))
+    tagsIn(manifestLines(fs, root, v))
 
   /** A pinned snapshot: resolved ONCE; every read against it scans
     * exactly these files, under this schema, regardless of later
-    * commits.
+    * commits. `tags` are the version's [[tagsOf]].
     */
-  case class Pin(version: Long, files: Seq[String], schema: StructType)
+  case class Pin(version: Long, files: Seq[String], schema: StructType,
+                 tags: Seq[String] = Nil)
 
-  /** Version, files and schema of committed version `v`, from one
-    * read of its root.
+  /** Version, files, schema and tags of committed version `v`, from
+    * one read of its root.
     */
   private[sources] def pinOf(fs: FileSystem, root: Path, v: Long): Pin = {
     val lines = manifestLines(fs, root, v)
-    Pin(v, shardLines(fs, root, lines).map(pathOfLine), schemaIn(lines, root, v))
+    Pin(v, shardLines(fs, root, lines).map(pathOfLine), schemaIn(lines, root, v),
+      tagsIn(lines))
   }
+
+  private def unmanaged(dir: String) = new IllegalStateException(
+    s"$dir is not snapshot-managed (no $MetaDir manifest); run convert")
 
   /** The file system, root and current version of snapshot table
     * `dir`; fails loudly on a directory no commit has reached.
@@ -223,9 +233,7 @@ object Snapshot {
                                dir: String): (FileSystem, Path, Long) = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    (fs, root, currentVersion(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"$dir is not snapshot-managed (no $MetaDir manifest); run convert")))
+    (fs, root, currentVersion(fs, root).getOrElse(throw unmanaged(dir)))
   }
 
   def pin(spark: SparkSession, dir: String): Pin = {
@@ -288,7 +296,8 @@ object Snapshot {
 
   /** Commit `files` (relative paths — the complete live set of the
     * new version) as `base + 1`, declaring `schema`. Returns the
-    * committed version.
+    * committed version. The primitive under [[transact]]; only
+    * [[convert]] and `tools.ManifestBench` call it directly.
     *
     * The file list is written SHARDED: one immutable shard file per
     * partition under `shards/` (writer-unique names — concurrent
@@ -335,7 +344,7 @@ object Snapshot {
       if (baseFiles.isDefined && refsV > 0)
         shardRefsOf(fs, root, refsV).toMap
       else Map.empty
-    val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+    val token = writerToken()
     val refLines = groupByPart(files).map { case (part, fls) =>
       val reusable = baseRefs.get(part)
         .filter(_ => baseByPart.get(part).contains(fls) &&
@@ -377,8 +386,8 @@ object Snapshot {
   /** Thrown when the commit rename loses the race to a concurrent
     * writer (the target version already exists). The table is NOT
     * corrupted — the loser's staged files are unreferenced orphans —
-    * and the mutation can be retried against a fresh pin
-    * (SnapshotOps does, bounded).
+    * and the write can be re-run against a fresh pin ([[transact]]
+    * does, bounded).
     */
   final class CommitConflict(v: Long) extends java.io.IOException(
     s"snapshot commit of v$v lost to a concurrent writer")
@@ -392,6 +401,149 @@ object Snapshot {
     if (fs.exists(meta))
       fs.listStatus(meta).filter(_.getPath.getName.startsWith(".tmp."))
         .foreach(st => fs.delete(st.getPath, false))
+  }
+
+  /** A writer-unique name fragment (12 hex digits). Every staged or
+    * placed name that two racing writers could otherwise share carries
+    * one: shard files, stage dirs, placement dirs, index segments.
+    */
+  private[graft] def writerToken(): String =
+    java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+
+  // ---- the tag policy every commit of [[transact]] applies ----
+
+  /** Idempotency tags are carried forward for this many commits after
+    * the commit that introduced them, then dropped — so the root's tag
+    * section is bounded at O([[TagKeepVersions]] × tags/commit) under
+    * continuous micro-batch ingest instead of growing by one line per
+    * batch forever. This window, not the vacuum retention, is the
+    * replay-protection bound: a batch re-delivered within
+    * [[TagKeepVersions]] commits of its original landing is a no-op; a
+    * replay older than that re-appends. Streaming checkpoints make
+    * replays arrive within a few commits in practice, so a window of
+    * 16 is generous. Every transaction expires the tags it commits —
+    * restores, WAP finalizers and metadata commits included — so no
+    * writer carries a key past its window.
+    */
+  private[sources] val TagKeepVersions = 16L
+
+  /** `#appended@VVVVVVVV=key` — the tag line format carrying the
+    * version that introduced the key, so expiry needs no side state.
+    */
+  private[sources] def mkTag(version: Long, key: String): String =
+    f"#appended@$version%08d=$key"
+
+  private val TagRe = "^#appended@(\\d+)=(.*)$".r
+
+  private[sources] def tagKeyOf(line: String): Option[String] = line match {
+    case TagRe(_, k) => Some(k)
+    case _ => None
+  }
+
+  /** Drop tags introduced more than [[TagKeepVersions]] commits before
+    * `newVersion`; other tag kinds pass unchanged.
+    */
+  private[sources] def expireTags(tags: Seq[String],
+                                  newVersion: Long): Seq[String] =
+    tags.filter {
+      case TagRe(v, _) => v.toLong > newVersion - TagKeepVersions
+      case _ => true
+    }
+
+  // ---- the write transaction ----
+
+  /** Test seam: fired in every write transaction after the pin and
+    * before the plan runs — the window in which a concurrent winner
+    * can stage AND commit the same next version. SnapshotSpec runs a
+    * full competing write here.
+    */
+  @volatile private[sources] var beforeStage: () => Unit = () => ()
+
+  /** Test seam: fired in every write transaction immediately before
+    * its commit. SnapshotSpec injects a conflicting winner here to
+    * force the conflict re-run deterministically.
+    */
+  @volatile private[sources] var beforeCommit: () => Unit = () => ()
+
+  /** Attempts a transaction makes before a lost commit race reaches
+    * its caller as [[CommitConflict]].
+    */
+  private val CommitAttempts = 3
+
+  /** What a transaction's plan commits on top of its pin.
+    *
+    *  - `files`: the complete live file set of the new version;
+    *  - `staged`: the files the plan placed — the maintained stats
+    *    (`#statscols`/`#bloomcols` of the new version) are collected
+    *    for these, and for no other file;
+    *  - `schema`: a newly declared schema (evolve, a bootstrap);
+    *    otherwise the base's carries forward;
+    *  - `addTags`/`dropTags`: edits to the base's tags;
+    *  - `from`: an earlier retained version this write re-commits
+    *    (restore, WAP reject). Its tags, schema and shard pointers are
+    *    the base instead of the pin's;
+    *  - `bloomInlineMax`: the inline budget of the blooms collected.
+    */
+  final case class Write(files: Seq[String], staged: Seq[String] = Nil,
+                         schema: Option[StructType] = None,
+                         addTags: Seq[String] = Nil,
+                         dropTags: String => Boolean = _ => false,
+                         from: Option[Pin] = None,
+                         bloomInlineMax: Int = SnapshotStats.BloomInlineMaxBytes)
+
+  /** The one write transaction of the snapshot layer: every commit
+    * but [[convert]]'s one-time migration goes through here. In order:
+    * drop dead writers' tmp manifests ([[recoverMeta]]), pin the
+    * current version, fire [[beforeStage]], run `plan` against the
+    * pin, collect the maintained stats of the files it staged, fire
+    * [[beforeCommit]], [[commit]] as the pin's version + 1 with the
+    * base's tags edited and expired ([[expireTags]]), [[vacuum]]. A
+    * plan that returns no write commits nothing. A [[CommitConflict]]
+    * re-runs the whole sequence from a fresh pin, up to
+    * [[CommitAttempts]] times: the loser's staged files are
+    * unreferenced orphans the next vacuum reaps, and the plan
+    * re-validates against the winner's version.
+    *
+    * A directory no commit has reached pins as an empty v0 when
+    * `bootstrap` is set (an append or an index build creates the
+    * table; its write declares the schema), and fails loudly
+    * otherwise. Returns the plan's result; a plan reports the
+    * committed version as its pin's version + 1.
+    */
+  def transact[T](spark: SparkSession, dir: String, bootstrap: Boolean = false)
+                 (plan: Pin => (Option[Write], T)): T = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    def attempt(): T = {
+      recoverMeta(fs, root)
+      val p = currentVersion(fs, root).map(pinOf(fs, root, _)).getOrElse {
+        if (!bootstrap) throw unmanaged(dir)
+        Pin(0L, Nil, new StructType())
+      }
+      beforeStage()
+      val (write, result) = plan(p)
+      write.foreach { w =>
+        val base = w.from.getOrElse(p)
+        val schema = w.schema.getOrElse(base.schema)
+        val tags = expireTags(base.tags.filterNot(w.dropTags) ++ w.addTags,
+          p.version + 1)
+        val stats = SnapshotStats.collectStats(spark, dir, w.staged, schema,
+          SnapshotStats.statsColsOf(tags), SnapshotStats.bloomColsOf(tags),
+          w.bloomInlineMax)
+        beforeCommit()
+        commit(fs, root, w.files, p.version, schema, tags,
+          baseFiles = Some(base.files), stats = stats,
+          refsFrom = w.from.map(_.version))
+        vacuum(fs, root)
+      }
+      result
+    }
+    var left = CommitAttempts
+    while (true) {
+      try return attempt()
+      catch { case _: CommitConflict if left > 1 => left -= 1 }
+    }
+    sys.error("unreachable")
   }
 
   /** A hidden stage dir younger than this is presumed to belong to a
@@ -514,7 +666,7 @@ object Snapshot {
     // SnapshotOps.stageAndPlace: a racing convert must never rename
     // over dirs another writer placed (the loser's commit conflicts
     // and its uniquely-named orphans are vacuum's to reap)
-    val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+    val token = writerToken()
     val stage = s".snap_convert_stage_$token"
     val sch = spark.read.parquet(new Path(root, parts.head).toString).schema
     val rows = parts.map { part =>

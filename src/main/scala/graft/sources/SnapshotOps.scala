@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -25,12 +25,15 @@ import graft.Tables
   *    thousand sequential driver-looped jobs. Placement is then one
   *    metadata RENAME per partition (stage subdir → per-version
   *    subdir); live files are never renamed, moved or overwritten;
-  *  - commit the complete next file set as ONE manifest rename: a
-  *    reader that pinned before the commit keeps its intact old
-  *    version, a reader pinning after sees the complete new one —
-  *    the all-old-or-all-new guarantee per-partition directory
-  *    renames cannot give across partitions (SnapshotSpec proves both
-  *    sides, plus the crash windows).
+  *  - hand the complete next file set to [[Snapshot.transact]], the
+  *    one write transaction: it commits ONE manifest rename (a reader
+  *    that pinned before the commit keeps its intact old version, a
+  *    reader pinning after sees the complete new one — the
+  *    all-old-or-all-new guarantee per-partition directory renames
+  *    cannot give across partitions; SnapshotSpec proves both sides,
+  *    plus the crash windows), collects the staged files' maintained
+  *    stats, carries and expires the tags, re-runs a plan that lost
+  *    the commit race, and vacuums.
   *
   * Crash windows stay closed with the staged write: a death mid-stage
   * leaves `.snap_stage_v*` orphans no manifest references (reaped by
@@ -42,68 +45,21 @@ import graft.Tables
   * two writers optimistically racing the same next version can never
   * rename over — or delete — each other's placed or committed files.
   *
-  * Every mutation ends with [[Snapshot.vacuum]] at the default
-  * retention, so storage is bounded at ~[[Snapshot.KeepVersions]]×
-  * the churn while still letting a straggling reader finish against
-  * the previous version.
+  * Every transaction ends with a vacuum at the default retention, so
+  * storage is bounded at ~[[Snapshot.KeepVersions]]× the churn while
+  * still letting a straggling reader finish against the previous
+  * version.
   */
 object SnapshotOps {
 
   case class MutationStats(version: Long, partitions: Seq[String],
                            retiredFiles: Long, newFiles: Long)
 
-  /** Test seam: invoked immediately before each commit attempt.
-    * SnapshotSpec injects a conflicting winner here to force the
-    * optimistic-retry path deterministically.
-    */
-  @volatile private[sources] var beforeCommit: () => Unit = () => ()
-
-  /** Test seam: invoked after a mutation pinned its base version but
-    * before it stages any data — the window in which a concurrent
-    * winner can stage AND commit the same next version. SnapshotSpec
-    * runs a full competing mutation here to prove two writers both
-    * staging data files cannot clobber each other's placements.
-    */
-  @volatile private[sources] var beforeStage: () => Unit = () => ()
-
   private val StageTag = "__snap_part"
 
-  /** Idempotency tags are carried forward for this many commits after
-    * the commit that introduced them, then dropped — so the manifest's
-    * tag section is bounded at O([[TagKeepVersions]] × tags/commit)
-    * under continuous micro-batch ingest instead of growing by one
-    * line per batch forever. This window (not the vacuum retention) is
-    * the replay-protection bound: a batch re-delivered within
-    * [[TagKeepVersions]] commits of its original landing is a no-op; a
-    * replay older than that re-appends. Streaming checkpoints make
-    * replays arrive within a few commits in practice, so a window of
-    * 16 is generous; it survives any intervening non-append mutations
-    * inside the window (tags are copied forward by every mutation).
-    */
-  private[sources] val TagKeepVersions = 16L
-
-  /** `#appended@VVVVVVVV=key` — the tag line format carrying the
-    * version that introduced the key, so expiry needs no side state.
-    */
-  private def mkTag(version: Long, key: String): String =
-    f"#appended@$version%08d=$key"
-
-  private val TagRe = "^#appended@(\\d+)=(.*)$".r
-
-  private[sources] def tagKeyOf(line: String): Option[String] = line match {
-    case TagRe(_, k) => Some(k)
-    case _ => None
-  }
-
-  /** Drop tags introduced more than [[TagKeepVersions]] commits before
-    * `newVersion`.
-    */
-  private[sources] def expireTags(tags: Seq[String],
-                                  newVersion: Long): Seq[String] =
-    tags.filter {
-      case TagRe(v, _) => v.toLong > newVersion - TagKeepVersions
-      case _ => true // unknown tag kinds carried as-is
-    }
+  /** A plan's answer when it has nothing to commit. */
+  private def unchanged(p: Snapshot.Pin): (Option[Snapshot.Write], MutationStats) =
+    (None, MutationStats(p.version, Nil, 0L, 0L))
 
   private def escapePart(v: String): String =
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -158,121 +114,86 @@ object SnapshotOps {
     mutate(spark, dir, keys.distinct(), keyCol,
       incomingParts = Nil, incoming = None)
 
-  /** Optimistic concurrency: a mutation that loses the commit race
-    * ([[Snapshot.CommitConflict]] — another writer landed the next
-    * version first) is retried from a FRESH pin, up to `attempts`
-    * times. The loser's staged files are unreferenced orphans (the
-    * next vacuum reaps them), planning is idempotent, and the retry
-    * re-reads the winner's version — so interleaved writers
-    * serialize instead of corrupting or aborting, the same protocol
-    * every optimistic table format runs. SnapshotSpec injects a
-    * conflicting commit between pin and commit to prove both
-    * mutations' effects land.
-    */
-  private[graft] def retryConflicts[T](attempts: Int)(body: => T): T = {
-    var left = attempts
-    while (true) {
-      try return body
-      catch {
-        case e: Snapshot.CommitConflict =>
-          left -= 1
-          if (left <= 0) throw e
-      }
-    }
-    sys.error("unreachable")
-  }
-
   /** The shared COW core: retire the files holding `keys`, replace
     * each affected partition's retired rows with (retired minus keys)
-    * ∪ incoming — all partitions staged in ONE write job — commit one
-    * manifest (conflict-retried, see [[retryConflicts]]).
+    * ∪ incoming — all partitions staged in ONE write job — and commit
+    * the result in one transaction.
     */
   private def mutate(spark: SparkSession, dir: String, keys: DataFrame,
                      keyCol: String, incomingParts: Seq[String],
-                     incoming: Option[DataFrame], partCol: String = ""): MutationStats =
-    retryConflicts(3) {
-      attemptMutate(spark, dir, keys, keyCol, incomingParts, incoming,
-        partCol)
-    }
-
-  private def attemptMutate(spark: SparkSession, dir: String, keys: DataFrame,
-                     keyCol: String, incomingParts: Seq[String],
                      incoming: Option[DataFrame],
-                     partCol: String): MutationStats = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    Snapshot.recoverMeta(fs, root)
-    val p = Snapshot.pin(spark, dir)
-    beforeStage()
-    val bkeys = broadcast(keys)
+                     partCol: String = ""): MutationStats =
+    Snapshot.transact(spark, dir) { p =>
+      val bkeys = broadcast(keys)
 
-    // the files holding affected keys — ONE key-pruned plan scan of
-    // the pinned set; metadata-sized result
-    val rootUri = fs.makeQualified(root).toUri.getPath
-    def relOf(f: String): String = new Path(f).toUri.getPath
-      .stripPrefix(rootUri).stripPrefix("/")
-    val hitRels = Snapshot.readPin(spark, dir, p)
-      .withColumn("f", input_file_name())
-      .join(bkeys, Seq(keyCol), "left_semi")
-      .select("f").distinct()
-      .collect().map(r => relOf(r.getString(0))).toSet
-    def partOf(rel: String): String = rel.substring(0, rel.indexOf('/'))
-    val affected = (hitRels.map(partOf) ++
-      incomingParts.map(v => partDirOf(p, v))).toSeq.distinct.sorted
-    if (affected.isEmpty)
-      return MutationStats(p.version, Nil, 0L, 0L)
-
-    // ONE kept-rows subplan for ALL affected partitions (per-partition
-    // scan branches carry only a literal destination tag — no join),
-    // anti-joined against the broadcast keys ONCE, then unioned with
-    // the ONE destination-tagged incoming frame. The previous shape
-    // ran the anti-join per partition: O(affected partitions) join
-    // operators in a single plan, which at a thousand-partition
-    // correction feed is a planning-time problem (guide §7.3) and
-    // locally re-optimized/codegen'd N identical joins.
-    val keepBranches = affected.flatMap { part =>
-      val partHits = p.files.filter(f => f.startsWith(s"$part/") && hitRels(f))
-      if (partHits.isEmpty) None
-      else Some(Snapshot.scan(spark, dir, p.schema, partHits)
-        .withColumn(StageTag, lit(part)))
+      // the files holding affected keys — ONE key-pruned plan scan of
+      // the pinned set; metadata-sized result
+      val root = new Path(dir)
+      val rootUri = root.getFileSystem(spark.sessionState.newHadoopConf())
+        .makeQualified(root).toUri.getPath
+      def relOf(f: String): String = new Path(f).toUri.getPath
+        .stripPrefix(rootUri).stripPrefix("/")
+      val hitRels = Snapshot.readPin(spark, dir, p)
+        .withColumn("f", input_file_name())
+        .join(bkeys, Seq(keyCol), "left_semi")
+        .select("f").distinct()
+        .collect().map(r => relOf(r.getString(0))).toSet
+      def partOf(rel: String): String = rel.substring(0, rel.indexOf('/'))
+      val affected = (hitRels.map(partOf) ++
+        incomingParts.map(v => partDirOf(p, v))).toSeq.distinct.sorted
+      if (affected.isEmpty) unchanged(p)
+      else {
+        // ONE kept-rows subplan for ALL affected partitions (per-partition
+        // scan branches carry only a literal destination tag — no join),
+        // anti-joined against the broadcast keys ONCE, then unioned with
+        // the ONE destination-tagged incoming frame. The previous shape
+        // ran the anti-join per partition: O(affected partitions) join
+        // operators in a single plan, which at a thousand-partition
+        // correction feed is a planning-time problem (guide §7.3) and
+        // locally re-optimized/codegen'd N identical joins.
+        val keepBranches = affected.flatMap { part =>
+          val partHits = p.files.filter(f => f.startsWith(s"$part/") && hitRels(f))
+          if (partHits.isEmpty) None
+          else Some(Snapshot.scan(spark, dir, p.schema, partHits)
+            .withColumn(StageTag, lit(part)))
+        }
+        val keep =
+          if (keepBranches.isEmpty) None
+          else Some(keepBranches.reduce(_ unionByName _)
+            .join(bkeys, Seq(keyCol), "left_anti"))
+        // incoming rows route to their destination dir via a broadcast
+        // (value → dir) map — O(1) plan size however many partitions the
+        // batch lands in (a when-chain would grow the expression tree
+        // linearly). Rows with NULL/unknown part values drop, exactly as
+        // the previous per-partition equality filters dropped them.
+        val incomingTagged = incoming.map { raw =>
+          import spark.implicits._
+          val b = alignTo(spark, raw, p.schema)
+          val dirByValue = incomingParts.filter(_ != null)
+            .map(v => v -> partDirOf(p, v)).distinct
+          val routes = dirByValue.toDF("__pv", StageTag)
+          b.join(broadcast(routes), b(partCol).cast("string") === col("__pv"))
+            .drop("__pv")
+        }
+        val out = (keep, incomingTagged) match {
+          case (Some(k), Some(in)) => Some(k.unionByName(in))
+          case (Some(k), None) => Some(k)
+          case (None, Some(in)) => Some(in)
+          case (None, None) => None
+        }
+        // cluster the staged write by destination dir (AQE rebalance:
+        // coalesces small partitions, splits skewed ones at advisory
+        // size). Without it every input task holding rows of k
+        // destinations writes k files — the cached batch alone staged
+        // O(tasks × partitions) small files per commit, and every later
+        // plan scan and rollup read paid the file-count tax.
+        val newFiles = stageAndPlace(spark, dir, affected, out,
+          p.version + 1, layout = df => df.hint("rebalance", StageTag))
+        (Some(Snapshot.Write(p.files.filterNot(hitRels) ++ newFiles, newFiles)),
+          MutationStats(p.version + 1, affected, hitRels.size.toLong,
+            newFiles.size.toLong))
+      }
     }
-    val keep =
-      if (keepBranches.isEmpty) None
-      else Some(keepBranches.reduce(_ unionByName _)
-        .join(bkeys, Seq(keyCol), "left_anti"))
-    // incoming rows route to their destination dir via a broadcast
-    // (value → dir) map — O(1) plan size however many partitions the
-    // batch lands in (a when-chain would grow the expression tree
-    // linearly). Rows with NULL/unknown part values drop, exactly as
-    // the previous per-partition equality filters dropped them.
-    val incomingTagged = incoming.map { raw =>
-      import spark.implicits._
-      val b = alignTo(spark, raw, p.schema)
-      val dirByValue = incomingParts.filter(_ != null)
-        .map(v => v -> partDirOf(p, v)).distinct
-      val routes = dirByValue.toDF("__pv", StageTag)
-      b.join(broadcast(routes), b(partCol).cast("string") === col("__pv"))
-        .drop("__pv")
-    }
-    val out = (keep, incomingTagged) match {
-      case (Some(k), Some(in)) => Some(k.unionByName(in))
-      case (Some(k), None) => Some(k)
-      case (None, Some(in)) => Some(in)
-      case (None, None) => None
-    }
-    val newVersion = p.version + 1
-    // cluster the staged write by destination dir (AQE rebalance:
-    // coalesces small partitions, splits skewed ones at advisory
-    // size). Without it every input task holding rows of k
-    // destinations writes k files — the cached batch alone staged
-    // O(tasks × partitions) small files per commit, and every later
-    // plan scan and rollup read paid the file-count tax.
-    val newFiles = stageAndPlace(spark, fs, root, dir, affected, out,
-      newVersion, layout = df => df.hint("rebalance", StageTag))
-    val manifest = p.files.filterNot(hitRels) ++ newFiles
-    val v = commitRewrite(spark, fs, root, dir, p, manifest, newFiles)
-    MutationStats(v, affected, hitRels.size.toLong, newFiles.size.toLong)
-  }
 
   /** `batch` with exactly the columns of `schema`, by name and in its
     * order: a declared column the batch lacks comes back NULL, and a
@@ -289,27 +210,6 @@ object SnapshotOps {
       (if (batch.columns.exists(same(_, f.name))) col(f.name) else lit(null))
         .cast(f.dataType).as(f.name)
     }: _*)
-  }
-
-  /** The commit every rewrite shares: collect the maintained stats of
-    * the new files, commit `manifest` on top of pin `p` under its
-    * schema with the base tags carried forward, then vacuum. Returns
-    * the committed version.
-    */
-  private def commitRewrite(spark: SparkSession, fs: FileSystem, root: Path,
-                            dir: String, p: Snapshot.Pin,
-                            manifest: Seq[String],
-                            newFiles: Seq[String]): Long = {
-    val baseTags = Snapshot.tagsOf(fs, root, p.version)
-    val newStats = SnapshotStats.collectStats(spark, dir, newFiles, p.schema,
-      SnapshotStats.statsColsOf(baseTags),
-      SnapshotStats.bloomColsOf(baseTags))
-    beforeCommit()
-    val v = Snapshot.commit(fs, root, manifest, p.version, p.schema,
-      expireTags(baseTags, p.version + 1),
-      baseFiles = Some(p.files), stats = newStats)
-    Snapshot.vacuum(fs, root)
-    v
   }
 
   /** The staged-write placement shared by every mutation: union the
@@ -330,8 +230,7 @@ object SnapshotOps {
     * are unreferenced orphans that [[Snapshot.vacuum]] reaps, so no
     * pre-placement delete is needed (or allowed) here.
     */
-  private def stageAndPlace(spark: SparkSession, fs: FileSystem,
-                            root: Path, dir: String,
+  private def stageAndPlace(spark: SparkSession, dir: String,
                             parts: Seq[String],
                             taggedUnion: Option[DataFrame],
                             newVersion: Long,
@@ -340,7 +239,9 @@ object SnapshotOps {
     val newFiles = scala.collection.mutable.ArrayBuffer.empty[String]
     val union = taggedUnion.getOrElse(return newFiles.toSeq)
     if (parts.isEmpty) return newFiles.toSeq
-    val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val token = Snapshot.writerToken()
     val stage = f".snap_stage_v$newVersion%08d_$token"
     val staged = layout(union)
     staged.write.mode("overwrite").partitionBy(StageTag)
@@ -377,26 +278,20 @@ object SnapshotOps {
     */
   def compact(spark: SparkSession, dir: String,
               maxFiles: Int = 4): MutationStats =
-    retryConflicts(3) { attemptCompact(spark, dir, maxFiles) }
-
-  private def attemptCompact(spark: SparkSession, dir: String,
-                             maxFiles: Int): MutationStats = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    Snapshot.recoverMeta(fs, root)
-    val p = Snapshot.pin(spark, dir)
-    beforeStage()
-    val byPart = p.files.groupBy(f => f.substring(0, f.indexOf('/')))
-    val affected = byPart.filter(_._2.size > maxFiles).keys.toSeq.sorted
-    if (affected.isEmpty) return MutationStats(p.version, Nil, 0L, 0L)
-    val newFiles = stageAndPlace(spark, fs, root, dir, affected,
-      Some(taggedParts(spark, dir, p, byPart, affected)), p.version + 1,
-      layout = df => df.repartition(affected.size, col(StageTag)))
-    val retired = affected.flatMap(byPart).toSet
-    val v = commitRewrite(spark, fs, root, dir, p,
-      p.files.filterNot(retired) ++ newFiles, newFiles)
-    MutationStats(v, affected, retired.size.toLong, newFiles.size.toLong)
-  }
+    Snapshot.transact(spark, dir) { p =>
+      val byPart = p.files.groupBy(f => f.substring(0, f.indexOf('/')))
+      val affected = byPart.filter(_._2.size > maxFiles).keys.toSeq.sorted
+      if (affected.isEmpty) unchanged(p)
+      else {
+        val newFiles = stageAndPlace(spark, dir, affected,
+          Some(taggedParts(spark, dir, p, byPart, affected)), p.version + 1,
+          layout = df => df.repartition(affected.size, col(StageTag)))
+        val retired = affected.flatMap(byPart).toSet
+        (Some(Snapshot.Write(p.files.filterNot(retired) ++ newFiles, newFiles)),
+          MutationStats(p.version + 1, affected, retired.size.toLong,
+            newFiles.size.toLong))
+      }
+    }
 
   /** The rows of `parts` under pin `p`'s schema, each tagged with its
     * partition dir — the input of a whole-partition rewrite.
@@ -443,8 +338,8 @@ object SnapshotOps {
     * range predicate on either or both columns prunes to the
     * intersecting tiles — the layout step that makes file skipping
     * SELECTIVE instead of lucky, which is the difference between
-    * opening 4 files and 4,000 at 100 TB. Commit is the same single
-    * conflict-retried manifest rename as every mutation.
+    * opening 4 files and 4,000 at 100 TB. It commits through the same
+    * transaction as every mutation.
     *
     * `filesPerPartition` sizes the z-granularity (range partitions =
     * partitions × filesPerPartition); production sizes it so files
@@ -455,33 +350,24 @@ object SnapshotOps {
     */
   def cluster(spark: SparkSession, dir: String, zCols: (String, String),
               filesPerPartition: Int = 4, bits: Int = 21): MutationStats =
-    retryConflicts(3) {
-      attemptCluster(spark, dir, zCols, filesPerPartition, bits)
+    Snapshot.transact(spark, dir) { p =>
+      val byPart = p.files.groupBy(f => f.substring(0, f.indexOf('/')))
+      val affected = byPart.keys.toSeq.sorted
+      if (affected.isEmpty) unchanged(p)
+      else {
+        val z = interleave(col(zCols._1), col(zCols._2), bits)
+        val nRanges = math.max(1, affected.size * filesPerPartition)
+        val newFiles = stageAndPlace(spark, dir, affected,
+          Some(taggedParts(spark, dir, p, byPart, affected)), p.version + 1,
+          layout = df => df.withColumn("__z", z)
+            .repartitionByRange(nRanges, col(StageTag), col("__z"))
+            .sortWithinPartitions(col(StageTag), col("__z"))
+            .drop("__z"))
+        (Some(Snapshot.Write(newFiles, newFiles)),
+          MutationStats(p.version + 1, affected, p.files.size.toLong,
+            newFiles.size.toLong))
+      }
     }
-
-  private def attemptCluster(spark: SparkSession, dir: String,
-                             zCols: (String, String),
-                             filesPerPartition: Int,
-                             bits: Int): MutationStats = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    Snapshot.recoverMeta(fs, root)
-    val p = Snapshot.pin(spark, dir)
-    beforeStage()
-    val byPart = p.files.groupBy(f => f.substring(0, f.indexOf('/')))
-    val affected = byPart.keys.toSeq.sorted
-    if (affected.isEmpty) return MutationStats(p.version, Nil, 0L, 0L)
-    val z = interleave(col(zCols._1), col(zCols._2), bits)
-    val nRanges = math.max(1, affected.size * filesPerPartition)
-    val newFiles = stageAndPlace(spark, fs, root, dir, affected,
-      Some(taggedParts(spark, dir, p, byPart, affected)), p.version + 1,
-      layout = df => df.withColumn("__z", z)
-        .repartitionByRange(nRanges, col(StageTag), col("__z"))
-        .sortWithinPartitions(col(StageTag), col("__z"))
-        .drop("__z"))
-    val v = commitRewrite(spark, fs, root, dir, p, newFiles, newFiles)
-    MutationStats(v, affected, p.files.size.toLong, newFiles.size.toLong)
-  }
 
   /** RESTORE — roll the table back to a retained earlier version as
     * a NEW commit (Delta `RESTORE` / Iceberg rollback): the new
@@ -493,29 +379,18 @@ object SnapshotOps {
     * — [[Snapshot.pinAt]] fails loudly past retention, never serving
     * a partially-reaped file set. A restore to the CURRENT file set
     * is a no-op (no empty commit), which also makes warm gate
-    * invocations stable. Tags are taken from the target version
-    * (stats/bloom maintenance columns travel with the state being
-    * restored); conflict-checked like every commit.
+    * invocations stable. The write re-commits the target version
+    * (`from`): its schema, its shard pointers (stats travel with them)
+    * and its tags — stats/bloom maintenance columns travel with the
+    * state being restored, and idempotency keys past their
+    * [[Snapshot.TagKeepVersions]] window expire like on every commit.
     */
   def restore(spark: SparkSession, dir: String, version: Long): Long =
-    retryConflicts(3) {
-      val root = new Path(dir)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      Snapshot.recoverMeta(fs, root)
+    Snapshot.transact(spark, dir) { p =>
       val target = Snapshot.pinAt(spark, dir, version)
-      val p = Snapshot.pin(spark, dir)
-      if (p.files == target.files) MutationStats(p.version, Nil, 0L, 0L)
-      else {
-        // shard pointers carry from the TARGET version (its file
-        // lists are what we re-commit — stats travel with them)
-        val v = Snapshot.commit(fs, root, target.files, p.version,
-          target.schema, Snapshot.tagsOf(fs, root, target.version),
-          baseFiles = Some(target.files),
-          refsFrom = Some(target.version))
-        Snapshot.vacuum(fs, root)
-        MutationStats(v, Nil, 0L, 0L)
-      }
-    }.version
+      if (p.files == target.files) (None, p.version)
+      else (Some(Snapshot.Write(target.files, from = Some(target))), p.version + 1)
+    }
 
   /** Gate fixture + query: build (v1) → a compliance-style delete
     * wave lands (v2, drops `user_id % 7 = 3`) → operator realizes the
@@ -559,73 +434,65 @@ object SnapshotOps {
     *
     * `idempotencyKey` makes replays safe without a transaction log:
     * the key is recorded as a version-stamped `#appended@V=` tag line
-    * in the manifest, tags are copied forward by every mutation, and
+    * in the manifest, tags are copied forward by every commit, and
     * an append whose key is already visible on the CURRENT version is
     * a no-op — so a restarted stream re-delivering a micro-batch
     * commits nothing twice. The protection window is
-    * [[TagKeepVersions]] commits after the key first landed (expiry
-    * happens at commit time, so the manifest's tag section stays
-    * bounded under continuous ingest) — the same bounded-window
+    * [[Snapshot.TagKeepVersions]] commits after the key first landed
+    * (expiry happens at commit time, so the manifest's tag section
+    * stays bounded under continuous ingest) — the same bounded-window
     * semantics table formats document for per-writer transaction ids.
     */
   def append(spark: SparkSession, dir: String, batch: DataFrame,
              partCol: String,
              idempotencyKey: Option[String] = None,
              extraTags: Seq[String] = Nil): MutationStats =
-    retryConflicts(3) {
-      attemptAppend(spark, dir, batch, partCol, idempotencyKey, extraTags)
-    }
+    Snapshot.transact(spark, dir, bootstrap = true)(
+      appendPlan(spark, dir, batch, partCol, idempotencyKey, extraTags))
 
-  private def attemptAppend(spark: SparkSession, dir: String,
-                            batch: DataFrame, partCol: String,
-                            idempotencyKey: Option[String],
-                            extraTags: Seq[String]): MutationStats = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    Snapshot.recoverMeta(fs, root)
+  /** [[append]]'s plan against pin `p`; [[SnapshotWap.stage]] runs it
+    * after checking the pin for a pending stage.
+    */
+  private[sources] def appendPlan(spark: SparkSession, dir: String,
+                                  batch: DataFrame, partCol: String,
+                                  idempotencyKey: Option[String],
+                                  extraTags: Seq[String])
+                                 (p: Snapshot.Pin)
+      : (Option[Snapshot.Write], MutationStats) = {
     val b = batch.withColumn(partCol, col(partCol).cast("string"))
-    // a bootstrap declares its batch's schema as a footer read returns
-    // it: Spark writes every field nullable
-    val p = Snapshot.currentVersion(fs, root).map(Snapshot.pinOf(fs, root, _))
-      .getOrElse(Snapshot.Pin(0L, Nil, b.schema.toNullable))
-    val tags = if (p.version == 0L) Nil else Snapshot.tagsOf(fs, root, p.version)
-    val liveKeys = tags.flatMap(tagKeyOf).toSet
-    if (idempotencyKey.exists(liveKeys))
-      return MutationStats(p.version, Nil, 0L, 0L)
-    beforeStage()
-    val parts = b.select(partCol).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    if (parts.isEmpty) return MutationStats(p.version, Nil, 0L, 0L)
-    // destination routing via a broadcast (value → dir) map joined
-    // once — one staged subplan regardless of how many partitions the
-    // batch lands in (the per-partition filter branches this replaces
-    // made the plan O(partitions))
-    val dirByValue = parts.filter(_ != null).map { v =>
-      v -> (if (p.files.isEmpty) s"$partCol=${escapePart(v)}"
-            else partDirOf(p, v))
+    val parts =
+      if (idempotencyKey.exists(p.tags.flatMap(Snapshot.tagKeyOf).toSet)) Nil
+      else b.select(partCol).distinct()
+        .collect().map(_.getString(0)).toSeq.sorted
+    if (parts.isEmpty) unchanged(p)
+    else {
+      // destination routing via a broadcast (value → dir) map joined
+      // once — one staged subplan regardless of how many partitions the
+      // batch lands in (the per-partition filter branches this replaces
+      // made the plan O(partitions))
+      val dirByValue = parts.filter(_ != null).map { v =>
+        v -> (if (p.files.isEmpty) s"$partCol=${escapePart(v)}"
+              else partDirOf(p, v))
+      }
+      val destParts = dirByValue.map(_._2).distinct.sorted
+      import spark.implicits._
+      val routes = dirByValue.toDF("__pv", StageTag)
+      val taggedUnion = b.join(broadcast(routes),
+        b(partCol) === col("__pv")).drop("__pv")
+      // same destination-clustered staging as the mutation core: one
+      // file-set per partition at advisory size, not one per (input
+      // task × partition)
+      val newFiles = stageAndPlace(spark, dir, destParts,
+        Some(taggedUnion), p.version + 1,
+        layout = df => df.hint("rebalance", StageTag))
+      // a bootstrap declares its batch's schema as a footer read
+      // returns it: Spark writes every field nullable
+      (Some(Snapshot.Write(p.files ++ newFiles, newFiles,
+        schema = if (p.version == 0L) Some(b.schema.toNullable) else None,
+        addTags = idempotencyKey.map(Snapshot.mkTag(p.version + 1, _)).toSeq ++
+          extraTags)),
+        MutationStats(p.version + 1, destParts, 0L, newFiles.size.toLong))
     }
-    val destParts = dirByValue.map(_._2).distinct.sorted
-    import spark.implicits._
-    val routes = dirByValue.toDF("__pv", StageTag)
-    val taggedUnion = b.join(broadcast(routes),
-      b(partCol) === col("__pv")).drop("__pv")
-    val newVersion = p.version + 1
-    // same destination-clustered staging as the mutation core: one
-    // file-set per partition at advisory size, not one per (input
-    // task × partition)
-    val newFiles = stageAndPlace(spark, fs, root, dir, destParts,
-      Some(taggedUnion), newVersion,
-      layout = df => df.hint("rebalance", StageTag))
-    val newStats = SnapshotStats.collectStats(spark, dir, newFiles, p.schema,
-      SnapshotStats.statsColsOf(tags),
-      SnapshotStats.bloomColsOf(tags))
-    beforeCommit()
-    val newTag = idempotencyKey.map(k => mkTag(newVersion, k))
-    val v = Snapshot.commit(fs, root, p.files ++ newFiles, p.version, p.schema,
-      expireTags(tags, newVersion) ++ newTag ++ extraTags,
-      baseFiles = Some(p.files), stats = newStats)
-    Snapshot.vacuum(fs, root)
-    MutationStats(v, destParts, 0L, newFiles.size.toLong)
   }
 
   /** A scratch table dir for `purpose`, emptied: the gates that rebuild
@@ -799,8 +666,6 @@ object SnapshotOps {
     * independent build so its gate (and standing bench row) still
     * prices the mutation itself.
     */
-  private val compactEpoch = new java.util.concurrent.atomic.AtomicInteger(0)
-
   private def versionedFixture(spark: SparkSession, dir: String): String =
     graft.Memo.dir(spark, "snapvers", dir) { tmp =>
       buildAndUpsert(spark, dir, tmp)
@@ -870,6 +735,11 @@ object SnapshotOps {
       .groupBy(col("op"), col("date"))
       .agg(count(lit(1)).as("n"), sum("event_id").as("sum_id"))
       .orderBy("op", "date")
+
+  /** Numbers the `refrag-N` idempotency keys of the warm
+    * [[snapshotCompactRollup]] cycles, so each re-append lands.
+    */
+  private val compactEpoch = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Compaction gate query: fragment a snapshot table (first
     * invocation: a fresh table under three interleaved append

@@ -12,10 +12,12 @@ import graft.Tables
   * center as Delta's metadata action / Iceberg's schema in table
   * metadata, reduced to this layer's primitives:
   *
-  *  - **Add-column = one metadata-only commit.** [[evolve]] re-commits
-  *    the CURRENT file set with the widened schema — every shard
-  *    pointer is reused (the base file set is unchanged), no data file
-  *    is touched, commit IO is O(partitions). Only ADDS are accepted:
+  *  - **Add-column = one metadata-only commit.** [[evolve]] is a
+  *    write transaction ([[Snapshot.transact]]) that re-commits the
+  *    CURRENT file set with the widened schema — every shard pointer
+  *    is reused (the base file set is unchanged), no data file is
+  *    touched, commit IO is O(partitions), and a lost commit race
+  *    re-validates against the winner. Only ADDS are accepted:
   *    renames/retypes need a rewrite and are refused loudly.
   *  - **Every later commit carries the schema forward.** Appends,
   *    upserts, deletes, compactions and clusterings commit under the
@@ -46,10 +48,8 @@ object SnapshotSchema {
     * Returns the committed version.
     */
   def evolve(spark: SparkSession, dir: String,
-             addCols: Seq[StructField]): Long = {
-    SnapshotOps.retryConflicts(3) {
-      val (fs, root, v) = Snapshot.current(spark, dir)
-      val p = Snapshot.pinOf(fs, root, v)
+             addCols: Seq[StructField]): Long =
+    Snapshot.transact(spark, dir) { p =>
       val byName = p.schema.fields.map(f => f.name -> f).toMap
       addCols.foreach { f =>
         byName.get(f.name).foreach { existing =>
@@ -60,12 +60,10 @@ object SnapshotSchema {
       }
       val merged = StructType(
         p.schema.fields ++ addCols.filterNot(f => byName.contains(f.name)))
-      // baseFiles = the same set → every shard pointer reuses; the
-      // commit writes ONE root file
-      Snapshot.commit(fs, root, p.files, p.version, merged,
-        Snapshot.tagsOf(fs, root, p.version), baseFiles = Some(p.files))
+      // the same file set → every shard pointer reuses; the commit
+      // writes ONE root file
+      (Some(Snapshot.Write(p.files, schema = Some(merged))), p.version + 1)
     }
-  }
 
   // ---- gate fixture + query ----
 

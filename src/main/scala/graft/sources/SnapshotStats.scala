@@ -28,12 +28,14 @@ import graft.logs.LogView
   *    scan reads ONLY the stat columns (columnar parquet makes this
   *    ~free relative to the data).
   *  - **Maintenance is automatic**: [[statsify]] records the stat
-  *    columns as a `#statscols=` manifest tag; every subsequent
-  *    mutation ([[SnapshotOps.append]]/upsert/delete/compact) sees the
-  *    tag and runs the churn-sized stats job over just ITS new files,
-  *    so zone maps never go stale. Files without stats are always
-  *    KEPT by the planner — absence degrades to a full scan, never to
-  *    a wrong answer.
+  *    columns as a `#statscols=` manifest tag, and the write
+  *    transaction ([[Snapshot.transact]]) every later commit goes
+  *    through reads the tag and runs the churn-sized stats job over
+  *    just the files that commit staged, so zone maps never go stale.
+  *    [[statsify]] and [[bloomify]] are themselves transactions whose
+  *    plan stages nothing new but names every live file for
+  *    collection. Files without stats are always KEPT by the planner —
+  *    absence degrades to a full scan, never to a wrong answer.
   *  - **Skipping is conservative**: a file is pruned only when its
   *    recorded [min, max] provably cannot intersect the predicate
   *    range. All-null columns record no bounds (kept). The skipping
@@ -51,7 +53,7 @@ object SnapshotStats {
 
   /** The manifest tag recording which columns every mutation must
     * maintain zone maps for. Carried forward (and never expired) by
-    * [[SnapshotOps.expireTags]]'s unknown-tag passthrough.
+    * [[Snapshot.expireTags]]'s unknown-tag passthrough.
     */
   private[sources] val StatsColsTag = "#statscols="
 
@@ -262,10 +264,10 @@ object SnapshotStats {
 
   /** Turn zone maps ON for a snapshot table: collect stats for every
     * live file (one full-table job over the stat columns only — the
-    * one-time cost), commit them as version `current + 1` with the
-    * `#statscols=` maintenance tag, vacuum. Subsequent mutations keep
-    * the maps fresh on churn ([[SnapshotOps]] reads the tag). Returns
-    * the committed version.
+    * one-time cost) and commit them as version `current + 1` with the
+    * `#statscols=` maintenance tag. Subsequent commits keep the maps
+    * fresh on churn ([[Snapshot.transact]] reads the tag). Returns the
+    * committed version.
     */
   def statsify(spark: SparkSession, dir: String, cols: Seq[String]): Long = {
     require(cols.nonEmpty, "statsify needs at least one column")
@@ -288,36 +290,27 @@ object SnapshotStats {
       bloomInlineMax = bloomInlineMax)
   }
 
-  /** Shared [[statsify]]/[[bloomify]] core: recollect BOTH metadata
-    * families for every live file (whichever is being turned on plus
-    * whatever the table already maintains — a stats entry replaces
-    * the whole shard line, so partial recollection would silently
-    * drop the other family), commit with both maintenance tags,
-    * vacuum.
+  /** Shared [[statsify]]/[[bloomify]] core: one transaction that
+    * replaces the maintenance tags and names every live file for
+    * collection, so BOTH metadata families are recollected (whichever
+    * is being turned on plus whatever the table already maintains — a
+    * stats entry replaces the whole shard line, so partial
+    * recollection would silently drop the other family).
     */
   private def refreshMeta(spark: SparkSession, dir: String,
                           newStatCols: Option[Seq[String]],
                           newBlooms: Option[Seq[BloomSpec]],
-                          bloomInlineMax: Int = BloomInlineMaxBytes): Long = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    Snapshot.recoverMeta(fs, root)
-    val p = Snapshot.pin(spark, dir)
-    val oldTags = Snapshot.tagsOf(fs, root, p.version)
-    val cols = newStatCols.getOrElse(statsColsOf(oldTags))
-    val blooms = newBlooms.getOrElse(bloomColsOf(oldTags))
-    val stats = collectStats(spark, dir, p.files, p.schema, cols, blooms,
-      bloomInlineMax)
-    val kept = oldTags.filterNot(t =>
-      t.startsWith(StatsColsTag) || t.startsWith(BloomColsTag))
-    val tags = kept ++
-      (if (cols.nonEmpty) Seq(StatsColsTag + cols.mkString(",")) else Nil) ++
-      (if (blooms.nonEmpty) Seq(bloomTagOf(blooms)) else Nil)
-    val v = Snapshot.commit(fs, root, p.files, p.version, p.schema, tags,
-      baseFiles = Some(p.files), stats = stats)
-    Snapshot.vacuum(fs, root)
-    v
-  }
+                          bloomInlineMax: Int = BloomInlineMaxBytes): Long =
+    Snapshot.transact(spark, dir) { p =>
+      val cols = newStatCols.getOrElse(statsColsOf(p.tags))
+      val blooms = newBlooms.getOrElse(bloomColsOf(p.tags))
+      (Some(Snapshot.Write(p.files, staged = p.files,
+        dropTags = t => t.startsWith(StatsColsTag) || t.startsWith(BloomColsTag),
+        addTags =
+          (if (cols.nonEmpty) Seq(StatsColsTag + cols.mkString(",")) else Nil) ++
+            (if (blooms.nonEmpty) Seq(bloomTagOf(blooms)) else Nil),
+        bloomInlineMax = bloomInlineMax)), p.version + 1)
+    }
 
   /** The skipping plan for a closed-range predicate
     * `lo <= colName <= hi` on the CURRENT version: (kept files, total

@@ -38,10 +38,12 @@ import graft.Tables
   *    time-travel-readable until retention, which is also what makes
   *    a post-mortem of rejected data possible).
   *
-  * Both publish and reject verify the expected `#wap=<id>` is what
-  * they are acting on and go through the same conflict-checked
-  * [[Snapshot.commit]] rename, so two racing finalizers cannot both
-  * win.
+  * Stage, publish and reject are each one write transaction
+  * ([[Snapshot.transact]]), and each checks the tags of the version
+  * that transaction pinned: stage that no OTHER stage is pending,
+  * publish and reject that the expected `#wap=<id>` is what they act
+  * on. A lost commit race re-runs the check against the winner's
+  * version, so two racing stages or finalizers cannot both win.
   */
 object SnapshotWap {
 
@@ -59,24 +61,21 @@ object SnapshotWap {
             partCol: String, auditId: String): Long = {
     require(auditId.nonEmpty && !auditId.exists(c => c == '\n' || c == '\r'),
       "audit id must be a non-empty single-line token")
-    // one stage at a time: a second stage on top of an unaudited one
-    // would carry BOTH #wap= tags forward, and publishing either
-    // would expose the other's unaudited files — the exact leak this
-    // module exists to prevent. Finalize (publish/reject) the pending
-    // stage first.
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    Snapshot.currentVersion(fs, root).foreach { cur =>
-      val pending = Snapshot.tagsOf(fs, root, cur)
-        .filter(t => t.startsWith(WapTag) && t != WapTag + auditId)
+    Snapshot.transact(spark, dir, bootstrap = true) { p =>
+      // one stage at a time: a second stage on top of an unaudited one
+      // would carry BOTH #wap= tags forward, and publishing either
+      // would expose the other's unaudited files — the exact leak this
+      // module exists to prevent. Checked against each attempt's pin,
+      // so a stage that lands while this one stages fails it on retry.
+      val pending = p.tags.filter(t => t.startsWith(WapTag) && t != WapTag + auditId)
       require(pending.isEmpty,
         s"$dir already carries an unaudited stage " +
           s"(${pending.map(_.stripPrefix(WapTag)).mkString(", ")}) — " +
           "publish or reject it before staging another")
-    }
-    SnapshotOps.append(spark, dir, batch, partCol,
-      idempotencyKey = Some(s"wap-$auditId"),
-      extraTags = Seq(WapTag + auditId)).version
+      SnapshotOps.appendPlan(spark, dir, batch, partCol,
+        idempotencyKey = Some(s"wap-$auditId"),
+        extraTags = Seq(WapTag + auditId))(p)
+    }.version
   }
 
   /** The newest version with no `#wap=` tag — what consumers read.
@@ -112,52 +111,39 @@ object SnapshotWap {
   def reject(spark: SparkSession, dir: String, auditId: String): Long =
     finalizeWap(spark, dir, auditId, keepStaged = false)
 
+  /** Publish or reject in one transaction; a racing commit re-runs
+    * the checks against the winner's version.
+    */
   private def finalizeWap(spark: SparkSession, dir: String,
-                          auditId: String, keepStaged: Boolean): Long = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // re-pin and re-validate inside the same conflict-retry wrapper
-    // every other mutation uses: a racing commit between our pin and
-    // our rename surfaces as CommitConflict, and the require() checks
-    // re-run against the new current version
-    val v = SnapshotOps.retryConflicts(3) {
-      val cur = Snapshot.currentVersion(fs, root).getOrElse(
-        throw new IllegalStateException(s"$dir has no committed versions"))
-      val tags = Snapshot.tagsOf(fs, root, cur)
+                          auditId: String, keepStaged: Boolean): Long =
+    Snapshot.transact(spark, dir) { p =>
       // exact-tag membership, not collectFirst: with several #wap=
       // tags present the answer must not depend on tag order
-      require(tags.contains(WapTag + auditId),
-        s"current v$cur of $dir is not staged under audit id '$auditId' " +
-          s"(found: ${wapIdOf(tags).getOrElse("none — already published?")})")
-      val (target, newTags) =
+      require(p.tags.contains(WapTag + auditId),
+        s"current v${p.version} of $dir is not staged under audit id " +
+          s"'$auditId' (found: ${wapIdOf(p.tags).getOrElse("none — already published?")})")
+      val write =
         if (keepStaged) {
           // strip ONLY the matching stage tag; any OTHER #wap= tag
           // still on the manifest means a second unaudited stage is
           // stacked here, and committing without it would publish
           // that stage's files too — fail loudly instead (stage()
           // rejects stacking, so this guards legacy/external tables)
-          val kept = tags.filterNot(_ == WapTag + auditId)
-          val stacked = kept.filter(_.startsWith(WapTag))
+          val stacked = p.tags.filter(t => t.startsWith(WapTag) && t != WapTag + auditId)
           require(stacked.isEmpty,
-            s"cannot publish '$auditId': v$cur also carries unaudited " +
+            s"cannot publish '$auditId': v${p.version} also carries unaudited " +
               s"stage(s) ${stacked.map(_.stripPrefix(WapTag)).mkString(", ")} " +
               "— publishing would leak their files; reject or audit them first")
-          (Snapshot.pinOf(fs, root, cur), kept)
+          Snapshot.Write(p.files, dropTags = _ == WapTag + auditId)
         } else {
-          val pub = publishedVersion(spark, dir)
-          // the published tags are COPIED onto a new version — run
-          // them through the same expiry every mutation applies, so
-          // stale idempotency tags cannot be resurrected past their
-          // retention window
-          (Snapshot.pinOf(fs, root, pub),
-            SnapshotOps.expireTags(Snapshot.tagsOf(fs, root, pub), cur + 1))
+          // re-commit the published version: its files, schema, shard
+          // pointers and tags (expired like every commit's, so stale
+          // idempotency tags cannot be resurrected)
+          val pub = Snapshot.pinAt(spark, dir, publishedVersion(spark, dir))
+          Snapshot.Write(pub.files, from = Some(pub))
         }
-      Snapshot.commit(fs, root, target.files, cur, target.schema, newTags,
-        baseFiles = Some(Snapshot.filesOf(fs, root, cur)))
+      (Some(write), p.version + 1)
     }
-    Snapshot.vacuum(fs, root)
-    v
-  }
 
   /** Gate fixture + query: the full WAP lifecycle on the events
     * table — base build published, a BAD wave (rows flagged

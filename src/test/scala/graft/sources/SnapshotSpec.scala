@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 
 import graft.SparkSpec
 
@@ -172,7 +173,7 @@ class SnapshotSpec extends SparkSpec {
     // writer lands v2 dropping the first file entirely — injected via
     // the commit seam so the race is deterministic
     var fired = false
-    SnapshotOps.beforeCommit = () => if (!fired) {
+    Snapshot.beforeCommit = () => if (!fired) {
       fired = true
       val cur = Snapshot.pin(spark, dir)
       Snapshot.commit(fs, root, cur.files.tail, cur.version, cur.schema)
@@ -195,7 +196,29 @@ class SnapshotSpec extends SparkSpec {
         .join(droppedIds, Seq("event_id"), "left_anti")
         .join(doomed, Seq("event_id"), "left_anti"))
       assert(state(Snapshot.read(spark, dir)) == expect)
-    } finally SnapshotOps.beforeCommit = () => ()
+      // metadata commits lose the same race the same way: each re-runs
+      // from the winner's version, lands on top of it, keeps its drop
+      // and carries its own effect
+      def raced(victim: => Long): Snapshot.Pin = {
+        val before = Snapshot.pin(spark, dir)
+        fired = false
+        val v = victim
+        assert(fired, "the commit seam never fired on the victim's path")
+        assert(v == before.version + 2, s"victim landed at v$v")
+        val now = Snapshot.pin(spark, dir)
+        assert(now.version == v)
+        assert(!now.files.contains(before.files.head),
+          "the winner's dropped file came back")
+        now
+      }
+      val statsified = raced(SnapshotStats.statsify(spark, dir, Seq("user_id")))
+      val lines = Snapshot.linesOf(fs, root, statsified.version)
+      assert(lines.nonEmpty && lines.forall(_.contains("\tuser_id:")),
+        "a live file lacks its zone map")
+      val evolved = raced(SnapshotSchema.evolve(spark, dir,
+        Seq(StructField("quality_bp", LongType))))
+      assert(evolved.schema.fieldNames.contains("quality_bp"))
+    } finally Snapshot.beforeCommit = () => ()
   }
 
   test("two-writer staging race: a loser that staged data files can " +
@@ -213,7 +236,7 @@ class SnapshotSpec extends SparkSpec {
     val corrections = events
       .filter(pmod(col("user_id"), lit(89)) === 5)
       .withColumn("event_type", lit("corrected"))
-    SnapshotOps.beforeStage = () => if (!fired) {
+    Snapshot.beforeStage = () => if (!fired) {
       fired = true
       SnapshotOps.upsert(spark, dir, corrections, "event_id", "date")
     }
@@ -259,7 +282,7 @@ class SnapshotSpec extends SparkSpec {
           val rel = p.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
           assert(referenced(rel), s"unreferenced orphan survived vacuum: $rel")
         }
-    } finally SnapshotOps.beforeStage = () => ()
+    } finally Snapshot.beforeStage = () => ()
   }
 
   test("idempotency tags expire after TagKeepVersions commits and the " +
@@ -272,7 +295,7 @@ class SnapshotSpec extends SparkSpec {
       .withColumn("date",
         expr("date(timestamp_micros(ts div 1000))").cast("string"))
       .orderBy("event_id").limit(1).cache()
-    val n = (SnapshotOps.TagKeepVersions + 3).toInt
+    val n = (Snapshot.TagKeepVersions + 3).toInt
     (0 until n).foreach { i =>
       SnapshotOps.append(spark, dir,
         row.withColumn("event_id", col("event_id") + lit(i.toLong * 10000)),
@@ -280,7 +303,7 @@ class SnapshotSpec extends SparkSpec {
     }
     val cur = Snapshot.currentVersion(fs, root).get
     val tags = Snapshot.tagsOf(fs, root, cur)
-    assert(tags.size <= SnapshotOps.TagKeepVersions,
+    assert(tags.size <= Snapshot.TagKeepVersions,
       s"tag section grew unboundedly: ${tags.size} lines after $n appends")
     // a key inside the window replays as a no-op
     val recent = SnapshotOps.append(spark, dir,
@@ -294,6 +317,24 @@ class SnapshotSpec extends SparkSpec {
       "date", Some("batch-0"))
     assert(ancient.newFiles > 0L,
       "expired tag still carried — manifest growth is unbounded")
+    // a restore re-commits an earlier version's tags through the same
+    // expiry: no key older than the window survives in the restored
+    // root, and a replay of such a key re-appends
+    val Appended = "^#appended@(\\d+)=(.*)$".r
+    def keysAt(v: Long): Seq[(Long, String)] =
+      Snapshot.tagsOf(fs, root, v).collect { case Appended(at, k) => (at.toLong, k) }
+    val last = Snapshot.currentVersion(fs, root).get
+    val targetKeys = keysAt(last - 1)
+    val restored = SnapshotOps.restore(spark, dir, last - 1)
+    val window = restored - Snapshot.TagKeepVersions
+    assert(keysAt(restored).forall(_._1 > window),
+      s"restore resurrected expired keys: ${keysAt(restored).filter(_._1 <= window)}")
+    val expired = targetKeys.filter(_._1 <= window)
+    assert(expired.nonEmpty, "the restore target carries no key to expire")
+    val replay = SnapshotOps.append(spark, dir,
+      row.withColumn("event_id", col("event_id") + lit(888888L)),
+      "date", Some(expired.head._2))
+    assert(replay.newFiles > 0L, "a key expired by restore still blocks its replay")
     row.unpersist()
   }
 
@@ -959,6 +1000,25 @@ class SnapshotSpec extends SparkSpec {
     // published read never saw any staged state
     SnapshotWap.reject(spark, dir, "sA")
     assert(SnapshotWap.readPublished(spark, dir).count() == events.count())
+    // race: s1 lands after s2 pinned, before s2 staged — s2's commit
+    // loses, its re-run sees s1 pending and fails instead of carrying
+    // both #wap= tags
+    var fired = false
+    Snapshot.beforeStage = () => if (!fired) {
+      fired = true
+      SnapshotWap.stage(spark, dir, w1
+        .withColumn("event_id", col("event_id") + lit(2000L)), "date", "s1")
+    }
+    try {
+      intercept[IllegalArgumentException] {
+        SnapshotWap.stage(spark, dir, w1
+          .withColumn("event_id", col("event_id") + lit(3000L)), "date", "s2")
+      }
+      assert(fired)
+    } finally Snapshot.beforeStage = () => ()
+    val now = Snapshot.currentVersion(fs, root).get
+    assert(Snapshot.tagsOf(fs, root, now).filter(_.startsWith("#wap=")) ==
+      Seq("#wap=s1"))
   }
 
   test("metadata-only aggregates come from the manifest alone: exact " +
